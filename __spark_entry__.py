@@ -517,21 +517,20 @@ def _oracle_table_snapshots() -> str:
 def q_ops_triage(spark: SparkSession, sf: str) -> DataFrame:
     """Composed flagship #6 — the OPERATIONAL loop behind the
     reference's fixed dispatch list (Parser.hs:66-78): full
-    first-match-wins parse of the mixed corpus -> failure stream
-    (route() persist barrier — NEVER a bare filter on normalise(),
-    see pipeline.route) -> Drain-style template mining over the raw
-    failure bytes. The two templates this corpus yields ARE its two
-    failure constructions (junk noise + bare-number torque job id),
-    so a hash-green row proves parse routing and masking agree end to
-    end. Scale: the parse is the pipeline's scan stage, the failure
-    filter rides its persist barrier, and mine_templates' shuffle
-    carries only (template, partial count) pairs."""
+    first-match-wins parse of the mixed corpus -> failure stream (a
+    plain filter on parse_ok, which is nondeterministic so the
+    optimizer cannot push it into the parse) -> Drain-style template
+    mining over the raw failure bytes. The two templates this corpus
+    yields ARE its two failure constructions (junk noise + bare-number
+    torque job id), so a hash-green row proves parse routing and
+    masking agree end to end. Scale: the parse is the pipeline's scan
+    stage and mine_templates' shuffle carries only (template, partial
+    count) pairs."""
     from hnormalise_spark.ops import logmine as LM
-    from hnormalise_spark.pipeline import normalise, route
+    from hnormalise_spark.pipeline import normalise
 
     parsed = normalise(_route_corpus(spark, sf))
-    _ok, fail = route(parsed)
-    return LM.mine_templates(fail, "raw")
+    return LM.mine_templates(parsed.filter(~F.col("parse_ok")), "raw")
 
 
 def _oracle_ops_triage() -> str:

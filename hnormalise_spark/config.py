@@ -22,7 +22,6 @@ class InputConfig:
     # canonical tokenized table (BASELINE.json input_hint) or raw lines
     path: str | None = None
     format: str = "parquet"           # parquet | text | json (rsyslog %jsonmesg%)
-    tokenized: bool = True            # (doc_id,tokens,n_tok,source) vs raw lines
 
 
 @dataclass
@@ -39,9 +38,6 @@ class RunConfig:
     streaming: bool = False
     repartition: int = 0
     enrich: bool = False
-    # counter print frequency (Config.hs:80, default 100000) — kept for
-    # parity; batch mode reports once per run via observed metrics
-    frequency: int = 100000
 
 
 @dataclass

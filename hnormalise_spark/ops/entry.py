@@ -5850,10 +5850,10 @@ def _oracle_knn_classify() -> str:
              floor(
                list_sum(list_transform(range(1, {EMB_DIM + 1}),
                         i -> t.v[i]::DOUBLE * r.v[i]::DOUBLE))
-               / (sqrt(list_sum(list_transform(t.v,
-                                x -> x::DOUBLE * x::DOUBLE)))
-                  * sqrt(list_sum(list_transform(r.v,
-                                  x -> x::DOUBLE * x::DOUBLE))))
+               / NULLIF(sqrt(list_sum(list_transform(t.v,
+                                       x -> x::DOUBLE * x::DOUBLE)))
+                        * sqrt(list_sum(list_transform(r.v,
+                                         x -> x::DOUBLE * x::DOUBLE))), 0)
                * 1000000.0 + 0.5)::BIGINT AS cos_x1e6
       FROM t CROSS JOIN r),
     topk AS (

@@ -133,9 +133,3 @@ def result() -> tuple[Column, Column, Column]:
     )
     return payload, parser, ok
 
-
-INTERMEDIATE_COLS = [
-    "_lm_al", "_lm_ac",
-    "_lm_is_load", "_lm_is_cmd", "_lm_username", "_lm_cluster", "_lm_jobid_raw",
-    "_lm_userload", "_lm_mod_name", "_lm_mod_version", "_lm_fn", "_lm_cmd", "_lm_args",
-]

@@ -136,9 +136,3 @@ def result() -> tuple[Column, Column, Column]:
     parser = F.when(ok, F.concat(F.lit("shorewall_"), F.lower(proto)))
     return payload, parser, ok
 
-
-INTERMEDIATE_COLS = [
-    "_sw_at", "_sw_au", "_sw_ai",
-    "_sw_is_tcp", "_sw_is_udp", "_sw_is_icmp", "_sw_rule", "_sw_target",
-    "_sw_in", "_sw_out", "_sw_mac", "_sw_src", "_sw_dst", "_sw_spt", "_sw_dpt",
-]

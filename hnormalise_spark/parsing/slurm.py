@@ -260,8 +260,3 @@ def result() -> tuple[Column, Column, Column]:
     payload = F.when(ok, payload).otherwise(F.lit(None).cast(SLURM_PAYLOAD))
     return payload, F.when(ok, F.lit("slurm_accounting")), ok
 
-
-INTERMEDIATE_COLS = [
-    "_su_kv", "_su_user_a", "_su_group_a", "_su_nodes", "_su_start",
-    "_su_end", "_su_ok",
-]

@@ -55,5 +55,3 @@ def result() -> tuple[Column, Column, Column]:
     payload = F.when(ok, payload).otherwise(F.lit(None).cast(SNOOPY_PAYLOAD))
     return payload, F.when(ok, F.lit("snoopy")), ok
 
-
-INTERMEDIATE_COLS = ["_sn_a", "_sn_ok"]

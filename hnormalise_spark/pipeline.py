@@ -17,8 +17,9 @@ README's suggested tag-based pre-routing (README.md:62-66) built in.
 
 Physical-plan shape: the parse is a chain of Projects over materialized
 intermediate columns (each family's `layers()`), so shared subtrees
-(KV maps, regex match flags) evaluate once per row and the stage stays
-within whole-stage codegen. No shuffle anywhere in the parse; the only
+(KV maps, regex match flags) evaluate once per row. Whole-stage codegen
+is off (session.py), so each Project compiles to its own small,
+JIT-able projection. No shuffle anywhere in the parse; the only
 shuffle in the whole pipeline is the (tiny) counts aggregate.
 Everything is JVM expressions; no Python runs per row.
 """
@@ -45,39 +46,6 @@ FAMILIES = [
     # prefix mutually exclusive with all of the above.
     ("slurm", slurm, slurm.PREFIX, "slurmctld"),
 ]
-
-_ALL_INTERMEDIATES = (
-    ["_line", "_env_ok", "_env_a", "_family"]
-    + torque.INTERMEDIATE_COLS
-    + lmod.INTERMEDIATE_COLS
-    + shorewall.INTERMEDIATE_COLS
-    + snoopy.INTERMEDIATE_COLS
-    + slurm.INTERMEDIATE_COLS
-)
-
-# A no-op narrow dependency: CoalesceExec does not implement
-# CodegenSupport, so it ends the current whole-stage-codegen region
-# without shuffling or changing partitioning (coalesce never *raises*
-# the partition count, so 2^30 keeps it unchanged). Without these
-# boundaries the ~25 fused parse Projects generate ONE processNext()
-# whose locals-passing style Janino cannot split into sub-methods; the
-# method blows the JVM's 64 KB bytecode limit ("Code grows beyond
-# 64 KB") and Spark silently drops the ENTIRE stage to interpreted
-# execution. Splitting into per-family regions keeps every region
-# compiled; a boundary costs one UnsafeRow materialization per row —
-# the interpreted fallback paid that at every Project boundary.
-_CODEGEN_BARRIER_PARTS = 1 << 30
-
-
-def codegen_barrier(df: DataFrame) -> DataFrame:
-    # Streaming plans re-plan per micro-batch and the huge-coalesce
-    # no-op stalls the incremental planner; the production default runs
-    # whole-stage codegen off (session.py), so streaming needs no
-    # region splitting anyway.
-    if df.isStreaming:
-        return df
-    return df.coalesce(_CODEGEN_BARRIER_PARTS)
-
 
 def _family_col(msg: Column) -> Column:
     out = None
@@ -232,21 +200,13 @@ def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
 
 def _payload_stage(df: DataFrame) -> DataFrame:
     # --- per-family layered parse -------------------------------------
-    # one codegen region per family (see codegen_barrier)
     msg = F.col("msg")
+    intermediates = ["_line", "_env_ok", "_env_a", "_family", "_parser_raw", "_appname_raw"]
     for fam_name, mod, _, _ in FAMILIES:
         gate = F.col("_family") == fam_name
-        # LAYER_BARRIERS: after-layer indices at which to end the
-        # current codegen region (0 = before the family's first layer).
-        # Only torque needs them — the other families' regions are
-        # 5-15 KB of bytecode and fuse together comfortably.
-        barriers = getattr(mod, "LAYER_BARRIERS", ())
-        if 0 in barriers:
-            df = codegen_barrier(df)
-        for idx, layer in enumerate(mod.layers(gate, msg), 1):
+        for layer in mod.layers(gate, msg):
             df = df.withColumns(layer)
-            if idx in barriers:
-                df = codegen_barrier(df)
+            intermediates += layer
 
     payload_cols: dict[str, Column] = {}
     parser_col: Column = F.lit(None).cast("string")
@@ -292,7 +252,7 @@ def _payload_stage(df: DataFrame) -> DataFrame:
             "parser": F.when(F.col("parse_ok"), F.col("_parser_raw")),
         }
     )
-    return df.drop(*_ALL_INTERMEDIATES, "_parser_raw", "_appname_raw")
+    return df.drop(*intermediates)
 
 
 def normalise_tokens(
@@ -300,8 +260,8 @@ def normalise_tokens(
 ) -> DataFrame:
     """Normalise a pre-tokenized input table (BASELINE.json input_hint).
 
-    Detokenization is a JVM expression (codepoint → char), so the whole
-    parse stays in one codegen stage. By default the token array is
+    Detokenization is a JVM expression (codepoint → char), so no Python
+    runs anywhere in the parse. By default the token array is
     DROPPED after detokenization — carrying it through the parse plan
     costs ~40% of throughput — and the failure sink reconstructs it
     bit-exactly from ``raw`` (tokenizer.retokenize_col; the codec is an
@@ -313,52 +273,6 @@ def normalise_tokens(
     if not carry_tokens:
         out = out.drop(tokens_col)
     return normalise(out, "raw")
-
-
-# ---------------------------------------------------------------------------
-# Routing (the success/failure fan-out, Util.hs:74-90)
-#
-# CAUTION: filtering the parsed frame directly makes Spark's
-# PushPredicateThroughNonJoin (run unconditionally in the
-# "Extract Python UDFs" optimizer batch — it ignores
-# spark.sql.optimizer.excludedRules) substitute the parse expression
-# DAG into the predicate, unfolding it exponentially (~10^6 nodes; the
-# codegen string alone OOMs). route() therefore persists the parsed
-# frame first — an InMemoryRelation is a pushdown barrier, and the two
-# routed filters share the one cached parse, which is what the fan-out
-# wants anyway. sinks.run_batch achieves the same via the staging
-# parquet write.
-
-
-def route(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(success, failure) sharing ONE cached parse pass. Call
-    ``success.unpersist()`` when done (either handle works).
-
-    TEST/INTERACTIVE SCALE ONLY: persist() holds the full parsed frame
-    in executor memory/disk. The production fan-out is
-    ``sinks.run_batch`` — its staging parquet write is the shared
-    barrier, sized for inputs that dwarf cluster memory, and its sinks
-    are partition-pruned reads rather than cached filters."""
-    from pyspark import StorageLevel
-
-    cached = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    return cached.filter(F.col("parse_ok")), cached.filter(~F.col("parse_ok"))
-
-
-def route_success(parsed: DataFrame) -> DataFrame:
-    """Prefer route()/run_batch: a direct filter on an un-persisted
-    parsed frame triggers the pushdown blowup described above."""
-    return parsed.filter(F.col("parse_ok"))
-
-
-def route_failure(parsed: DataFrame, original_cols: list[str] | None = None) -> DataFrame:
-    """Failure sink carries the *original* bytes/tokens untouched
-    (Normalised = Original, HNormalise.hs:69-73). Same caveat as
-    route_success — prefer route()/run_batch."""
-    failed = parsed.filter(~F.col("parse_ok"))
-    if original_cols:
-        failed = failed.select(*original_cols)
-    return failed
 
 
 def salted_repartition(

@@ -25,10 +25,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input", help="input parquet dir (doc_id,tokens,n_tok,source)")
     ap.add_argument(
         "--input-format",
-        choices=["parquet", "text"],
-        default="parquet",
+        choices=["parquet", "text", "json"],
+        default=None,
         help="parquet = tokenized sequences (default); text = raw syslog "
-        "files, one line per row (the reference's native input)",
+        "files, one line per row (the reference's native input); json = "
+        "rsyslog %%jsonmesg%% lines (batch only)",
     )
     ap.add_argument("--output", help="output dir for sinks")
     ap.add_argument("--streaming", action=argparse.BooleanOptionalAction, default=None)
@@ -42,7 +43,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from hnormalise_spark import get_spark
     from hnormalise_spark.config import load_config
-    from hnormalise_spark.pipeline import normalise, normalise_tokens, salted_repartition
+    from hnormalise_spark.pipeline import normalise, normalise_json, normalise_tokens, salted_repartition
     from hnormalise_spark import sinks, datagen, enrich, streaming
 
     # CLI flags override the merged config chain (user ⊕ system ⊕
@@ -50,13 +51,17 @@ def main(argv: list[str] | None = None) -> int:
     # values (--repartition 0, --no-streaming, --no-enrich) still win.
     cfg = load_config(args.config, args.system_config)
     args.input = args.input if args.input is not None else cfg.input.path
+    args.input_format = args.input_format or cfg.input.format
     args.output = args.output if args.output is not None else cfg.sink.out_dir
     args.streaming = args.streaming if args.streaming is not None else cfg.run.streaming
     args.repartition = args.repartition if args.repartition is not None else cfg.run.repartition
     args.salt = args.salt if args.salt is not None else 16
     args.enrich = args.enrich if args.enrich is not None else cfg.run.enrich
+    json_line = cfg.sink.json_line and not args.no_json
     if not args.output:
         ap.error("--output (or sink.out_dir in config) required")
+    if args.streaming and args.input_format == "json":
+        ap.error("json input is batch only")
 
     spark = get_spark(master=args.master, app_name="hnormalise-run")
     t0 = time.time()
@@ -78,19 +83,21 @@ def main(argv: list[str] | None = None) -> int:
         print(f"streaming drained in {time.time()-t0:.1f}s")
         return 0
 
-    if args.input_format == "text":
-        df = streaming.read_raw_text(spark, args.input)
-    else:
+    if args.input_format == "parquet":
         df = spark.read.parquet(args.input)
+    else:
+        df = streaming.read_raw_text(spark, args.input)
     if args.repartition:
         df = salted_repartition(df, args.repartition, keys=("source",), salt=args.salt)
-    parsed = sinks.with_lineage(
-        normalise(df) if args.input_format == "text" else normalise_tokens(df)
-    )
+    parse = {"parquet": normalise_tokens, "text": normalise, "json": normalise_json}
+    parsed = sinks.with_lineage(parse[args.input_format](df))
     if args.enrich:
         hm, cm, um = enrich.synth_lookup_tables(spark)
         parsed = enrich.enrich(parsed, hm, cm, um)
-    paths = sinks.run_batch(spark, parsed, args.output, json_line=not args.no_json)
+    paths = sinks.run_batch(
+        spark, parsed, args.output, json_line=json_line,
+        export_sinks=cfg.sink.export_sinks,
+    )
     n = spark.read.parquet(paths["counts"]).agg({"n": "sum"}).collect()[0][0]
     dt = time.time() - t0
     print(f"normalised {n} lines in {dt:.1f}s ({n/dt:.0f} lines/s) -> {args.output}")

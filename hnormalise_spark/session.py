@@ -68,32 +68,9 @@ def get_spark(
             if shuffle_partitions is not None
             else os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
         ),
-        # Whole-stage codegen LOSES on this workload, measured three
-        # ways on the 2M-line bench (local[32]):
-        #   * fused regions:       34-40k lines/s (and >64 KB regions
-        #     silently fall back to interpreted — BENCH_r01's Janino
-        #     stack trace)
-        #   * fused + JIT uncapped (-XX:-DontCompileHugeMethods): 22k
-        #     (C2 chokes on the huge methods)
-        #   * per-operator UnsafeProjection (this setting): 48k
-        # The parse is ~25 stacked wide Projects; fusing them yields
-        # one locals-passing processNext() Janino cannot split, and
-        # HotSpot refuses to JIT any method over 8 KB of bytecode, so
-        # fused regions run in the *bytecode interpreter*. Per-operator
-        # projection code splits into many <1 KB methods that all JIT.
-        # Query-leg timings are equal-or-better across the board too
-        # (torque_exit 29s vs 41s, walltime_memory 7s vs 17s at sf0.1).
-        # (override with SPARK_GRAFT_WHOLESTAGE=true to A/B the fused
-        # mode — the scaling proxy records both; see BASELINE.md)
-        "spark.sql.codegen.wholeStage": os.environ.get(
-            "SPARK_GRAFT_WHOLESTAGE", "false"
-        ),
-        # If a deployment re-enables whole-stage codegen, the pipeline's
-        # codegen_barrier region splits keep every fused region under
-        # Janino's 64 KB method cap, and this lets the wide payload
-        # structs (~60 nested fields) stay inside codegen instead of
-        # being silently demoted (maxFields counts fields recursively).
-        "spark.sql.codegen.maxFields": "500",
+        # Whole-stage codegen loses here: the ~25 stacked parse Projects
+        # fuse into methods too big for Janino (64 KB) and the JIT (8 KB).
+        "spark.sql.codegen.wholeStage": "false",
         # Arrow for the pandas-UDF stages (tokenizer, golden encoder).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",

@@ -26,12 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hnormalise_spark import jsonout
-from hnormalise_spark.pipeline import counts as _counts
+from hnormalise_spark.pipeline import FAMILIES, counts as _counts
 
 SUCCESS_COLS = [
     "doc_id", "source", "pri", "version", "timereported", "timereported_raw",
     "hostname", "syslogtag", "msg", "appname", "parser", "jsonkey",
-    "torque", "lmod", "shorewall", "snoopy",
+    *(fam for fam, *_ in FAMILIES),
 ]
 
 

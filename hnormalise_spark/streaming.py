@@ -4,10 +4,10 @@ The reference is a daemon: an endless ZeroMQ/TCP byte stream with
 graceful shutdown and running counters
 (/root/reference/src/HNormalise/Communication/ZeroMQ.hs:69-111). The
 Spark-native equivalent is readStream → the SAME normalise() transform
-→ foreachBatch doing the two routed writes + counts per micro-batch,
-with exactly-once resume via checkpointLocation (north_rule:
-checkpoint/resume) and windowed watermarked counts for the
-time-bucketed variant.
+→ foreachBatch running the batch fan-out (sinks.write_staging +
+sinks.write_counts) per micro-batch, with exactly-once resume via
+checkpointLocation (north_rule: checkpoint/resume) and windowed
+watermarked counts for the time-bucketed variant.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from hnormalise_spark.pipeline import normalise_tokens
 from hnormalise_spark.schemas import INPUT_SCHEMA
-from hnormalise_spark.sinks import SUCCESS_COLS, with_observed_metrics
+from hnormalise_spark import sinks
 
 
 def read_token_stream(spark: SparkSession, in_dir: str, max_files: int = 16) -> DataFrame:
@@ -154,12 +154,18 @@ def start_pipeline(
 ) -> StreamingQuery:
     """stream → parse → success/failure/counts per micro-batch.
 
-    foreachBatch writes all three sinks from one cached micro-batch
-    (the reference's two-socket fan-out, Util.hs:74-90). Counts append
-    per batch; total counts = SUM over batch counts — matching the
-    reference's *running* counter semantics. Restart-safe via the
-    checkpoint: a re-delivered batch overwrites its own epoch partition
-    (idempotent by batch_id), never double-counts.
+    foreachBatch runs the batch fan-out on each micro-batch (the
+    reference's two-socket fan-out, Util.hs:74-90), so both modes write
+    the same sink schemas:
+
+        <out_dir>/staging/batch_id=<id>/route=success|failure
+        <out_dir>/counts/batch_id=<id>
+
+    Success rows carry the typed payloads, the JSON line and the lineage
+    columns; failure rows carry the original input (sinks.write_staging).
+    Total counts = SUM over batch counts — the reference's *running*
+    counter semantics. Restart-safe via the checkpoint: a re-delivered
+    batch overwrites its own batch_id partitions, never double-counts.
 
     ``input_format``: 'parquet' tails tokenized-sequence files;
     'text' tails raw syslog files (read_raw_text_stream);
@@ -170,51 +176,25 @@ def start_pipeline(
     from hnormalise_spark.pipeline import normalise
 
     if input_format == "text":
-        parsed = with_observed_metrics(normalise(read_raw_text_stream(spark, in_dir)))
+        parsed = sinks.with_observed_metrics(normalise(read_raw_text_stream(spark, in_dir)))
     elif input_format == "raw_parquet":
         raw = (
             spark.readStream.schema("doc_id string, source string, raw string")
             .option("maxFilesPerTrigger", 16)
             .parquet(in_dir)
         )
-        parsed = with_observed_metrics(normalise(raw))
+        parsed = sinks.with_observed_metrics(normalise(raw))
     else:
-        parsed = with_observed_metrics(normalise_tokens(read_token_stream(spark, in_dir)))
-
-    success_path = os.path.join(out_dir, "success")
-    failure_path = os.path.join(out_dir, "failure")
-    counts_path = os.path.join(out_dir, "counts")
+        parsed = sinks.with_observed_metrics(normalise_tokens(read_token_stream(spark, in_dir)))
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            ok_cols = [c for c in SUCCESS_COLS if c in batch.columns]
-            (
-                batch.filter(F.col("parse_ok"))
-                .select(*ok_cols)
-                .write.mode("overwrite")
-                .parquet(os.path.join(success_path, f"batch_id={batch_id}"))
-            )
-            failed = batch.filter(~F.col("parse_ok"))
-            if "tokens" not in batch.columns and "raw" in batch.columns:
-                from hnormalise_spark.tokenizer import retokenize_col
-
-                failed = failed.withColumn("tokens", retokenize_col("raw"))
-            orig = [c for c in ("doc_id", "source", "tokens", "n_tok", "raw") if c in failed.columns]
-            (
-                failed.select(*orig)
-                .write.mode("overwrite")
-                .parquet(os.path.join(failure_path, f"batch_id={batch_id}"))
-            )
-            (
-                batch.groupBy("source", "parser", "parse_ok")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .parquet(os.path.join(counts_path, f"batch_id={batch_id}"))
-            )
-        finally:
-            batch.unpersist()
+        part = f"batch_id={batch_id}"
+        staging = os.path.join(out_dir, "staging", part)
+        sinks.write_staging(batch, staging, json_line=True)
+        sinks.write_counts(
+            batch.sparkSession.read.parquet(staging),
+            os.path.join(out_dir, "counts", part),
+        )
 
     writer = (
         parsed.writeStream.foreachBatch(_sink)

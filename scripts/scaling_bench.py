@@ -20,7 +20,6 @@ number can never silently masquerade as a scaling limit.
 Usage:
     python scripts/scaling_bench.py single 2 8 32      # local[N] legs
     python scripts/scaling_bench.py multi 4x2 4x8      # P x local[N]
-    SPARK_GRAFT_WHOLESTAGE=true python scripts/scaling_bench.py multi 4x8
 
 Prints one JSON line per leg plus a summary with pairwise
 efficiencies.
@@ -136,7 +135,6 @@ def leg(kind: str, spec: str, corpus: str, retries: int = 2) -> dict:
             "max_child_wall_sec": round(max_wall, 1),
             "group_wall_sec": round(group_wall, 1),
             "lines_per_sec": round(lps, 0), "steal_pct": sp,
-            "wholestage": os.environ.get("SPARK_GRAFT_WHOLESTAGE", "false"),
             "pinned": pin and kind != "single",
         }
         if best is None or sp < best["steal_pct"]:

@@ -18,7 +18,6 @@ def test_merge_leftmost_wins():
     assert cfg.input.format == "text"        # system beats default
     assert cfg.run.repartition == 8
     assert cfg.sink.json_line is False
-    assert cfg.run.frequency == 100000       # default (Config.hs:80)
 
 
 def test_fields_projection_config():

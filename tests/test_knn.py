@@ -60,3 +60,21 @@ def test_zero_norm_test_vector_keeps_its_row(spark):
     assert 100 in out  # the undefined-cosine row is NOT dropped
     assert out[100].pred_label is None
     assert out[100].correct == 0
+
+
+def test_oracle_zero_norm_row_yields_null_prediction():
+    # DuckDB only: the oracle's cosine divides by NULLIF(norm product, 0),
+    # so a zero vector has no defined neighbour, as in Spark.
+    import duckdb
+
+    from hnormalise_spark.ops.entry import EMB_DIM, _oracle_knn_classify
+
+    rows = [(i, v * (EMB_DIM // 8), lbl) for i, v, lbl in _clustered(20)]
+    rows += [(100, [0.0] * EMB_DIM, 7), (101, [0.0] * EMB_DIM, 7)]  # test, train
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[], label BIGINT)")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+    out = {r[0]: r[1:] for r in con.sql(_oracle_knn_classify()).fetchall()}
+    assert out[100] == (7, None, 0)
+    assert {i for i in out if i != 100} == {i for i in range(20) if i % 5 == 0}
+    assert all(out[i][1] == out[i][0] for i in out if i != 100)

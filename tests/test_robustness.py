@@ -114,35 +114,6 @@ def test_json_mode_requires_maybe_keys_present(spark):
     assert rows[2]["pri"] is None
 
 
-def test_flagship_plan_compiles_under_wholestage(spark, tmp_path):
-    # The production default runs with whole-stage codegen OFF (see
-    # session.py). This pins the fallback-free guarantee for the ON
-    # path: with codegen.fallback=false a >64 KB generated method
-    # raises instead of silently dropping to interpreted execution, so
-    # this test fails if the codegen_barrier region splits ever stop
-    # covering the parse+encode+route plan (BENCH_r01's Janino trace).
-    from hnormalise_spark import sinks
-    from hnormalise_spark.fixtures import CORPUS
-
-    conf = spark.conf
-    old = {k: conf.get(k) for k in
-           ("spark.sql.codegen.wholeStage", "spark.sql.codegen.fallback")}
-    try:
-        conf.set("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.fallback", "false")
-        df = spark.createDataFrame(
-            [(i, s, l) for (i, s, _, l) in CORPUS],
-            "doc_id string, source string, raw string",
-        )
-        parsed = P.normalise(df)
-        paths = sinks.run_batch(spark, parsed, str(tmp_path / "out"), json_line=True)
-        n = spark.read.parquet(paths["staging"]).count()
-        assert n == len(CORPUS)
-    finally:
-        for k, v in old.items():
-            conf.set(k, v)
-
-
 def test_salted_repartition_spreads_skewed_key(spark):
     # 10k rows, 95% one hot source: plain repartition(8, source) puts
     # the hot key in ONE partition; the salted form must spread it.

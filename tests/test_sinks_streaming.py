@@ -8,6 +8,8 @@ enrichment joins are broadcast (no shuffle of the fact side).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,13 +69,18 @@ def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
     assert success.filter(F.col("parser").isNull()).count() == 0
 
 
-def test_streaming_matches_batch(spark, corpus_dir, tmp_path):
-    out = str(tmp_path / "stream_out")
+@pytest.fixture(scope="module")
+def stream_out(spark, corpus_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("stream_out"))
     q = streaming.start_pipeline(spark, corpus_dir, out, available_now=True)
     q.awaitTermination(300)
+    return out
 
-    success = spark.read.option("basePath", out + "/success").parquet(out + "/success")
-    failure = spark.read.option("basePath", out + "/failure").parquet(out + "/failure")
+
+def test_streaming_matches_batch(spark, corpus_dir, stream_out):
+    out = stream_out
+    success = spark.read.parquet(out + "/staging/batch_id=*/route=success")
+    failure = spark.read.parquet(out + "/staging/batch_id=*/route=failure")
     counts = spark.read.option("basePath", out + "/counts").parquet(out + "/counts")
 
     df = spark.read.parquet(corpus_dir)
@@ -97,15 +104,32 @@ def test_streaming_matches_batch(spark, corpus_dir, tmp_path):
     assert summed == direct
 
 
+def test_streaming_sink_schemas_match_batch(spark, corpus_dir, stream_out, tmp_path):
+    """A micro-batch writes the batch fan-out's exact sink schemas."""
+    paths = sinks.run_batch(
+        spark, P.normalise_tokens(spark.read.parquet(corpus_dir)), str(tmp_path / "out")
+    )
+    assert sorted(os.listdir(os.path.join(stream_out, "staging"))) == ["batch_id=0"]
+    micro = {
+        "success": os.path.join(stream_out, "staging", "batch_id=0", "route=success"),
+        "failure": os.path.join(stream_out, "staging", "batch_id=0", "route=failure"),
+        "counts": os.path.join(stream_out, "counts", "batch_id=0"),
+    }
+    for sink, path in micro.items():
+        assert spark.read.parquet(path).schema == spark.read.parquet(paths[sink]).schema, sink
+    assert "json" in spark.read.parquet(micro["success"]).columns
+
+
 def test_streaming_resume_idempotent(spark, corpus_dir, tmp_path):
     """Restarting a drained query must not duplicate sink rows."""
     out = str(tmp_path / "resume_out")
+    success = out + "/staging/batch_id=*/route=success"
     q = streaming.start_pipeline(spark, corpus_dir, out, available_now=True)
     q.awaitTermination(300)
-    n1 = spark.read.parquet(out + "/success").count()
+    n1 = spark.read.parquet(success).count()
     q2 = streaming.start_pipeline(spark, corpus_dir, out, available_now=True)
     q2.awaitTermination(300)
-    n2 = spark.read.parquet(out + "/success").count()
+    n2 = spark.read.parquet(success).count()
     assert n1 == n2
 
 

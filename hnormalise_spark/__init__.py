@@ -5,8 +5,8 @@ A from-scratch reimagining of the capabilities of hpcugent/hnormalise
 Shorewall, Snoopy) into typed structs, route parse-success vs
 parse-failure rows to separate sinks, and keep per-(source, parser,
 success/failure) aggregate counts — expressed as a declarative Spark
-DataFrame plan (whole-stage-codegen JVM expressions, no per-row Python
-in the hot path) over tables of pre-tokenized log sequences.
+DataFrame plan (JVM expressions, no per-row Python in the hot path)
+over tables of pre-tokenized log sequences.
 """
 
 __version__ = "0.1.0"

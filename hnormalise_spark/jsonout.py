@@ -8,9 +8,15 @@ record shapes, Torque/Json.hs:60-62), and per-type null policies
 (generic encoders keep nulls, the hand-written Shorewall encoder omits
 absent fields, Shorewall/Json.hs:56-77). So the encoder is a small
 combinator set over JVM string expressions: each leaf is JSON-escaped
-via ``to_json(array(x))`` (string escaping only — everything stays in
-whole-stage codegen), and objects/arrays are concat-assembled with the
-exact field order of the Haskell records.
+via ``to_json(array(x))`` (string escaping only, no Python), and
+objects/arrays are concat-assembled with the exact field order of the
+Haskell records.
+
+Whole-stage codegen is off (session.py), so every task generates the
+Java source of the JSON projection from this expression tree; the
+encoders are written to keep that tree small — each leaf renders once,
+and members shared by several record shapes render once, outside the
+CASE that picks the shape.
 
 Known deviation: the reference emits fwdpt under a *duplicate* "fwdst"
 key (Shorewall/Json.hs:76 — a bug); we emit "fwdpt" (SURVEY §7).
@@ -26,9 +32,12 @@ def NULL() -> Column:  # lit() needs an active session; defer
 
 
 def jstr(c: Column) -> Column:
-    """String → JSON string literal (escaped), null → 'null'."""
-    arr = F.to_json(F.array(c))
-    return arr.substr(F.lit(2), F.length(arr) - 2)
+    """String → JSON string literal (escaped), null → 'null'.
+
+    ``to_json(array(c))`` is ``["…"]`` or ``[null]``: drop the ``[``,
+    then rtrim the ``]`` — the character before it is always ``"`` or
+    ``l``, so exactly one is removed, and the array renders once."""
+    return F.rtrim(F.substring(F.to_json(F.array(c)), 2, 1 << 30), F.lit("]"))
 
 
 def jnum(c: Column) -> Column:
@@ -68,12 +77,14 @@ def jobjd(*pairs: tuple[str, Column]) -> Column:
     is ALWAYS emitted (absent values render as the literal 'null', the
     rendered columns are never SQL-null). Byte-identical to ``jobj``
     on such members, but one flat concat instead of ~2N expressions."""
-    args: list = []
-    for i, (k, v) in enumerate(pairs):
-        args.append(("{" if i == 0 else ",") + f'"{k}":')
-        args.append(v)
-    args.append("}")
-    return _fold_concat(args)
+    args = _member_args(*pairs)
+    args[0] = "{" + args[0][1:]
+    return _fold_concat([*args, "}"])
+
+
+def _member_args(*pairs: tuple[str, Column]) -> list:
+    """``,"k":``, v, … — always-present members as flat-concat args."""
+    return [a for k, v in pairs for a in (f',"{k}":', v)]
 
 
 def opt(v: Column, rendered: Column) -> Column:
@@ -205,60 +216,57 @@ def _resource_usage(ru: Column) -> Column:
 def torque_json(t: Column) -> Column:
     """TorqueParseResult encoder (Torque/Json.hs; field order = record
     order in Torque/Internal.hs, asserted by the e2e golden at
-    test/HNormalise/ParserSpec.hs:78)."""
+    test/HNormalise/ParserSpec.hs:78).
+
+    The six entry types share their head and tail, so those render once:
+    only the members between ``name`` and ``torqueEntryType`` depend on
+    the entry type, and the Start/Exit accounting block is one block
+    whose Exit-only members render as '' on Start rows."""
     et = t["entry_type"]
-    common = [("torqueDatestamp", jstr(t["datestamp"])), ("name", _job_name(t["name"]))]
-    q = jobjd(*common, ("queue", jstr(t["queue"])), ("torqueEntryType", F.lit('"TorqueQueueEntry"')))
-    d = jobjd(
-        *common,
-        ("requestor", guard(t["requestor"], jobjd(
-            ("user", jstr(t["requestor"]["user"])),
-            ("whence", jstr(t["requestor"]["whence"])),
-        ))),
-        ("torqueEntryType", F.lit('"TorqueDeleteEntry"')),
+
+    def exit_only(*pairs: tuple[str, Column]) -> Column:
+        return F.when(et == "TorqueExitEntry", _fold_concat(_member_args(*pairs))).otherwise("")
+
+    accounting = _fold_concat([
+        *_member_args(
+            ("user", jstr(t["user"])),
+            ("group", jstr(t["group"])),
+            ("account", jstr(t["account"])),
+            ("jobname", jstr(t["jobname"])),
+            ("queue", jstr(t["queue"])),
+        ),
+        exit_only(("startCount", jnum(t["start_count"]))),
+        *_member_args(("owner", jstr(t["owner"]))),
+        exit_only(("session", jnum(t["session"]))),
+        *_member_args(
+            ("times", _times(t["times"])),
+            ("execHost", _exec_host(t["exec_host"])),
+            ("resourceRequest", _resource_request(t["resource_request"])),
+        ),
+        exit_only(
+            ("resourceUsage", _resource_usage(t["resource_usage"])),
+            ("totalExecutionSlots", jnum(t["total_execution_slots"])),
+            ("uniqueNodeCount", jnum(t["unique_node_count"])),
+            ("exitStatus", jnum(t["exit_status"])),
+        ),
+    ])
+    middle = (
+        F.when(et == "TorqueQueueEntry", _fold_concat(_member_args(("queue", jstr(t["queue"])))))
+        .when(et == "TorqueDeleteEntry", _fold_concat(_member_args(
+            ("requestor", guard(t["requestor"], jobjd(
+                ("user", jstr(t["requestor"]["user"])),
+                ("whence", jstr(t["requestor"]["whence"])),
+            ))),
+        )))
+        .when(et.isin("TorqueStartEntry", "TorqueExitEntry"), accounting)
+        .when(et.isin("TorqueAbortEntry", "TorqueRerunEntry"), F.lit(""))
     )
-    a = jobjd(*common, ("torqueEntryType", F.lit('"TorqueAbortEntry"')))
-    r = jobjd(*common, ("torqueEntryType", F.lit('"TorqueRerunEntry"')))
-    s = jobjd(
-        *common,
-        ("user", jstr(t["user"])),
-        ("group", jstr(t["group"])),
-        ("account", jstr(t["account"])),
-        ("jobname", jstr(t["jobname"])),
-        ("queue", jstr(t["queue"])),
-        ("owner", jstr(t["owner"])),
-        ("times", _times(t["times"])),
-        ("execHost", _exec_host(t["exec_host"])),
-        ("resourceRequest", _resource_request(t["resource_request"])),
-        ("torqueEntryType", F.lit('"TorqueStartEntry"')),
-    )
-    e = jobjd(
-        *common,
-        ("user", jstr(t["user"])),
-        ("group", jstr(t["group"])),
-        ("account", jstr(t["account"])),
-        ("jobname", jstr(t["jobname"])),
-        ("queue", jstr(t["queue"])),
-        ("startCount", jnum(t["start_count"])),
-        ("owner", jstr(t["owner"])),
-        ("session", jnum(t["session"])),
-        ("times", _times(t["times"])),
-        ("execHost", _exec_host(t["exec_host"])),
-        ("resourceRequest", _resource_request(t["resource_request"])),
-        ("resourceUsage", _resource_usage(t["resource_usage"])),
-        ("totalExecutionSlots", jnum(t["total_execution_slots"])),
-        ("uniqueNodeCount", jnum(t["unique_node_count"])),
-        ("exitStatus", jnum(t["exit_status"])),
-        ("torqueEntryType", F.lit('"TorqueExitEntry"')),
-    )
-    return (
-        F.when(et == "TorqueQueueEntry", q)
-        .when(et == "TorqueStartEntry", s)
-        .when(et == "TorqueDeleteEntry", d)
-        .when(et == "TorqueExitEntry", e)
-        .when(et == "TorqueAbortEntry", a)
-        .when(et == "TorqueRerunEntry", r)
-    )
+    return _fold_concat([
+        '{"torqueDatestamp":', jstr(t["datestamp"]),
+        ',"name":', _job_name(t["name"]),
+        middle,
+        ',"torqueEntryType":"', et, '"}',
+    ])
 
 
 def lmod_json(l: Column) -> Column:
@@ -276,8 +284,7 @@ def lmod_json(l: Column) -> Column:
         ("cluster", jstr(l["info"]["cluster"])),
         ("jobid", jobid),
     )
-    load = jobjd(
-        ("info", info),
+    load = _member_args(
         ("userload", jbool(l["userload"])),
         ("module", guard(l["module"], jobjd(
             ("name", jstr(l["module"]["name"])),
@@ -285,12 +292,13 @@ def lmod_json(l: Column) -> Column:
         ))),
         ("filename", jstr(l["filename"])),
     )
-    cmd = jobjd(
-        ("info", info),
+    cmd = _member_args(
         ("command", jstr(l["command"])),
         ("arguments", jstr(l["arguments"])),
     )
-    return F.when(l["event"] == "load", load).otherwise(cmd)
+    # info renders once; only the members after it depend on the event
+    rest = F.when(l["event"] == "load", _fold_concat(load)).otherwise(_fold_concat(cmd))
+    return _fold_concat(['{"info":', info, rest, "}"])
 
 
 def snoopy_json(s: Column) -> Column:

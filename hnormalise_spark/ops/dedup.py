@@ -1191,10 +1191,14 @@ def minhash_recall_eval(
     ppm = lambda num, den: F.when(  # noqa: E731
         den > 0, F.floor(num / den * F.lit(1e6) + F.lit(0.5))
     ).otherwise(F.lit(1_000_000)).cast("long")
-    return truth_m.crossJoin(cand_m).select(
+    result = truth_m.crossJoin(cand_m).select(
         "n_truth",
         "n_cand",
         "n_verified",
         ppm(F.col("n_verified"), F.col("n_truth")).alias("recall_ppm"),
         ppm(F.col("n_verified"), F.col("n_cand")).alias("precision_ppm"),
     )
+    # one row: materialize it so bed0's cache is released before return
+    rows = result.collect()
+    bed0.unpersist()
+    return df.sparkSession.createDataFrame(rows, result.schema)

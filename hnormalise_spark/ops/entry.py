@@ -6267,10 +6267,11 @@ def q_prefix_dedup(spark: SparkSession, sf: str) -> DataFrame:
             F.col("doc_id").cast("long").alias("doc_id"), "text"
         )
     )
+    # plant ids are the negated space (-id-1): no corpus id can collide
     planted = docs.filter(
         (F.col("doc_id") % 13 == 3) & (F.length("text") >= 80)
     ).select(
-        (F.col("doc_id") + 300_000).alias("doc_id"),
+        (-F.col("doc_id") - 1).alias("doc_id"),
         F.substring("text", 1, 61).alias("text"),
     )
     return D.prefix_containment_pairs(docs.unionByName(planted))
@@ -6281,7 +6282,7 @@ def _oracle_prefix_dedup() -> str:
     WITH all_docs AS (
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 300000, substr(text, 1, 61) FROM documents
+      SELECT -doc_id - 1, substr(text, 1, 61) FROM documents
       WHERE doc_id % 13 = 3 AND length(text) >= 80),
     base AS (
       SELECT doc_id AS id,

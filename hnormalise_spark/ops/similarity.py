@@ -270,6 +270,10 @@ def ann_index_topk(
 # centroid table on the driver / broadcast it.
 
 
+# Driver-side cap on the centroid table (sqrt of 10^9 vectors is ~32k).
+IVF_MAX_CENTROIDS = 65_536
+
+
 def ivf_centroids(
     df: DataFrame, stride: int, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> list[tuple[int, list[float]]]:
@@ -277,13 +281,20 @@ def ivf_centroids(
     multiple of ``stride`` (a seeded k-means would also work; modular
     selection keeps the choice reproducible across engines so the
     DuckDB oracle can re-derive it in SQL). The collect is the index
-    *build* step and is driver-sized by construction — nlist =
-    ceil(N/stride) rows, never the corpus."""
+    *build* step: nlist = ceil(N/stride) rows, never the corpus, and
+    at most ``IVF_MAX_CENTROIDS`` — a stride too small for the corpus
+    raises ValueError instead of flooding the driver."""
     rows = (
         df.filter((F.col(id_col) % stride) == 0)
         .select(id_col, vec_col)
+        .limit(IVF_MAX_CENTROIDS + 1)
         .collect()
     )
+    if len(rows) > IVF_MAX_CENTROIDS:
+        raise ValueError(
+            f"ivf_centroids: stride {stride} selects more than "
+            f"{IVF_MAX_CENTROIDS} centroids; use a larger stride"
+        )
     return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
 
 

@@ -1,4 +1,4 @@
-"""Vectorized (JVM whole-stage-codegen) field-extraction operators.
+"""Vectorized (JVM expression) field-extraction operators.
 
 Each module re-expresses one of the reference's attoparsec parser
 families (/root/reference/src/HNormalise/*/Parser.hs) as pure Spark

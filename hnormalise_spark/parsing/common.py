@@ -46,7 +46,7 @@ RE_SIGNED = r"^-?\d{1,18}$"
 RE_NODE_ELEM = r"^(?:\d{1,9}(?::ppn=\d{1,9})?|[^0-9:][^:]*(?::ppn=\d{1,9})?)$"
 
 # Whole '+'-separated node list as ONE anchored regex (possessive
-# quantifiers — no backtracking, stays in whole-stage codegen; the
+# quantifiers — no backtracking, one generated rlike; the
 # split+forall form is a CodegenFallback HOF and ~1000× slower/row).
 # \s excluded so the same body can embed inside the torque fast-path
 # mega-regex without eating the following ' Resource_List.*' tokens

@@ -12,8 +12,7 @@ non-empty value matching neither fails the whole line (the reference's
 ``char ','`` after the jobid would fail).
 
 Regex group extractions are materialized as intermediate columns so
-each regex runs a bounded number of times per row and the plan stays
-inside whole-stage codegen.
+each regex runs a bounded number of times per row.
 """
 
 from __future__ import annotations

@@ -339,11 +339,12 @@ def _keys_whitelisted(allowed: list[str]) -> Column:
     return F.col("_tq_body").rlike(rx)
 
 
-def _acc_valid(mandatory_num: list[str]) -> Column:
+def _acc_valid() -> Column:
+    """Mandatory members common to Start and Exit records."""
     cond = F.lit(True)
     for k in _MANDATORY_TEXT:
         cond = cond & _has(k)
-    for k in mandatory_num:
+    for k in ("ctime", "qtime", "etime", "start"):
         cond = cond & _has(k) & C.unsigned_valid(_g(k))
     return cond & _has("exec_host") & C.host_list_valid(_g("exec_host"))
 
@@ -417,26 +418,28 @@ def layers(gate: Column, msg: Column) -> list[dict[str, Column]]:
         "_tq_v": F.coalesce(F.col("_tq_vE"), F.col("_tq_vS"), F.col("_tq_vKV")),
     }
 
-    e_ok_slow = (
-        _acc_valid(["ctime", "qtime", "etime", "start", "session", "end"])
+    # slow-path validity: the Start conjunction is shared by Exit, so
+    # it appears once in the plan and only the rest depends on the tag
+    acc_ok_slow = _acc_valid() & _rr_valid()
+    e_only_ok = (
+        _has("session") & C.unsigned_valid(_g("session"))
+        & _has("end") & C.unsigned_valid(_g("end"))
         & _has("Exit_status") & C.signed_valid(_g("Exit_status"))
         & (~_has("start_count") | C.unsigned_valid(_g("start_count")))
         & (~_has("total_execution_slots") | C.unsigned_valid(_g("total_execution_slots")))
         & (~_has("unique_node_count") | C.unsigned_valid(_g("unique_node_count")))
-        & _rr_valid() & _ru_valid()
+        & _ru_valid()
         & _keys_whitelisted(_KEYS_EXIT)
-    )
-    s_ok_slow = (
-        _acc_valid(["ctime", "qtime", "etime", "start"])
-        & _rr_valid()
-        & _keys_whitelisted(_KEYS_START)
     )
     tag_ok = (
         F.when(F.col("_tq_fast"), F.lit(True))
         .when(tag_c == "Q", body.rlike(r"^queue="))
         .when(tag_c == "D", body.rlike(r"^requestor=[^@ ]*@"))
-        .when(tag_c == "E", e_ok_slow)
-        .when(tag_c == "S", s_ok_slow)
+        .when(
+            F.col("_tq_is_acc"),
+            acc_ok_slow
+            & F.when(tag_c == "E", e_only_ok).otherwise(_keys_whitelisted(_KEYS_START)),
+        )
         .when((tag_c == "A") | (tag_c == "R"), F.lit(True))
         .otherwise(F.lit(False))
     )

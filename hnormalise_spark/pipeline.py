@@ -17,14 +17,22 @@ README's suggested tag-based pre-routing (README.md:62-66) built in.
 
 Physical-plan shape: the parse is a chain of Projects over materialized
 intermediate columns (each family's `layers()`), so shared subtrees
-(KV maps, regex match flags) evaluate once per row. Whole-stage codegen
-is off (session.py), so each Project compiles to its own small,
-JIT-able projection. No shuffle anywhere in the parse; the only
-shuffle in the whole pipeline is the (tiny) counts aggregate.
-Everything is JVM expressions; no Python runs per row.
+(KV maps, regex match flags) evaluate once per row. The families' layers
+run side by side: step k of all five families is ONE Project, so the
+chain is as long as the deepest family (torque's nine), not the sum.
+Whole-stage codegen is off (session.py), so each Project is its own
+small, JIT-able projection — and every task generates its Java source
+again from the expression tree (the class cache saves only the
+compile). That per-task cost grows with the number of Projects and of
+expression nodes, which is why both are kept low (tests/test_plans.py).
+No shuffle anywhere in the parse; the only shuffle in the whole
+pipeline is the (tiny) counts aggregate. Everything is JVM
+expressions; no Python runs per row.
 """
 
 from __future__ import annotations
+
+from itertools import zip_longest
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -200,13 +208,16 @@ def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
 
 def _payload_stage(df: DataFrame) -> DataFrame:
     # --- per-family layered parse -------------------------------------
+    # Step k of every family runs in ONE Project: the families are
+    # mutually exclusive on _family and their intermediates carry
+    # distinct prefixes, so merging the k-th dicts changes no value.
     msg = F.col("msg")
     intermediates = ["_line", "_env_ok", "_env_a", "_family", "_parser_raw", "_appname_raw"]
-    for fam_name, mod, _, _ in FAMILIES:
-        gate = F.col("_family") == fam_name
-        for layer in mod.layers(gate, msg):
-            df = df.withColumns(layer)
-            intermediates += layer
+    fam_layers = [mod.layers(F.col("_family") == fam, msg) for fam, mod, _, _ in FAMILIES]
+    for step in zip_longest(*fam_layers, fillvalue={}):
+        merged = {k: v for layer in step for k, v in layer.items()}
+        df = df.withColumns(merged)
+        intermediates += merged
 
     payload_cols: dict[str, Column] = {}
     parser_col: Column = F.lit(None).cast("string")
@@ -224,7 +235,7 @@ def _payload_stage(df: DataFrame) -> DataFrame:
     # always-false spark_partition_id()<0, value unchanged): Catalyst
     # never pushes a predicate through a Project with a
     # nondeterministic field, so a filter on parse_ok (routing!) can no
-    # longer be substituted into the ~25-Project parse expression DAG.
+    # longer be substituted into the stacked-Project parse expression DAG.
     # That substitution unfolds the shared DAG exponentially (observed:
     # a 110 MB filter-condition string; a bare
     # parsed.filter("parse_ok") hung for minutes) and the rule

@@ -36,7 +36,7 @@ def get_spark(
     conf = {
         # NOTE: earlier rounds excluded PushDownPredicates entirely to
         # stop predicate pushdown from substituting the parse's
-        # ~25-Project shared expression DAG into filter conditions
+        # stacked-Project shared expression DAG into filter conditions
         # (exponential unfolding; a filter condition reached 110 MB of
         # text). That root cause is now fixed structurally —
         # pipeline._payload_stage makes parse_ok nondeterministic,
@@ -68,7 +68,7 @@ def get_spark(
             if shuffle_partitions is not None
             else os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
         ),
-        # Whole-stage codegen loses here: the ~25 stacked parse Projects
+        # Whole-stage codegen loses here: the stacked parse Projects
         # fuse into methods too big for Janino (64 KB) and the JIT (8 KB).
         "spark.sql.codegen.wholeStage": "false",
         # Arrow for the pandas-UDF stages (tokenizer, golden encoder).

@@ -10,7 +10,7 @@ Two detokenizers:
 
 * ``detokenize_col``   — pure JVM expression (``transform`` + ``char``),
   valid for codepoints < 256 (rsyslog lines are ASCII). This is the hot
-  path: it stays inside whole-stage codegen, no Python round-trip.
+  path: no Python round-trip.
 * ``detokenize_pandas`` — Arrow-batched pandas UDF handling the full
   Unicode range; used when lines may be non-ASCII.
 
@@ -30,7 +30,7 @@ def detokenize_col(tokens: Column | str) -> Column:
     """JVM-side detokenizer for ASCII codepoints (<256).
 
     ``char()`` maps an int to the 1-byte char mod 256, so this is exact
-    for ASCII log lines and never leaves codegen.
+    for ASCII log lines and never leaves the JVM.
     """
     col = F.col(tokens) if isinstance(tokens, str) else tokens
     return F.array_join(F.transform(col, _char), "")
@@ -48,7 +48,7 @@ def retokenize_col(raw: Column | str) -> Column:
     """JVM-side exact inverse of detokenize_col for codepoints < 256:
     raw text → codepoint array. Lets the pipeline DROP the bulky token
     array right after detokenization (carrying a 200-int array through
-    ~24 projects costs ~40% of parse throughput) and reconstruct it
+    the parse projects costs ~40% of parse throughput) and reconstruct it
     bit-exactly for the failure sink's original-bytes contract."""
     col = F.col(raw) if isinstance(raw, str) else raw
     # sequence(1, 0) would DESCEND for empty input — guard to []

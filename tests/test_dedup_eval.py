@@ -59,3 +59,12 @@ def test_deterministic_across_partitionings(spark):
     a = minhash_recall_eval(df.repartition(1), sample=15).collect()[0]
     b = minhash_recall_eval(df.repartition(11), sample=15).collect()[0]
     assert a == b
+
+
+def test_eval_releases_its_cache(spark):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    out = minhash_recall_eval(_df(spark, _corpus(40)), sample=20)
+    assert cm.numCachedEntries() <= before
+    assert out.columns == ["n_truth", "n_cand", "n_verified", "recall_ppm", "precision_ppm"]
+    assert out.count() == 1

@@ -37,6 +37,14 @@ def test_ivf_centroids_deterministic_and_small(emb):
     assert cents == S.ivf_centroids(emb, stride=50)
 
 
+def test_ivf_centroids_cap(emb, monkeypatch):
+    monkeypatch.setattr(S, "IVF_MAX_CENTROIDS", 7)
+    with pytest.raises(ValueError, match="more than 7 centroids"):
+        S.ivf_centroids(emb, stride=50)  # 8 centroids
+    monkeypatch.setattr(S, "IVF_MAX_CENTROIDS", 8)
+    assert len(S.ivf_centroids(emb, stride=50)) == 8
+
+
 def test_ivf_assign_is_nearest_centroid(emb):
     cents = S.ivf_centroids(emb, stride=50)
     assigned = S.ivf_assign(emb, cents).select("vec_id", "embedding", "list_id").collect()

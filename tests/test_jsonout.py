@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,6 +41,22 @@ def encoded(spark):
         jsonout.encode_normalised([("@source_host", "hostname")]),
     ).withColumn("payload_json", jsonout.payload_json())
     return {r["doc_id"]: r for r in enc.collect()}
+
+
+# encode_normalised() and its fields variant for EVERY fixture row,
+# captured from the encoder before its CASE/leaf rewrite: all six torque
+# entry types, both node shapes, lmod jobid as int and as object,
+# shorewall's omitted members, slurm, and null for failed rows.
+CORPUS_GOLDENS = os.path.join(os.path.dirname(__file__), "goldens", "corpus_json.json")
+
+
+def test_every_corpus_row_byte_exact(encoded):
+    with open(CORPUS_GOLDENS, encoding="utf-8") as fh:
+        goldens = json.load(fh)
+    assert set(goldens) == {i for (i, _, _, _) in FX.CORPUS}
+    for fid, want in goldens.items():
+        assert encoded[fid]["json"] == want["json"], fid
+        assert encoded[fid]["json_fields"] == want["json_fields"], fid
 
 
 def test_e2e_goldens_byte_exact(encoded):

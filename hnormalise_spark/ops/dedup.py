@@ -39,10 +39,16 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     immune to long-text skew); at 10^12 rows use it with a pre-
     aggregated (fingerprint → min_id, count) broadcast-or-merge join.
     """
-    fp = F.md5(normalized_text(F.col(text_col))).alias("fingerprint")
+    return exact_dedup_on(df, F.md5(normalized_text(F.col(text_col))), id_col)
+
+
+def exact_dedup_on(df: DataFrame, fingerprint: Column, id_col: str = "doc_id") -> DataFrame:
+    """The shared body of ``exact_dedup`` and
+    ``tokenops.token_exact_dedup``: group rows by the ``fingerprint``
+    expression and keep the min id per group."""
     w = Window.partitionBy("fingerprint")
     return (
-        df.withColumn("fingerprint", fp)
+        df.withColumn("fingerprint", fingerprint)
         .withColumn("group_size", F.count(F.lit(1)).over(w))
         .withColumn("keeper_id", F.min(id_col).over(w))
         .withColumn("is_dup", F.col(id_col) != F.col("keeper_id"))

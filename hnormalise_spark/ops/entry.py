@@ -7,12 +7,21 @@ DuckDB SQL (md5-based hashing everywhere so both engines agree bit for
 bit). Floating-point outputs are compared as ``floor(x*10^k + 0.5)``
 fixed-point integers — identical doubles floor identically, whereas
 HALF_UP rounding differs between engines.
+
+``REGISTRY`` at the bottom is the one table of these pairs: each row
+maps a driver query name to ``(q_*, _oracle_*)``, so a query cannot be
+registered without its oracle. Several rows may share one oracle (the
+indexed and plain forms of a search return the same rows). The oracle
+functions are stored, not called: ``__spark_entry__.oracle_sql()``
+renders the SQL when the driver asks for it. ``__spark_entry__`` merges
+this table with its own parse-contract rows.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -6419,271 +6428,133 @@ def _oracle_curriculum() -> str:
     """
 
 
-def queries():
-    return {
-        "text_analyze": q_text_analyze,
-        "exact_dedup": q_exact_dedup,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash,
-        "ngram_jaccard": q_ngram_jaccard,
-        "similarity_topk": q_similarity_topk,
-        "similarity_ann": q_similarity_ann,
-        "similarity_ann_indexed": q_similarity_ann_indexed,
-        "similarity_ann_multiprobe": q_similarity_ann_multiprobe,
-        "similarity_ivf": q_similarity_ivf,
-        "ann_recall": q_ann_recall,
-        "sketch_distinct": q_sketch_distinct,
-        "sketch_jaccard": q_sketch_jaccard,
-        "cm_heavy_hitters": q_cm_heavy_hitters,
-        "weighted_sample": q_weighted_sample,
-        "temperature_mix": q_temperature_mix,
-        "embedding_neardup": q_embedding_neardup,
-        "dedup_clusters": q_dedup_clusters,
-        "sample_split": q_sample_split,
-        "dedup_incremental": q_dedup_incremental,
-        "doclen_stats": q_doclen_stats,
-        "training_pipeline": q_training_pipeline,
-        "curation_pipeline": q_curation_pipeline,
-        "decontaminate": q_decontaminate,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "quality_classifier": q_quality_classifier,
-        "token_dedup": q_token_dedup,
-        "token_neardup": q_token_neardup,
-        "token_clusters": q_token_clusters,
-        "token_lm": q_token_lm,
-        "token_chunks": q_token_chunks,
-        "token_decontam": q_token_decontam,
-        "token_oov": q_token_oov,
-        "token_pack": q_token_pack,
-        "token_zipf": q_token_zipf,
-        "dsir_select": q_dsir_select,
-        "dsir_curation": q_dsir_curation,
-        "pii_redact": q_pii_redact,
-        "pack_sequences": q_pack_sequences,
-        "mix_sources": q_mix_sources,
-        "reshard": q_reshard,
-        "vocab_topk": q_vocab_topk,
-        "bpe_pairs": q_bpe_pairs,
-        "bpe_train": q_bpe_train,
-        "bpe_encode": q_bpe_encode,
-        "tfidf_topk": q_tfidf_topk,
-        "quality_gated_topk": q_quality_gated_topk,
-        "lm_score": q_lm_score,
-        "lm_bigram": q_lm_bigram,
-        "repetition": q_repetition,
-        "dup_spans": q_dup_spans,
-        "dup_span_extract": q_dup_span_extract,
-        "dup_span_removal": q_dup_span_removal,
-        "budget_select": q_budget_select,
-        "budget_select_grouped": q_budget_select_grouped,
-        "filter_funnel": q_filter_funnel,
-        "quantize_embeddings": q_quantize_embeddings,
-        "events_rollup": q_events_rollup,
-        "events_sessionize": q_events_sessionize,
-        "events_asof": q_events_asof,
-        "events_session_stats": q_events_session_stats,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "events_transitions": q_events_transitions,
-        "events_active_users": q_events_active_users,
-        "events_json_props": q_json_props,
-        "revenue_by_nation": q_revenue_by_nation,
-        "brand_volume_by_region": q_brand_volume_by_region,
-        "distinct_counts": q_distinct_counts,
-        "winnow_fp": q_winnow_fp,
-        "winnow_pairs": q_winnow_pairs,
-        "bm25_topk": q_bm25_topk,
-        "bm25_indexed": q_bm25_indexed,
-        "multimodal_features": q_multimodal,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_frames": q_multimodal_frames,
-        "tokens_roundtrip": q_tokens_roundtrip,
-        "token_repetition": q_token_repetition,
-        "stratified_take": q_stratified_take,
-        "source_token_kl": q_source_token_kl,
-        "vocab_remap": q_vocab_remap,
-        "length_buckets": q_length_buckets,
-        "batch_pipeline": q_batch_pipeline,
-        "ann_quantized": q_ann_quantized,
-        "log_templates": q_log_templates,
-        "template_drift": q_template_drift,
-        "error_burst": q_error_burst,
-        "semdedup": q_semdedup,
-        "ppl_buckets": q_ppl_buckets,
-        "epoch_mix": q_epoch_mix,
-        "semantic_decontam": q_semantic_decontam,
-        "token_entropy": q_token_entropy,
-        "fertility": q_fertility,
-        "sketch_quantiles": q_sketch_quantiles,
-        "hard_negatives": q_hard_negatives,
-        "length_trim": q_length_trim,
-        "rrf_fusion": q_rrf_fusion,
-        "cluster_canonical": q_cluster_canonical,
-        "source_overlap": q_source_overlap,
-        "ngram_novelty": q_ngram_novelty,
-        "domain_reweight": q_domain_reweight,
-        "data_card": q_data_card,
-        "card_diff": q_card_diff,
-        "pmi_phrases": q_pmi_phrases,
-        "blocklist": q_blocklist,
-        "snapshot_diff": q_snapshot_diff,
-        "heaps_growth": q_heaps,
-        "lang_confusion": q_lang_confusion,
-        "span_plan": q_span_plan,
-        "media_dedup": q_media_dedup,
-        "distinct_ngrams": q_distinct_ngrams,
-        "budget_batches": q_budget_batches,
-        "release_pipeline": q_release_pipeline,
-        "skew_report": q_skew_report,
-        "domain_matrix": q_domain_matrix,
-        "edit_neardup": q_edit_neardup,
-        "quality_pct": q_quality_pct,
-        "exemplars": q_exemplars,
-        "sft_masking": q_sft_masking,
-        "curriculum": q_curriculum,
-        "prefix_dedup": q_prefix_dedup,
-        "dedup_eval": q_dedup_eval,
-        "hll_distinct": q_hll_distinct,
-        "hll_rollup": q_hll_rollup,
-        "chat_render": q_chat_render,
-        "sft_pipeline": q_sft_pipeline,
-        "knn_classify": q_knn_classify,
-        "classifier_roc": q_classifier_roc,
-    }
-
-
-def oracle_sql():
-    return {
-        "text_analyze": _oracle_text_analyze(),
-        "exact_dedup": _oracle_exact_dedup(),
-        "minhash_lsh": _oracle_minhash_lsh(),
-        "simhash": _oracle_simhash(),
-        "ngram_jaccard": _oracle_ngram_jaccard(),
-        "similarity_topk": _oracle_similarity_topk(),
-        "similarity_ann": _oracle_similarity_ann(),
-        "similarity_ann_indexed": _oracle_similarity_ann(),
-        "similarity_ann_multiprobe": _oracle_similarity_ann_multiprobe(),
-        "similarity_ivf": _oracle_similarity_ivf(),
-        "ann_recall": _oracle_ann_recall(),
-        "sketch_distinct": _oracle_sketch_distinct(),
-        "sketch_jaccard": _oracle_sketch_jaccard(),
-        "cm_heavy_hitters": _oracle_cm_heavy_hitters(),
-        "weighted_sample": _oracle_weighted_sample(),
-        "temperature_mix": _oracle_temperature_mix(),
-        "embedding_neardup": _oracle_embedding_neardup(),
-        "dedup_clusters": _oracle_dedup_clusters(),
-        "sample_split": _oracle_sample_split(),
-        "dedup_incremental": _oracle_dedup_incremental(),
-        "doclen_stats": _oracle_doclen_stats(),
-        "training_pipeline": _oracle_training_pipeline(),
-        "curation_pipeline": _oracle_curation_pipeline(),
-        "decontaminate": _oracle_decontaminate(),
-        "bloom_decontaminate": _oracle_bloom_decontaminate(),
-        "quality_classifier": _oracle_quality_classifier(),
-        "token_dedup": _oracle_token_dedup(),
-        "token_neardup": _oracle_token_neardup(),
-        "token_clusters": _oracle_token_clusters(),
-        "token_lm": _oracle_token_lm(),
-        "token_chunks": _oracle_token_chunks(),
-        "token_decontam": _oracle_token_decontam(),
-        "token_oov": _oracle_token_oov(),
-        "token_pack": _oracle_token_pack(),
-        "token_zipf": _oracle_token_zipf(),
-        "dsir_select": _oracle_dsir_select(),
-        "dsir_curation": _oracle_dsir_curation(),
-        "pii_redact": _oracle_pii_redact(),
-        "pack_sequences": _oracle_pack_sequences(),
-        "mix_sources": _oracle_mix_sources(),
-        "reshard": _oracle_reshard(),
-        "vocab_topk": _oracle_vocab_topk(),
-        "bpe_pairs": _oracle_bpe_pairs(),
-        "lm_score": _oracle_lm_score(),
-        "lm_bigram": _oracle_lm_bigram(),
-        "repetition": _oracle_repetition(),
-        "dup_spans": _oracle_dup_spans(),
-        "dup_span_extract": _oracle_dup_span_extract(),
-        "dup_span_removal": _oracle_dup_span_removal(),
-        "tfidf_topk": _oracle_tfidf_topk(),
-        "quality_gated_topk": _oracle_quality_gated_topk(),
-        "budget_select": _oracle_budget_select(),
-        "budget_select_grouped": _oracle_budget_select_grouped(),
-        "filter_funnel": _oracle_filter_funnel(),
-        "quantize_embeddings": _oracle_quantize_embeddings(),
-        # bpe_train/bpe_encode: iterative (merge i+1 depends on merge
-        # i), oracled by UNROLLING the 8 merges into chained
-        # pair-count/argmax/recursive-fusion CTE blocks — fully
-        # independent re-derivation, no Spark-side values embedded.
-        "bpe_train": _oracle_bpe_train(),
-        "bpe_encode": _oracle_bpe_encode(),
-        "events_rollup": _oracle_events_rollup(),
-        "events_sessionize": _oracle_events_sessionize(),
-        "events_asof": _oracle_events_asof(),
-        "events_session_stats": _oracle_events_session_stats(),
-        "events_funnel": _oracle_events_funnel(),
-        "events_retention": _oracle_events_retention(),
-        "events_transitions": _oracle_events_transitions(),
-        "events_active_users": _oracle_events_active_users(),
-        "events_json_props": _oracle_json_props(),
-        "revenue_by_nation": _oracle_revenue_by_nation(),
-        "brand_volume_by_region": _oracle_brand_volume_by_region(),
-        "distinct_counts": _oracle_distinct_counts(),
-        "winnow_fp": _oracle_winnow_fp(),
-        "winnow_pairs": _oracle_winnow_pairs(),
-        "bm25_topk": _oracle_bm25_topk(),
-        "bm25_indexed": _oracle_bm25_topk(),
-        "multimodal_features": _oracle_multimodal(),
-        "multimodal_resize": _oracle_multimodal_resize(),
-        "multimodal_frames": _oracle_multimodal_frames(),
-        "tokens_roundtrip": _oracle_tokens_roundtrip(),
-        "token_repetition": _oracle_token_repetition(),
-        "stratified_take": _oracle_stratified_take(),
-        "source_token_kl": _oracle_source_token_kl(),
-        "vocab_remap": _oracle_vocab_remap(),
-        "length_buckets": _oracle_length_buckets(),
-        "batch_pipeline": _oracle_batch_pipeline(),
-        "ann_quantized": _oracle_ann_quantized(),
-        "log_templates": _oracle_log_templates(),
-        "template_drift": _oracle_template_drift(),
-        "error_burst": _oracle_error_burst(),
-        "semdedup": _oracle_semdedup(),
-        "ppl_buckets": _oracle_ppl_buckets(),
-        "epoch_mix": _oracle_epoch_mix(),
-        "semantic_decontam": _oracle_semantic_decontam(),
-        "token_entropy": _oracle_token_entropy(),
-        "fertility": _oracle_fertility(),
-        "sketch_quantiles": _oracle_sketch_quantiles(),
-        "hard_negatives": _oracle_hard_negatives(),
-        "length_trim": _oracle_length_trim(),
-        "rrf_fusion": _oracle_rrf_fusion(),
-        "cluster_canonical": _oracle_cluster_canonical(),
-        "source_overlap": _oracle_source_overlap(),
-        "ngram_novelty": _oracle_ngram_novelty(),
-        "domain_reweight": _oracle_domain_reweight(),
-        "data_card": _oracle_data_card(),
-        "card_diff": _oracle_card_diff(),
-        "pmi_phrases": _oracle_pmi_phrases(),
-        "blocklist": _oracle_blocklist(),
-        "snapshot_diff": _oracle_snapshot_diff(),
-        "heaps_growth": _oracle_heaps(),
-        "lang_confusion": _oracle_lang_confusion(),
-        "span_plan": _oracle_span_plan(),
-        "media_dedup": _oracle_media_dedup(),
-        "distinct_ngrams": _oracle_distinct_ngrams(),
-        "budget_batches": _oracle_budget_batches(),
-        "release_pipeline": _oracle_release_pipeline(),
-        "skew_report": _oracle_skew_report(),
-        "domain_matrix": _oracle_domain_matrix(),
-        "edit_neardup": _oracle_edit_neardup(),
-        "quality_pct": _oracle_quality_pct(),
-        "exemplars": _oracle_exemplars(),
-        "sft_masking": _oracle_sft_masking(),
-        "curriculum": _oracle_curriculum(),
-        "prefix_dedup": _oracle_prefix_dedup(),
-        "dedup_eval": _oracle_dedup_eval(),
-        "hll_distinct": _oracle_hll_distinct(),
-        "hll_rollup": _oracle_hll_rollup(),
-        "chat_render": _oracle_chat_render(),
-        "sft_pipeline": _oracle_sft_pipeline(),
-        "knn_classify": _oracle_knn_classify(),
-        "classifier_roc": _oracle_classifier_roc(),
-    }
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]] = {
+    "text_analyze": (q_text_analyze, _oracle_text_analyze),
+    "exact_dedup": (q_exact_dedup, _oracle_exact_dedup),
+    "minhash_lsh": (q_minhash_lsh, _oracle_minhash_lsh),
+    "simhash": (q_simhash, _oracle_simhash),
+    "ngram_jaccard": (q_ngram_jaccard, _oracle_ngram_jaccard),
+    "similarity_topk": (q_similarity_topk, _oracle_similarity_topk),
+    "similarity_ann": (q_similarity_ann, _oracle_similarity_ann),
+    "similarity_ann_indexed": (q_similarity_ann_indexed, _oracle_similarity_ann),
+    "similarity_ann_multiprobe": (q_similarity_ann_multiprobe, _oracle_similarity_ann_multiprobe),
+    "similarity_ivf": (q_similarity_ivf, _oracle_similarity_ivf),
+    "ann_recall": (q_ann_recall, _oracle_ann_recall),
+    "sketch_distinct": (q_sketch_distinct, _oracle_sketch_distinct),
+    "sketch_jaccard": (q_sketch_jaccard, _oracle_sketch_jaccard),
+    "cm_heavy_hitters": (q_cm_heavy_hitters, _oracle_cm_heavy_hitters),
+    "weighted_sample": (q_weighted_sample, _oracle_weighted_sample),
+    "temperature_mix": (q_temperature_mix, _oracle_temperature_mix),
+    "embedding_neardup": (q_embedding_neardup, _oracle_embedding_neardup),
+    "dedup_clusters": (q_dedup_clusters, _oracle_dedup_clusters),
+    "sample_split": (q_sample_split, _oracle_sample_split),
+    "dedup_incremental": (q_dedup_incremental, _oracle_dedup_incremental),
+    "doclen_stats": (q_doclen_stats, _oracle_doclen_stats),
+    "training_pipeline": (q_training_pipeline, _oracle_training_pipeline),
+    "curation_pipeline": (q_curation_pipeline, _oracle_curation_pipeline),
+    "decontaminate": (q_decontaminate, _oracle_decontaminate),
+    "bloom_decontaminate": (q_bloom_decontaminate, _oracle_bloom_decontaminate),
+    "quality_classifier": (q_quality_classifier, _oracle_quality_classifier),
+    "token_dedup": (q_token_dedup, _oracle_token_dedup),
+    "token_neardup": (q_token_neardup, _oracle_token_neardup),
+    "token_clusters": (q_token_clusters, _oracle_token_clusters),
+    "token_lm": (q_token_lm, _oracle_token_lm),
+    "token_chunks": (q_token_chunks, _oracle_token_chunks),
+    "token_decontam": (q_token_decontam, _oracle_token_decontam),
+    "token_oov": (q_token_oov, _oracle_token_oov),
+    "token_pack": (q_token_pack, _oracle_token_pack),
+    "token_zipf": (q_token_zipf, _oracle_token_zipf),
+    "dsir_select": (q_dsir_select, _oracle_dsir_select),
+    "dsir_curation": (q_dsir_curation, _oracle_dsir_curation),
+    "pii_redact": (q_pii_redact, _oracle_pii_redact),
+    "pack_sequences": (q_pack_sequences, _oracle_pack_sequences),
+    "mix_sources": (q_mix_sources, _oracle_mix_sources),
+    "reshard": (q_reshard, _oracle_reshard),
+    "vocab_topk": (q_vocab_topk, _oracle_vocab_topk),
+    "bpe_pairs": (q_bpe_pairs, _oracle_bpe_pairs),
+    "bpe_train": (q_bpe_train, _oracle_bpe_train),
+    "bpe_encode": (q_bpe_encode, _oracle_bpe_encode),
+    "tfidf_topk": (q_tfidf_topk, _oracle_tfidf_topk),
+    "quality_gated_topk": (q_quality_gated_topk, _oracle_quality_gated_topk),
+    "lm_score": (q_lm_score, _oracle_lm_score),
+    "lm_bigram": (q_lm_bigram, _oracle_lm_bigram),
+    "repetition": (q_repetition, _oracle_repetition),
+    "dup_spans": (q_dup_spans, _oracle_dup_spans),
+    "dup_span_extract": (q_dup_span_extract, _oracle_dup_span_extract),
+    "dup_span_removal": (q_dup_span_removal, _oracle_dup_span_removal),
+    "budget_select": (q_budget_select, _oracle_budget_select),
+    "budget_select_grouped": (q_budget_select_grouped, _oracle_budget_select_grouped),
+    "filter_funnel": (q_filter_funnel, _oracle_filter_funnel),
+    "quantize_embeddings": (q_quantize_embeddings, _oracle_quantize_embeddings),
+    "events_rollup": (q_events_rollup, _oracle_events_rollup),
+    "events_sessionize": (q_events_sessionize, _oracle_events_sessionize),
+    "events_asof": (q_events_asof, _oracle_events_asof),
+    "events_session_stats": (q_events_session_stats, _oracle_events_session_stats),
+    "events_funnel": (q_events_funnel, _oracle_events_funnel),
+    "events_retention": (q_events_retention, _oracle_events_retention),
+    "events_transitions": (q_events_transitions, _oracle_events_transitions),
+    "events_active_users": (q_events_active_users, _oracle_events_active_users),
+    "events_json_props": (q_json_props, _oracle_json_props),
+    "revenue_by_nation": (q_revenue_by_nation, _oracle_revenue_by_nation),
+    "brand_volume_by_region": (q_brand_volume_by_region, _oracle_brand_volume_by_region),
+    "distinct_counts": (q_distinct_counts, _oracle_distinct_counts),
+    "winnow_fp": (q_winnow_fp, _oracle_winnow_fp),
+    "winnow_pairs": (q_winnow_pairs, _oracle_winnow_pairs),
+    "bm25_topk": (q_bm25_topk, _oracle_bm25_topk),
+    "bm25_indexed": (q_bm25_indexed, _oracle_bm25_topk),
+    "multimodal_features": (q_multimodal, _oracle_multimodal),
+    "multimodal_resize": (q_multimodal_resize, _oracle_multimodal_resize),
+    "multimodal_frames": (q_multimodal_frames, _oracle_multimodal_frames),
+    "tokens_roundtrip": (q_tokens_roundtrip, _oracle_tokens_roundtrip),
+    "token_repetition": (q_token_repetition, _oracle_token_repetition),
+    "stratified_take": (q_stratified_take, _oracle_stratified_take),
+    "source_token_kl": (q_source_token_kl, _oracle_source_token_kl),
+    "vocab_remap": (q_vocab_remap, _oracle_vocab_remap),
+    "length_buckets": (q_length_buckets, _oracle_length_buckets),
+    "batch_pipeline": (q_batch_pipeline, _oracle_batch_pipeline),
+    "ann_quantized": (q_ann_quantized, _oracle_ann_quantized),
+    "log_templates": (q_log_templates, _oracle_log_templates),
+    "template_drift": (q_template_drift, _oracle_template_drift),
+    "error_burst": (q_error_burst, _oracle_error_burst),
+    "semdedup": (q_semdedup, _oracle_semdedup),
+    "ppl_buckets": (q_ppl_buckets, _oracle_ppl_buckets),
+    "epoch_mix": (q_epoch_mix, _oracle_epoch_mix),
+    "semantic_decontam": (q_semantic_decontam, _oracle_semantic_decontam),
+    "token_entropy": (q_token_entropy, _oracle_token_entropy),
+    "fertility": (q_fertility, _oracle_fertility),
+    "sketch_quantiles": (q_sketch_quantiles, _oracle_sketch_quantiles),
+    "hard_negatives": (q_hard_negatives, _oracle_hard_negatives),
+    "length_trim": (q_length_trim, _oracle_length_trim),
+    "rrf_fusion": (q_rrf_fusion, _oracle_rrf_fusion),
+    "cluster_canonical": (q_cluster_canonical, _oracle_cluster_canonical),
+    "source_overlap": (q_source_overlap, _oracle_source_overlap),
+    "ngram_novelty": (q_ngram_novelty, _oracle_ngram_novelty),
+    "domain_reweight": (q_domain_reweight, _oracle_domain_reweight),
+    "data_card": (q_data_card, _oracle_data_card),
+    "card_diff": (q_card_diff, _oracle_card_diff),
+    "pmi_phrases": (q_pmi_phrases, _oracle_pmi_phrases),
+    "blocklist": (q_blocklist, _oracle_blocklist),
+    "snapshot_diff": (q_snapshot_diff, _oracle_snapshot_diff),
+    "heaps_growth": (q_heaps, _oracle_heaps),
+    "lang_confusion": (q_lang_confusion, _oracle_lang_confusion),
+    "span_plan": (q_span_plan, _oracle_span_plan),
+    "media_dedup": (q_media_dedup, _oracle_media_dedup),
+    "distinct_ngrams": (q_distinct_ngrams, _oracle_distinct_ngrams),
+    "budget_batches": (q_budget_batches, _oracle_budget_batches),
+    "release_pipeline": (q_release_pipeline, _oracle_release_pipeline),
+    "skew_report": (q_skew_report, _oracle_skew_report),
+    "domain_matrix": (q_domain_matrix, _oracle_domain_matrix),
+    "edit_neardup": (q_edit_neardup, _oracle_edit_neardup),
+    "quality_pct": (q_quality_pct, _oracle_quality_pct),
+    "exemplars": (q_exemplars, _oracle_exemplars),
+    "sft_masking": (q_sft_masking, _oracle_sft_masking),
+    "curriculum": (q_curriculum, _oracle_curriculum),
+    "prefix_dedup": (q_prefix_dedup, _oracle_prefix_dedup),
+    "dedup_eval": (q_dedup_eval, _oracle_dedup_eval),
+    "hll_distinct": (q_hll_distinct, _oracle_hll_distinct),
+    "hll_rollup": (q_hll_rollup, _oracle_hll_rollup),
+    "chat_render": (q_chat_render, _oracle_chat_render),
+    "sft_pipeline": (q_sft_pipeline, _oracle_sft_pipeline),
+    "knn_classify": (q_knn_classify, _oracle_knn_classify),
+    "classifier_roc": (q_classifier_roc, _oracle_classifier_roc),
+}

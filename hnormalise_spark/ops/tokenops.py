@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hnormalise_spark.ops.decontam import decontaminate_on
 from hnormalise_spark.ops.dedup import (
     _band_carry_verify,
     band_keys,
+    exact_dedup_on,
     minhash_signature,
 )
 
@@ -63,13 +65,7 @@ def token_exact_dedup(
     Adds ``fingerprint``, ``group_size``, ``is_dup`` — the token-table
     twin of dedup.exact_dedup (same contract, same single-shuffle
     plan keyed by the fixed-width fingerprint)."""
-    w = Window.partitionBy("fingerprint")
-    return (
-        df.withColumn("fingerprint", token_fingerprint(F.col(tokens_col)))
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .withColumn("keeper_id", F.min(id_col).over(w))
-        .withColumn("is_dup", F.col(id_col) != F.col("keeper_id"))
-    )
+    return exact_dedup_on(df, token_fingerprint(F.col(tokens_col)), id_col)
 
 
 def token_ngram_shingles(tokens: Column, n: int = 8) -> Column:
@@ -262,20 +258,7 @@ def token_decontaminate(
     decontam.decontaminate with the identical plan shape: corpus
     explode → inner join broadcast(eval_grams) → per-doc hit count →
     hits broadcast-joined back. The corpus is never shuffled."""
-    grams = df.select(
-        F.col(id_col),
-        F.explode(token_ngram_hashes(F.col(tokens_col), n)).alias("gram"),
-    )
-    hits = (
-        grams.join(F.broadcast(eval_grams.select("gram")), "gram", "inner")
-        .groupBy(id_col)
-        .agg(F.count_distinct("gram").alias("n_eval_hits"))
-    )
-    return (
-        df.join(F.broadcast(hits), id_col, "left")
-        .withColumn("n_eval_hits", F.coalesce(F.col("n_eval_hits"), F.lit(0)))
-        .withColumn("contaminated", (F.col("n_eval_hits") > 0).cast("int"))
-    )
+    return decontaminate_on(df, eval_grams, token_ngram_hashes(F.col(tokens_col), n), id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -40,29 +40,25 @@ RE_JOB_NAME = r"^(\d{1,18})(?:\[(\d{0,18})\]|-(\d{1,18}))?\.([^.]*)\.([^.]*)"
 RE_UNSIGNED = r"^\d{1,18}$"
 RE_SIGNED = r"^-?\d{1,18}$"
 
-# One element of a Resource_List node list (parseTorqueResourceNodeList,
-# :133-143): digit-leading ⇒ short node (count), else FQDN. ppn suffix
-# optional in both.
-RE_NODE_ELEM = r"^(?:\d{1,9}(?::ppn=\d{1,9})?|[^0-9:][^:]*(?::ppn=\d{1,9})?)$"
-
-# Whole '+'-separated node list as ONE anchored regex (possessive
-# quantifiers — no backtracking, one generated rlike; the
-# split+forall form is a CodegenFallback HOF and ~1000× slower/row).
-# \s excluded so the same body can embed inside the torque fast-path
-# mega-regex without eating the following ' Resource_List.*' tokens
-# (isolated KV values never contain spaces — str_to_map splits on ' ').
+# Whole '+'-separated Resource_List node list
+# (parseTorqueResourceNodeList, :133-143: a digit-leading element is a
+# node count, anything else an FQDN, both with an optional ppn suffix)
+# as ONE anchored regex (possessive quantifiers — no backtracking, one
+# generated rlike; the split+forall form is a CodegenFallback HOF and
+# ~1000× slower/row). \s excluded so the same body can embed inside
+# the torque fast-path mega-regex without eating the following
+# ' Resource_List.*' tokens (isolated KV values never contain spaces —
+# str_to_map splits on ' ').
 _NODE_ELEM_P = r"(?:\d{1,9}+(?::ppn=\d{1,9}+)?+|[^0-9:+\s][^:+\s]*+(?::ppn=\d{1,9}+)?+)"
 NODE_LIST_P = rf"{_NODE_ELEM_P}(?:\+{_NODE_ELEM_P})*+"
 RE_NODE_LIST = rf"^{NODE_LIST_P}$"
 
-# One element of an exec_host list (parseTorqueHostList, :291-311):
-# fqdn/corespec where corespec is a comma list of ints and lo-hi ranges.
-RE_HOST_ELEM = r"^[^/]*/\d{1,4}(-\d{1,4})?(,\d{1,4}(-\d{1,4})?)*$"
-
-# Whole exec_host value as one anchored possessive regex (\s excluded
-# for mega-regex embedding, see NODE_LIST_P). Core indices are capped
-# at 4 digits: they drive F.sequence expansion, so the cap also bounds
-# the widest possible per-range blowup at 10^4 elements.
+# Whole exec_host value (parseTorqueHostList, :291-311: '+'-joined
+# fqdn/corespec, corespec a comma list of ints and lo-hi ranges) as one
+# anchored possessive regex (\s excluded for mega-regex embedding, see
+# NODE_LIST_P). Core indices are capped at 4 digits: they drive
+# F.sequence expansion, so the cap also bounds the widest possible
+# per-range blowup at 10^4 elements.
 _HOST_ELEM_P = r"[^/+\s]*+/\d{1,4}+(?:-\d{1,4}+)?+(?:,\d{1,4}+(?:-\d{1,4}+)?+)*+"
 HOST_LIST_P = rf"{_HOST_ELEM_P}(?:\+{_HOST_ELEM_P})*+"
 RE_HOST_LIST = rf"^{HOST_LIST_P}$"

@@ -217,9 +217,6 @@ def _build_body_re(exit_mode: bool) -> _MegaRe:
 _MEGA_E = _build_body_re(exit_mode=True)
 _MEGA_S = _build_body_re(exit_mode=False)
 
-# every logical field of the raw-values struct (string-typed)
-_V_FIELDS = list(_MEGA_E.fields) + ["tes"]  # tes = coalesce(pre, post)
-
 
 def _fast_struct(mega: _MegaRe, arr: Column) -> Column:
     cols = []

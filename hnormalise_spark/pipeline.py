@@ -64,7 +64,7 @@ def _family_col(msg: Column) -> Column:
 
 
 def normalise(df: DataFrame, line_col: str = "raw") -> DataFrame:
-    """Parse a DataFrame of raw log lines into NORMALISED_SCHEMA shape.
+    """Parse a DataFrame of raw log lines into the normalised shape.
 
     Keeps all pre-existing columns (doc_id, source, tokens, …) and adds
     envelope fields, one nullable payload struct per family, and the
@@ -97,6 +97,17 @@ _JSON_REQUIRED = [
 # the top-level key set.
 _JSON_REQUIRED_KEYS = ["pri", "version", "timegenerated"]
 
+# envelope fields each parse fills, blanked on a failed row
+_ENVELOPE_FIELDS = [
+    "pri", "version", "timereported", "timereported_raw", "hostname",
+    "syslogtag", "msg",
+]
+_JSON_ENVELOPE_FIELDS = [
+    *_ENVELOPE_FIELDS, "inputname", "fromhost", "fromhost_ip",
+    "syslogfacility", "syslogseverity", "timegenerated", "programname",
+    "protocol_version", "appname_in", "procid",
+]
+
 
 def normalise_json(df: DataFrame, line_col: str = "raw") -> DataFrame:
     """JSON-mode input (normaliseJsonInput, HNormalise.hs:78-84): each
@@ -126,32 +137,13 @@ def normalise_json(df: DataFrame, line_col: str = "raw") -> DataFrame:
             "msg": j["msg"],
         }
     )
-    ts = F.when(
-        F.col("timereported_raw").rlike(RE_RFC3339),
-        F.col("timereported_raw").cast("timestamp"),
-    )
-    env_ok = ts.isNotNull()
+    keys = F.json_object_keys(F.col("_line"))
+    env_ok = F.lit(True)
     for c in _JSON_REQUIRED:
         env_ok = env_ok & F.col(c).isNotNull()
-    keys = F.json_object_keys(F.col("_line"))
     for k in _JSON_REQUIRED_KEYS:
         env_ok = env_ok & F.coalesce(F.array_contains(keys, k), F.lit(False))
-    df = df.withColumns(
-        {
-            "timereported": ts,
-            "_env_ok": env_ok,
-            "_family": _family_col(F.col("msg")),
-        }
-    )
-    # Failure keeps only the original bytes (Normalised = Original).
-    env_fields = [
-        "pri", "version", "timereported", "timereported_raw", "hostname",
-        "syslogtag", "msg", "inputname", "fromhost", "fromhost_ip",
-        "syslogfacility", "syslogseverity", "timegenerated", "programname",
-        "protocol_version", "appname_in", "procid",
-    ]
-    df = df.withColumns({c: F.when(F.col("_env_ok"), F.col(c)) for c in env_fields})
-    return _payload_stage(df)
+    return _payload_stage(_envelope_tail(df, env_ok, _JSON_ENVELOPE_FIELDS))
 
 
 def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
@@ -188,6 +180,14 @@ def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
             "_env_ok": pok,
         }
     )
+    return _envelope_tail(df, F.col("_env_ok"), _ENVELOPE_FIELDS)
+
+
+def _envelope_tail(df: DataFrame, env_ok: Column, fields: list[str]) -> DataFrame:
+    """Shared end of both envelope parses: the RFC3339 ``timereported``,
+    ``_env_ok`` = ``env_ok`` and a valid timestamp, the payload family,
+    and every envelope field in ``fields`` blanked on failure (a failed
+    row keeps only the original bytes: Normalised = Original)."""
     ts = F.when(
         F.col("timereported_raw").rlike(RE_RFC3339),
         F.col("timereported_raw").cast("timestamp"),
@@ -195,15 +195,11 @@ def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
     df = df.withColumns(
         {
             "timereported": ts,
-            "_env_ok": F.col("_env_ok") & ts.isNotNull(),
+            "_env_ok": env_ok & ts.isNotNull(),
             "_family": _family_col(F.col("msg")),
         }
     )
-    # Blank envelope fields on envelope failure.
-    env_fields = ["pri", "version", "timereported", "timereported_raw", "hostname", "syslogtag", "msg"]
-    return df.withColumns(
-        {c: F.when(F.col("_env_ok"), F.col(c)) for c in env_fields}
-    )
+    return df.withColumns({c: F.when(F.col("_env_ok"), F.col(c)) for c in fields})
 
 
 def _payload_stage(df: DataFrame) -> DataFrame:

@@ -4,7 +4,6 @@ Shapes mirror the reference's record types (all citations into
 /root/reference):
 
 * input table        — BASELINE.json ``input_hint``
-* rsyslog envelope   — src/HNormalise/Internal.hs:81-103
 * torque payloads    — src/HNormalise/Torque/Internal.hs:80-227
 * shorewall payload  — src/HNormalise/Shorewall/Internal.hs:64-78
 * snoopy payload     — src/HNormalise/Snoopy/Internal.hs:51-60
@@ -272,64 +271,5 @@ SLURM_PAYLOAD = StructType(
         _f("node_cnt", LongType()),
         _f("proc_cnt", LongType()),
         _f("work_dir", StringType()),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Rsyslog envelope subset the logstash-template parser fills
-# (Parser.hs:94-131; the remaining Internal.hs:81-103 fields are empty
-# strings in the reference and carried only in the JSON-input path).
-ENVELOPE_FIELDS = [
-    _f("pri", IntegerType()),
-    _f("version", IntegerType()),
-    _f("timereported", TimestampType()),
-    _f("timereported_raw", StringType()),
-    _f("hostname", StringType()),
-    _f("syslogtag", StringType()),
-    _f("msg", StringType()),
-]
-
-# Full parsed-row schema produced by pipeline.normalise().
-NORMALISED_SCHEMA = StructType(
-    [
-        _f("doc_id", StringType()),
-        _f("source", StringType()),
-        _f("raw", StringType(), False),
-        *ENVELOPE_FIELDS,
-        _f("appname", StringType()),
-        _f("parser", StringType()),
-        _f("jsonkey", StringType()),
-        _f("parse_ok", BooleanType(), False),
-        _f("torque", TORQUE_PAYLOAD),
-        _f("lmod", LMOD_PAYLOAD),
-        _f("shorewall", SHOREWALL_PAYLOAD),
-        _f("snoopy", SNOOPY_PAYLOAD),
-        _f("slurm", SLURM_PAYLOAD),
-    ]
-)
-
-# Enrichment lookup tables (north_rule addition; FIXTURES.md §4).
-HOST_META_SCHEMA = StructType(
-    [
-        _f("hostname", StringType(), False),
-        _f("cluster", StringType()),
-        _f("rack", StringType()),
-        _f("ip", StringType()),
-    ]
-)
-
-CLUSTER_META_SCHEMA = StructType(
-    [
-        _f("cluster", StringType(), False),
-        _f("site", StringType()),
-        _f("scheduler", StringType()),
-    ]
-)
-
-USER_META_SCHEMA = StructType(
-    [
-        _f("uid", IntegerType(), False),
-        _f("username", StringType()),
-        _f("group", StringType()),
     ]
 )

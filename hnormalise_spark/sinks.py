@@ -33,6 +33,9 @@ SUCCESS_COLS = [
     "hostname", "syslogtag", "msg", "appname", "parser", "jsonkey",
     *(fam for fam, *_ in FAMILIES),
 ]
+# the original input, untouched (HNormalise.hs:69-73)
+FAILURE_COLS = ["doc_id", "source", "tokens", "n_tok", "raw"]
+LINEAGE_COLS = ["lineage_partition", "lineage_file"]
 
 
 def with_lineage(df: DataFrame) -> DataFrame:
@@ -59,22 +62,21 @@ def with_observed_metrics(parsed: DataFrame, name: str = "hnormalise_metrics") -
     )
 
 
-def write_staging(parsed: DataFrame, path: str, json_line: bool = False, lean: bool = True) -> None:
+def write_staging(parsed: DataFrame, path: str, json_line: bool = False) -> None:
     """One-pass write of the parsed result, partitioned by route so the
     success/failure scans are partition-pruned (not even a filter).
 
-    ``lean`` keeps the original bytes (tokens/raw) only on FAILURE rows
-    — the success contract never includes them, and at 10^12-row scale
-    they are the bulk of the write volume (~90% of rows parse)."""
+    The original bytes (tokens/raw) are kept only on FAILURE rows — the
+    success contract never includes them, and at 10^12-row scale they
+    are the bulk of the write volume (~90% of rows parse)."""
     out = with_lineage(parsed) if "lineage_partition" not in parsed.columns else parsed
     if json_line:
         out = out.withColumn(
             "json", F.when(F.col("parse_ok"), jsonout.encode_normalised())
         )
-    if lean:
-        for c in ("tokens", "raw", "n_tok"):
-            if c in out.columns:
-                out = out.withColumn(c, F.when(~F.col("parse_ok"), F.col(c)))
+    for c in ("tokens", "raw", "n_tok"):
+        if c in out.columns:
+            out = out.withColumn(c, F.when(~F.col("parse_ok"), F.col(c)))
     if "tokens" not in out.columns and "raw" in out.columns:
         # token-path parse dropped the array for speed; reconstruct the
         # original bit-exactly for the failure contract (ASCII codec is
@@ -93,25 +95,15 @@ def write_staging(parsed: DataFrame, path: str, json_line: bool = False, lean: b
     out.write.mode("overwrite").partitionBy("route").parquet(path)
 
 
-def write_success(staging: DataFrame, path: str, json_line: bool = True) -> None:
-    ok = staging.filter(F.col("parse_ok"))
-    cols = [c for c in SUCCESS_COLS if c in staging.columns]
-    if json_line:
-        if "json" in staging.columns:
-            cols.append("json")
-        else:
-            ok = ok.withColumn("json", jsonout.encode_normalised())
-            cols.append("json")
-    lineage = [c for c in ("lineage_partition", "lineage_file") if c in ok.columns]
-    ok.select(*cols, *lineage).write.mode("overwrite").partitionBy().parquet(path)
+def write_success(staging: DataFrame, path: str) -> None:
+    """Standalone success table; it carries ``json`` when staging does."""
+    cols = [c for c in (*SUCCESS_COLS, "json", *LINEAGE_COLS) if c in staging.columns]
+    staging.filter(F.col("parse_ok")).select(*cols).write.mode("overwrite").parquet(path)
 
 
-def write_failure(staging: DataFrame, path: str, original_cols: tuple[str, ...] = ("doc_id", "source", "tokens", "n_tok", "raw")) -> None:
-    cols = [c for c in original_cols if c in staging.columns]
-    lineage = [c for c in ("lineage_partition", "lineage_file") if c in staging.columns]
-    staging.filter(~F.col("parse_ok")).select(*cols, *lineage).write.mode(
-        "overwrite"
-    ).parquet(path)
+def write_failure(staging: DataFrame, path: str) -> None:
+    cols = [c for c in (*FAILURE_COLS, *LINEAGE_COLS) if c in staging.columns]
+    staging.filter(~F.col("parse_ok")).select(*cols).write.mode("overwrite").parquet(path)
 
 
 def write_counts(staging: DataFrame, path: str) -> None:
@@ -178,7 +170,7 @@ def run_batch(
     write_counts(staging, paths["counts"])
     if export_sinks:
         write_failure(staging, paths["failure"])
-        write_success(staging, paths["success"], json_line=json_line)
+        write_success(staging, paths["success"])
     if snapshot_id is not None:
         T._commit_manifest(
             out_dir, {"snapshot_id": snapshot_id, "paths": paths}

@@ -6,16 +6,12 @@ codepoint-level and therefore deterministic and exactly invertible:
 ``text = ''.join(chr(t) for t in tokens)`` — which makes the per-row
 token-array equality invariant checkable end-to-end.
 
-Two detokenizers:
+``detokenize_col`` is a pure JVM expression (``transform`` + ``char``),
+valid for codepoints < 256 (rsyslog lines are ASCII): no Python runs
+per row. ``retokenize_col`` is its exact inverse on that range.
 
-* ``detokenize_col``   — pure JVM expression (``transform`` + ``char``),
-  valid for codepoints < 256 (rsyslog lines are ASCII). This is the hot
-  path: no Python round-trip.
-* ``detokenize_pandas`` — Arrow-batched pandas UDF handling the full
-  Unicode range; used when lines may be non-ASCII.
-
-Tokenize (text → codepoints) only runs in data generation and
-invariant tests, as a pandas UDF.
+Tokenize (text → codepoints) for the full Unicode range only runs in
+data generation and invariant tests, as a pandas UDF.
 """
 
 from __future__ import annotations
@@ -23,7 +19,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType
+from pyspark.sql.types import ArrayType, IntegerType
 
 
 def detokenize_col(tokens: Column | str) -> Column:
@@ -33,15 +29,7 @@ def detokenize_col(tokens: Column | str) -> Column:
     for ASCII log lines and never leaves the JVM.
     """
     col = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.array_join(F.transform(col, _char), "")
-
-
-def _char(t: Column) -> Column:
-    # F.char exists in PySpark 4 as `char`; fall back to expr on older.
-    try:
-        return F.char(t)  # type: ignore[attr-defined]
-    except AttributeError:  # pragma: no cover
-        return F.call_function("char", t)
+    return F.array_join(F.transform(col, F.char), "")
 
 
 def retokenize_col(raw: Column | str) -> Column:
@@ -61,19 +49,8 @@ def retokenize_col(raw: Column | str) -> Column:
     )
 
 
-@F.pandas_udf(StringType())
-def detokenize_pandas(tokens: pd.Series) -> pd.Series:
-    """Full-Unicode detokenizer (Arrow-batched)."""
-    return tokens.map(lambda ts: "".join(map(chr, ts)))
-
-
 @F.pandas_udf(ArrayType(IntegerType()))
 def tokenize_pandas(text: pd.Series) -> pd.Series:
     """text → codepoint array (Arrow-batched); datagen/tests only."""
     return text.map(lambda s: [ord(c) for c in s])
 
-
-def with_text(df, tokens_col: str = "tokens", out: str = "raw", ascii_only: bool = True):
-    """Add a detokenized text column to a tokenized DataFrame."""
-    expr = detokenize_col(tokens_col) if ascii_only else detokenize_pandas(F.col(tokens_col))
-    return df.withColumn(out, expr)

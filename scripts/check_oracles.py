@@ -1,16 +1,22 @@
 """Local replica of the driver's correctness gate: run each
 __spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB
 over the same sf dir; compare row count, column names, and an
-order-insensitive multiset of stringified rows."""
+order-insensitive multiset of stringified rows. Each line reports the
+wall time of the Spark query (build + collect) and of the DuckDB
+oracle.
+
+    python scripts/check_oracles.py [SF_DIR] [NAME,NAME,...]"""
 
 from __future__ import annotations
 
+import os
 import sys
+import time
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -56,15 +62,13 @@ def main() -> int:
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
+        t0 = time.perf_counter()
         sdf = fn(spark, SF)
         scols = sorted(sdf.columns)
         srows = sdf.collect()
-        if name not in oracles:
-            # rows-only class (iterative/streaming): mirror the
-            # driver's weaker check — the query ran and returned rows
-            print(f"ROWS-ONLY {name} ({len(srows)} rows)")
-            continue
+        t1 = time.perf_counter()
         odf = con.execute(oracles[name]).df()
+        walls = f"spark {t1 - t0:.2f}s duckdb {time.perf_counter() - t1:.2f}s"
         ocols = sorted(odf.columns)
         status = []
         if scols != ocols:
@@ -84,9 +88,9 @@ def main() -> int:
                 status.append(f"VALUES spark_only={diff_s} oracle_only={diff_o}")
         if status:
             failures += 1
-            print(f"FAIL {name}: {'; '.join(status)}")
+            print(f"FAIL {name} ({walls}): {'; '.join(status)}")
         else:
-            print(f"PASS {name} ({len(srows)} rows)")
+            print(f"PASS {name} ({len(srows)} rows; {walls})")
     spark.stop()
     return 1 if failures else 0
 

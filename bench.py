@@ -4,7 +4,8 @@
 Runs the flagship end-to-end pipeline (tokenized corpus → detokenize →
 parse → route → JSON encode → counts) plus every `__spark_entry__`
 query at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32), and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may use),
+and prints ONE JSON line:
 
     {"metric": "pipeline lines/sec", "value": <lines/s>, "unit": "lines/s",
      "queries": {name: sec, ...}, "sf": 0.1, ...}
@@ -20,7 +21,8 @@ measurement is kept.
 
 Env knobs:
     SPARK_GRAFT_SF_DIR        parquet table dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS          local[] parallelism (default 32)
+    SPARK_GRAFT_CPUS          local[] parallelism (default: the CPUs this
+                              process may use, os.sched_getaffinity)
     SPARK_GRAFT_BENCH_LINES   corpus size for the throughput leg (default 2_000_000)
     SPARK_GRAFT_SKIP_QUERIES  set to skip the per-query leg (scaling runs)
     SPARK_GRAFT_STEAL_MAX     steal %% above which a leg re-runs (default 2.0)
@@ -69,15 +71,19 @@ STEAL_MAX = float(os.environ.get("SPARK_GRAFT_STEAL_MAX", "2.0"))
 STEAL_RETRIES = int(os.environ.get("SPARK_GRAFT_STEAL_RETRIES", "2"))
 
 
-def timed(fn, retries: int = STEAL_RETRIES, min_runs: int = 1) -> tuple[float, float, int, list[float]]:
-    """Run ``fn``, return (wall_sec, steal_pct, n_runs, all_walls).
+def timed(
+    fn, retries: int = STEAL_RETRIES, min_runs: int = 1
+) -> tuple[float, float, int, list[float], list[float]]:
+    """Run ``fn``, return (wall_sec, steal_pct, n_runs, all_walls,
+    clean_walls).
 
     Re-runs on a stolen window (keeping the lowest-steal run, NOT the
     fastest — a fast-but-stolen run would still be biased). With
     ``min_runs`` > 1 it always runs at least that many times and
-    reports the MEDIAN wall among steal-clean runs, so the headline
-    number is never a single sample on a host documented to swing
-    ±10% (round-4 review item)."""
+    reports the MEDIAN wall among steal-clean runs (the mean of the two
+    middle walls for an even count; steal is the larger of theirs), so
+    the headline number is never a single sample on a host documented
+    to swing ±10%. ``clean_walls`` are the steal-clean walls, sorted."""
     samples: list[tuple[float, float]] = []  # (wall, steal)
     for i in range(max(min_runs, 1) + retries):
         s0 = _cpu_sample()
@@ -91,10 +97,15 @@ def timed(fn, retries: int = STEAL_RETRIES, min_runs: int = 1) -> tuple[float, f
             break
     clean = sorted(s for s in samples if s[1] <= STEAL_MAX)
     if clean:
-        wall, sp = clean[len(clean) // 2]  # median-wall clean run
+        mid = clean[(len(clean) - 1) // 2 : len(clean) // 2 + 1]
+        wall = sum(w for w, _ in mid) / len(mid)
+        sp = max(s for _, s in mid)
     else:
         wall, sp = min(samples, key=lambda s: s[1])  # least-stolen
-    return wall, sp, len(samples), [round(w, 2) for w, _ in samples]
+    return (
+        wall, sp, len(samples),
+        [round(w, 2) for w, _ in samples], [round(w, 2) for w, _ in clean],
+    )
 
 
 def main() -> int:
@@ -105,7 +116,7 @@ def main() -> int:
         os.environ.setdefault("SPARK_GRAFT_PIPE_RUNS", "1")
         os.environ.setdefault("SPARK_GRAFT_SKIP_QUERIES", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     n_lines = int(os.environ.get("SPARK_GRAFT_BENCH_LINES", "2000000"))
 
     from hnormalise_spark import get_spark
@@ -151,7 +162,9 @@ def main() -> int:
         }
 
     min_runs = int(os.environ.get("SPARK_GRAFT_PIPE_RUNS", "3"))
-    wall, pipe_steal, pipe_runs, pipe_walls = timed(pipeline_leg, min_runs=min_runs)
+    wall, pipe_steal, pipe_runs, pipe_walls, clean_walls = timed(
+        pipeline_leg, min_runs=min_runs
+    )
     lps = n_lines / wall
 
     # --- leg 2: per-query wall clock -----------------------------------
@@ -170,7 +183,7 @@ def main() -> int:
             # numbers also made early-alphabet queries look slower
             # than late ones for no data reason.
             force(fn(spark, sf_dir))
-            w, sp, _, _ = timed(lambda: force(fn(spark, sf_dir)))
+            w, sp, *_ = timed(lambda: force(fn(spark, sf_dir)))
             q_secs[name] = round(w, 3)
             q_steal[name] = sp
 
@@ -188,6 +201,12 @@ def main() -> int:
         "pipeline_steal_pct": pipe_steal,
         "pipeline_runs": pipe_runs,
         "pipeline_walls_sec": pipe_walls,
+        # min / median / max of the steal-clean walls (empty when every
+        # run was stolen and the least-stolen one is reported instead)
+        "pipeline_clean_walls_sec": (
+            {"min": clean_walls[0], "median": round(wall, 2), "max": clean_walls[-1]}
+            if clean_walls else {}
+        ),
         "steal_max_pct": STEAL_MAX,
         "success_lines": n_success,
         "fail_lines": n_lines - n_success,

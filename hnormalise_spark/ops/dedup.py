@@ -418,49 +418,15 @@ def shingle_hashes(text: Column, n: int = 4) -> Column:
     )
 
 
-def _bit_masks() -> Column:
-    return F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
-
-
-def simhash_from_hashes(hashes: Column) -> Column:
-    """60-bit SimHash: bit j of the sketch is the majority vote of bit j
-    across the shingle hashes, weighted ±1.
-
-    ONE pass over the hash array: the fold accumulates an array of 60
-    signed counters (zip_with against a per-element ±1 bit vector), and
-    a final fold turns positive counters into set bits. The per-bit
-    formulation (60 separate aggregate() walks) was 60 re-traversals of
-    the array per row — HOFs evaluate interpreted, so that multiplier
-    was all wall-clock."""
-    masks = _bit_masks()
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, v: F.zip_with(
-            masks,
-            acc,
-            lambda m, c: c + F.when(v.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            masks,
-            lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _simhash_pandas_udf():
-    """Arrow-batched SimHash fold: numpy bit-matrix per document.
+    """Arrow-batched 60-bit SimHash fold: bit j of the sketch is the
+    majority vote of bit j across the shingle hashes, weighted ±1,
+    computed as a numpy bit-matrix per document.
 
-    HOF expressions evaluate interpreted, so even the single-pass
-    zip_with fold pays ~120 interpreted lambda evaluations per shingle;
-    the numpy inner loop is two vectorized ops per document. Identical
-    bit-for-bit to simhash_from_hashes (both are re-derived by the
-    DuckDB oracle)."""
+    HOF expressions evaluate interpreted, so an expression fold pays
+    ~120 interpreted lambda evaluations per shingle; the numpy inner
+    loop is two vectorized ops per document. The DuckDB oracle
+    re-derives the same bits."""
     import numpy as np
     import pandas as pd
 
@@ -468,8 +434,7 @@ def _simhash_pandas_udf():
     def _simhash(hashes: pd.Series) -> pd.Series:
         js = np.arange(SIMHASH_BITS, dtype=np.int64)
         # nullable Int64: a null text yields a null hash array, which
-        # must propagate to a null sketch exactly like the expression
-        # form simhash_from_hashes does (np.asarray(None) would throw
+        # must propagate to a null sketch (np.asarray(None) would throw
         # and kill the task — the whole job — on one bad row)
         out = pd.array([None] * len(hashes), dtype="Int64")
         for i, h in enumerate(hashes):
@@ -484,20 +449,13 @@ def _simhash_pandas_udf():
     return _simhash
 
 
-def simhash64(text: Column, n: int = 4) -> Column:
-    """One-shot SimHash expression (prefer the two-step
-    shingle_hashes → simhash_from_hashes in real plans)."""
-    return simhash_from_hashes(shingle_hashes(text, n))
-
-
 def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 4) -> DataFrame:
     """Bucket by exact SimHash value (cheap near-dup pass for
     boilerplate-heavy corpora); returns per-row sketch + bucket stats.
 
     Shingle hashing stays JVM-side (one md5+conv per shingle); the
     60-bit majority fold runs as a vectorized Arrow batch (see
-    _simhash_pandas_udf — identical values to the pure-expression
-    simhash_from_hashes, ~3x faster end-to-end)."""
+    _simhash_pandas_udf)."""
     w = Window.partitionBy("simhash")
     return (
         df.withColumn("_sh_hashes", shingle_hashes(F.col(text_col), n))
@@ -540,31 +498,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
         )
 
     return let(F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " "), build)
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    candidate_pairs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Jaccard over word n-grams for an explicit candidate-pair set:
-    ``candidate_pairs`` is a DataFrame of (id_a, id_b). Two equi hash
-    joins attach the gram sets — never a cross product. (An earlier
-    signature joined two doc frames on ``id_a < id_b``, which Spark can
-    only plan as a nested-loop/cartesian join; all-pairs verification
-    is exactly what LSH candidate generation exists to avoid — use
-    ``minhash_lsh_dedup`` when no candidate set is available.)"""
-    g = docs.select(
-        F.col(id_col).alias("_id"), word_ngrams(F.col(text_col), n).alias("_g")
-    )
-    return (
-        candidate_pairs.select("id_a", "id_b")
-        .join(g.select(F.col("_id").alias("id_a"), F.col("_g").alias("g_a")), "id_a")
-        .join(g.select(F.col("_id").alias("id_b"), F.col("_g").alias("g_b")), "id_b")
-        .select("id_a", "id_b", jaccard(F.col("g_a"), F.col("g_b")).alias("jaccard"))
-    )
 
 
 # ---------------------------------------------------------------------------

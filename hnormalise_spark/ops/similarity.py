@@ -92,33 +92,6 @@ def lsh_sketch(vec: Column, dim: int, n_planes: int = 12) -> Column:
     return out
 
 
-def ann_lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: score only the rows whose sketch equals the
-    query's sketch (1/2^n_planes of the corpus in expectation). At
-    cluster scale the table is written bucketed/partitioned by sketch →
-    partition pruning makes the probe a single-bucket scan."""
-    dim = len(query_vec)
-    q_sketch_bits = 0
-    for i in range(n_planes):
-        p = _plane(i, dim)
-        if sum(a * b for a, b in zip(query_vec, p)) > 0:
-            q_sketch_bits |= 1 << i
-    sketched = df.withColumn("_sketch", lsh_sketch(F.col(vec_col), dim, n_planes))
-    return (
-        cosine_scores(sketched.filter(F.col("_sketch") == q_sketch_bits), query_vec, vec_col)
-        .select(id_col, "cosine")
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------------
 # persisted ANN index: sketch-partitioned table + pruned probes
 
@@ -185,25 +158,6 @@ def ann_snapshot_probe(
     df = T.read_committed(spark, table_path).filter(F.col("sketch").isin(buckets))
     return cosine_scores(df, query_vec, vec_col).select(
         id_col, "sketch", "cosine"
-    )
-
-
-def ann_snapshot_topk(
-    spark,
-    table_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    probe_radius: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    return (
-        ann_snapshot_probe(
-            spark, table_path, query_vec, n_planes, probe_radius, vec_col, id_col
-        )
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
     )
 
 
@@ -400,14 +354,6 @@ def ivf_index_topk(
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
-
-
-def embedding_stats(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Per-row norm/dim plus corpus aggregates — the sanity profile."""
-    per_row = df.withColumns(
-        {"dim": F.size(F.col(vec_col)), "l2_norm": F.round(norm(F.col(vec_col)), 6)}
-    )
-    return per_row
 
 
 def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -647,7 +593,7 @@ def knn_classify(
     so the pairwise stage is max_test × train: linear in the corpus
     with a fixed constant, the ann_recall shape, never quadratic.
     Classifying an unbounded corpus swaps the candidate stage for the
-    LSH/IVF probes in this module (ann_lsh_topk / ivf_topk) and keeps
+    LSH/IVF probes in this module (ann_index_topk / ivf_index_topk) and keeps
     the identical vote stage.
     """
     base = df.filter(F.col(vec_col).isNotNull()).select(

@@ -210,22 +210,6 @@ def doclen_stats(
     return ranked.groupBy(group_col).agg(*aggs)
 
 
-def analyze(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text profile: counts, ratios, quality, language, print."""
-    t = F.col(text_col)
-    cc = char_class_counts(t)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_bpe_tokens": bpe_ish_token_count(t),
-            **cc,
-            "quality": F.round(quality_score(t), 4),
-            "lang_pred": lang_id(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # BM25 keyword retrieval
 

@@ -1,18 +1,15 @@
-"""Rsyslog logstash-template envelope parser.
+"""Rsyslog logstash-template envelope regexps.
 
-Re-expression of parseRsyslogLogstashString
-(/root/reference/src/HNormalise/Parser.hs:94-131): optional
-``<PRI>version``, RFC3339 timestamp, hostname, syslogtag, literal '-',
-then the message (handed to the payload dispatch).
+Re-expression of parseRsyslogLogstashString (reference
+HNormalise/Parser.hs:94-131): optional ``<PRI>version``, RFC3339
+timestamp, hostname, syslogtag, literal '-', then the message (handed
+to the payload dispatch). ``pipeline._envelope_stage`` runs them.
 
 Template (Parser.hs:62):
 ``<%PRI%>1 %timegenerated:::date-rfc3339% %HOSTNAME% %syslogtag% - %msg%``
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # pri/version digit runs bounded: both feed int casts, and under ANSI
 # an overflowing cast aborts the batch — a 10+-digit "pri" fails the
@@ -26,34 +23,3 @@ RE_RFC3339 = (
     r"^\d{4}-\d{2}-\d{2}[Tt ]\d{2}:\d{2}(:\d{2}(\.\d+)?)?"
     r"([Zz]|[+-]\d{2}:?\d{2})?$"
 )
-
-
-def parse_envelope(line: Column) -> dict[str, Column]:
-    """line → dict of envelope Columns + ``env_ok``.
-
-    ``msg`` is the remainder after the '-' separator; the caller runs
-    payload dispatch on it. (The reference stores only the *consumed*
-    prefix of msg, HNormalise/Parser.hs:107-111; identical except when
-    a torque line carries trailing junk — see SURVEY §7.)
-    """
-
-    def g(i: int) -> Column:
-        return F.regexp_extract(line, RE_ENVELOPE, i)
-
-    ts_raw = g(3)
-    ts = F.when(ts_raw.rlike(RE_RFC3339), ts_raw.cast("timestamp"))
-    env_ok = line.rlike(RE_ENVELOPE) & ts.isNotNull()
-
-    def opt_int(c: Column) -> Column:
-        return F.when(c != "", c.cast("int"))
-
-    return {
-        "pri": F.when(env_ok, opt_int(g(1))),
-        "version": F.when(env_ok, opt_int(g(2))),
-        "timereported": F.when(env_ok, ts),
-        "timereported_raw": F.when(env_ok, ts_raw),
-        "hostname": F.when(env_ok, g(4)),
-        "syslogtag": F.when(env_ok, g(5)),
-        "msg": F.when(env_ok, g(6)),
-        "env_ok": env_ok,
-    }

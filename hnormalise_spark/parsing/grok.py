@@ -145,8 +145,8 @@ class CompiledGrok:
 
     def columns(self, line: Column) -> dict[str, Column]:
         """field → typed Column (null on non-matching rows) plus the
-        boolean ``_grok_ok``. One regex, N group extractions — the same
-        packed-single-pass shape as parse_envelope."""
+        boolean ``_grok_ok``. One regex, one ``regexp_extract`` per
+        field."""
         ok = line.rlike(self.regex)
         out: dict[str, Column] = {}
         for f in self.fields:

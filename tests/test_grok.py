@@ -1,5 +1,6 @@
 """Grok compiler: expansion, group indexing, typing, Spark extraction,
-and parity of a grok-re-expressed envelope against the hand parser."""
+and parity of a grok-re-expressed envelope against the pipeline's
+envelope stage."""
 
 from __future__ import annotations
 
@@ -8,8 +9,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from hnormalise_spark import pipeline as P
 from hnormalise_spark.fixtures import CORPUS
-from hnormalise_spark.parsing.envelope import parse_envelope
 from hnormalise_spark.parsing.grok import (
     CompiledGrok,
     GrokError,
@@ -120,32 +121,32 @@ ENVELOPE_GROK = (
     r"%{NOTSPACE:timereported_raw}\s+%{NOTSPACE:hostname}\s+%{NOTSPACE:syslogtag}"
     r"\s+-\s*%{RESTDOTALL:msg}"
 )
-# the hand parser captures msg in DOTALL mode (fixture lines keep their
-# trailing newline); GREEDYDATA is single-line by the grok standard, so
-# extend the library — which also exercises the extension mechanism
+# the envelope regexp captures msg in DOTALL mode (a message may span
+# lines); GREEDYDATA is single-line by the grok standard, so extend the
+# library — which also exercises the extension mechanism
 ENVELOPE_LIB = {"RESTDOTALL": r"(?s:.*)"}
 
 
 def test_grok_envelope_parity_with_hand_parser(spark):
     """The rsyslog logstash envelope re-expressed as a grok pattern
-    extracts the same fields as parse_envelope on every fixture line
-    the hand parser accepts (the grok variant skips the RFC3339 shape
-    check, so compare on env_ok rows)."""
+    extracts the same fields as the pipeline's envelope stage
+    (pipeline._envelope_stage) on every fixture line that stage accepts
+    (the grok variant skips the RFC3339 shape check, so compare on
+    _env_ok rows). Grok reads the stage's ``_line``: the line it parses,
+    trailing newline stripped."""
     rows = [(i, raw) for (i, _, _, raw) in CORPUS]
     df = spark.createDataFrame(rows, "doc_id string, raw string")
-    env = parse_envelope(F.col("raw"))
-    hand = df.select(
+    hand = P._envelope_stage(df, "raw").select(
         "doc_id",
-        env["env_ok"].alias("env_ok"),
-        *[env[k].alias("h_" + k) for k in
+        "_line",
+        "_env_ok",
+        *[F.col(k).alias("h_" + k) for k in
           ("pri", "version", "timereported_raw", "hostname", "syslogtag", "msg")],
     )
-    both = grok_extract(
-        hand.join(df, "doc_id"), "raw", ENVELOPE_GROK, library=ENVELOPE_LIB
-    )
+    both = grok_extract(hand, "_line", ENVELOPE_GROK, library=ENVELOPE_LIB)
     checked = 0
     for r in both.collect():
-        if not r["env_ok"]:
+        if not r["_env_ok"]:
             continue
         checked += 1
         assert r["grok_ok"], r["doc_id"]

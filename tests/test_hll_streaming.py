@@ -1,4 +1,8 @@
-"""Streaming HLL snapshots: read-time re-max equals the batch sketch."""
+"""Streaming HLL snapshots: read-time re-max equals the batch sketch;
+replays are no-ops."""
+
+import os
+import shutil
 
 from hnormalise_spark import streaming, table as T
 from hnormalise_spark.ops import sketches as SK
@@ -42,3 +46,32 @@ def test_stream_hll_equals_batch_hll(spark, tmp_path):
     ).collect()
     key = lambda r: r.g  # noqa: E731
     assert sorted(est_m, key=key) == sorted(est_b, key=key)
+
+
+def test_replay_with_fresh_checkpoint_is_noop(spark, tmp_path):
+    in_dir = str(tmp_path / "in")
+    sketch_path = str(tmp_path / "hll")
+    for j in range(2):
+        _rows(spark, j * 100, (j + 1) * 100).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    def run():
+        q = streaming.streaming_hll_sketch(
+            spark, in_dir, sketch_path, group_col="g", value_col="v", p=6
+        )
+        q.awaitTermination()
+
+    def merged():
+        return {
+            tuple(r) for r in streaming.read_hll_sketch(spark, sketch_path).collect()
+        }
+
+    run()
+    before = merged()
+    snaps_before = T.committed_snapshot_ids(sketch_path)
+    # lose the checkpoint: every batch replays, write_snapshot no-ops
+    shutil.rmtree(os.path.join(sketch_path, "_ck"))
+    run()
+    assert merged() == before
+    assert T.committed_snapshot_ids(sketch_path) == snaps_before

@@ -1,5 +1,5 @@
-"""Snapshot-manifest table layer, S7 debug sink, Kafka builder,
-windowed watermarked counts."""
+"""Snapshot-manifest table layer, S7 debug sink, windowed watermarked
+counts."""
 
 from __future__ import annotations
 
@@ -94,36 +94,6 @@ def test_debug_sink_prefixes(spark, corpus_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Kafka builder (sandbox: connector jar absent — construction only)
-
-
-def test_kafka_reader_builds(spark):
-    reader = streaming.kafka_stream_reader(spark, "broker:9092", "syslog")
-    # options are set on the builder; load() needs the connector jar,
-    # which this sandbox does not ship — expect the clean
-    # data-source-not-found error, not a crash elsewhere
-    import py4j.protocol
-
-    with pytest.raises(Exception) as ei:
-        reader.load()
-    assert "kafka" in str(ei.value).lower()
-
-
-def test_kafka_decode_shape(spark):
-    # decode_kafka_lines contract, checked against a static frame with
-    # the Kafka source schema
-    df = spark.createDataFrame(
-        [("syslog", 0, 42, bytearray(b"<13>1 2017-05-24T18:01:01+02:00 h t - msg"))],
-        "topic string, partition int, offset long, value binary",
-    )
-    out = streaming.decode_kafka_lines(df)
-    row = out.collect()[0]
-    assert row["doc_id"] == "syslog-0-42"
-    assert row["source"] == "syslog"
-    assert row["raw"].startswith("<13>1 ")
-
-
-# ---------------------------------------------------------------------------
 # windowed watermarked counts (§2.7) — previously untested
 
 
@@ -203,263 +173,3 @@ def test_windowed_counts_drops_late_rows(spark, corpus_dir, tmp_path):
     q2.awaitTermination(300)
     n_after = spark.read.parquet(wc_path).agg(F.sum("n")).collect()[0][0]
     assert n_after == n_before
-
-
-# ---------------------------------------------------------------------------
-# streaming session windows (native session_window, watermarked)
-
-
-def test_streaming_sessions_match_batch_sessionize(spark, corpus_dir, tmp_path):
-    """The streaming session_window aggregation must agree with the
-    batch gap rule (ops.timeseries.sessionize) on every CLOSED
-    session: same (source, session_start, n_events) triples."""
-    from hnormalise_spark.ops import timeseries as T
-
-    out = str(tmp_path / "sess")
-    q = streaming.streaming_sessions(
-        spark, corpus_dir, out, key_col="source", gap="3 minutes", watermark="10 minutes"
-    )
-    q.awaitTermination(300)
-    emitted = spark.read.parquet(os.path.join(out, "sessions"))
-
-    batch = P.normalise_tokens(spark.read.parquet(corpus_dir))
-    ts = F.col("timereported")
-    stamped = batch.filter(ts.isNotNull())
-    sess = T.sessionize(stamped, ts_col="timereported", user_col="source", gap_seconds=180)
-    per = sess.groupBy("source", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("timereported").alias("start"),
-        F.max("timereported").alias("last"),
-    )
-    wm = stamped.agg(F.max(ts) - F.expr("INTERVAL 10 MINUTES")).collect()[0][0]
-    closed = per.filter(
-        F.col("last") + F.expr("INTERVAL 3 MINUTES") <= F.lit(wm)
-    )
-
-    got = {
-        (r["source"], r["session_start"], r["n_events"])
-        for r in emitted.collect()
-    }
-    want = {
-        (r["source"], r["start"], r["n_events"]) for r in closed.collect()
-    }
-    assert got == want and len(got) > 10
-    # session_window end = last event + gap
-    spans = {r["session_start"]: r["session_end"] for r in emitted.collect()}
-    lasts = {r["start"]: r["last"] for r in closed.collect()}
-    for s, e in spans.items():
-        assert (e - lasts[s]).total_seconds() == 180.0
-
-
-# ---------------------------------------------------------------------------
-# custom stateful streaming op: exact dedup via applyInPandasWithState
-
-
-def test_streaming_dedup_bounded_expires_and_readmits(spark, tmp_path):
-    """EventTimeTimeout variant: fingerprints unseen for the TTL are
-    dropped from the state store (bounded state at scale) and a LATER
-    occurrence re-admits. Drives 4 micro-batches whose event times
-    cross a 1-hour TTL and checks (a) the duplicate within the TTL is
-    suppressed, (b) the occurrence after expiry is emitted again,
-    (c) the state row count SHRINKS when the timeout fires."""
-    import time as _time
-
-    from hnormalise_spark.tokenizer import tokenize_pandas
-
-    def _line(hhmm, body):
-        return (
-            f"<13>1 2017-05-24T{hhmm}:00+00:00 host tag - snoopy[7]::  "
-            f"[uid:1 sid:1 tty:(none) cwd:/ filename:/bin/{body}]: /bin/{body}"
-        )
-
-    # ttl = 1h. A and B expire once the watermark (max event time - 1s)
-    # passes their last-seen + 1h: that happens in batch 3 (wm ~13:00
-    # after batch 2 > 11:00). A's batch-4 occurrence is POST-expiry.
-    batches = [
-        [("a0", _line("10:00", "A")), ("a1", _line("10:00", "A")),
-         ("b1", _line("10:00", "B"))],
-        [("c1", _line("13:00", "C"))],
-        [("d1", _line("13:30", "D"))],
-        [("a2", _line("13:40", "A"))],
-    ]
-    src = str(tmp_path / "src_ttl")
-    for rows in batches:
-        df = spark.createDataFrame(rows, "doc_id string, raw string")
-        df.select(
-            "doc_id",
-            tokenize_pandas(F.col("raw")).alias("tokens"),
-            F.length("raw").cast("int").alias("n_tok"),
-            F.lit("snoopy").alias("source"),
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(0.2)  # distinct mtimes: the file source triggers in order
-
-    out = str(tmp_path / "ddb")
-    q = streaming.streaming_dedup_bounded(
-        spark, src, out, ttl_seconds=3600, watermark="1 second", max_files=1
-    )
-    q.awaitTermination(300)
-
-    rows = spark.read.parquet(os.path.join(out, "deduped")).collect()
-    by_doc = {r["doc_id"]: r for r in rows}
-    # batch 1: in-batch dup suppressed, min doc_id kept
-    assert "a0" in by_doc and by_doc["a0"]["n_batch_dups"] == 1
-    assert "a1" not in by_doc
-    # post-expiry occurrence re-admitted with the SAME fingerprint
-    assert "a2" in by_doc
-    assert by_doc["a2"]["fingerprint"] == by_doc["a0"]["fingerprint"]
-    assert {r["doc_id"] for r in rows} == {"a0", "b1", "c1", "d1", "a2"}
-
-    # state store shrank when A and B timed out
-    progress = [p for p in q.recentProgress if p.get("stateOperators")]
-    totals = [p["stateOperators"][0]["numRowsTotal"] for p in progress]
-    removed = sum(p["stateOperators"][0]["numRowsRemoved"] for p in progress)
-    assert removed >= 2
-    assert any(b < a for a, b in zip(totals, totals[1:])), totals
-
-
-def test_streaming_dedup_suppresses_across_microbatches(spark, tmp_path):
-    """Duplicates must be suppressed within a micro-batch AND across
-    micro-batches (the custom state part built-ins cannot express:
-    keeping the kept row's payload + a running duplicate count)."""
-    from hnormalise_spark.tokenizer import tokenize_pandas
-
-    src = str(tmp_path / "src")
-    # 3 single-row-group files -> with max_files=1, 3 micro-batches.
-    # 'alpha beta' appears in batches 1 and 3 (cross-batch dup) and
-    # twice in batch 1 (in-batch dup); 'gamma' only in batch 2.
-    batches = [
-        [("d1", "alpha beta"), ("d0", "alpha beta"), ("d2", "unique one")],
-        [("d3", "gamma delta")],
-        [("d4", "alpha beta"), ("d5", "gamma delta")],
-    ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id string, raw string")
-        df.select(
-            "doc_id",
-            tokenize_pandas(F.col("raw")).alias("tokens"),
-            F.lit(2).alias("n_tok"),
-            F.lit("test").alias("source"),
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "dd")
-    q = streaming.streaming_dedup(spark, src, out, max_files=1)
-    q.awaitTermination(300)
-
-    got = {
-        r["raw"]: (r["doc_id"], r["n_batch_dups"])
-        for r in spark.read.parquet(os.path.join(out, "deduped")).collect()
-    }
-    # each distinct text emitted exactly once, min doc_id of its first
-    # batch kept, in-batch duplicate counted; later batches suppressed
-    assert set(got) == {"alpha beta", "unique one", "gamma delta"}
-    kept_alpha = got["alpha beta"]
-    assert kept_alpha[0] == "d0" and kept_alpha[1] == 1
-    assert got["unique one"] == ("d2", 0)
-    assert got["gamma delta"][1] == 0
-
-
-def test_streaming_dedup_indexed_durable_cross_batch(spark, tmp_path):
-    """Stream dedup through the DURABLE fingerprint index: history
-    dups suppressed, in-batch dups collapsed, a batch-2 repeat of a
-    batch-1 novel row is caught via the index snapshot batch 1
-    committed (no state store involved), and the index grows by
-    exactly the novel fingerprints."""
-    import os
-    import time as _time
-
-    from hnormalise_spark import streaming, table
-    from hnormalise_spark.ops.dedup import build_fingerprint_index
-
-    idx = str(tmp_path / "fpidx")
-    hist = spark.createDataFrame(
-        [("h1", "old doc one"), ("h2", "old doc two")],
-        "doc_id string, text string",
-    )
-    build_fingerprint_index(hist, idx)
-    base_n = table.read_committed(spark, idx).count()
-
-    src = str(tmp_path / "src")
-    batches = [
-        # dup-of-history (normalization-insensitive), novel A (+in-batch dup)
-        [("n1", "  OLD   doc one "), ("n2", "fresh alpha"), ("n3", "fresh  ALPHA")],
-        # cross-batch dup of A (via the index!), novel B
-        [("n4", "fresh alpha"), ("n5", "fresh beta")],
-    ]
-    for rows in batches:
-        spark.createDataFrame(rows, "doc_id string, text string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        _time.sleep(0.2)
-
-    out = str(tmp_path / "out")
-    q = streaming.streaming_dedup_indexed(spark, src, out, idx, max_files=1)
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(os.path.join(out, "deduped")).collect()
-    by_doc = {r["doc_id"]: r for r in got}
-    # only the two genuinely novel docs came through
-    assert set(by_doc) == {"n2", "n5"}
-    assert by_doc["n2"]["n_batch_dups"] == 1  # n3 collapsed in-batch
-    assert by_doc["n5"]["n_batch_dups"] == 0
-    # the index grew by exactly the two novel fingerprints
-    assert table.read_committed(spark, idx).count() == base_n + 2
-
-    # replaying the same input against the SAME index emits nothing
-    out2 = str(tmp_path / "out2")
-    q2 = streaming.streaming_dedup_indexed(spark, src, out2, idx, max_files=1)
-    q2.awaitTermination(300)
-    rep = spark.read.parquet(os.path.join(out2, "deduped"))
-    assert rep.count() == 0
-    assert table.read_committed(spark, idx).count() == base_n + 2
-
-
-def test_failure_rate_alerts_fire_per_window_and_source(spark, tmp_path):
-    """Alert stream: a window/source whose failure fraction exceeds the
-    threshold emits ONE alert row when its window closes; healthy
-    windows and low-volume windows stay silent; the still-open final
-    window is withheld."""
-    from hnormalise_spark.tokenizer import retokenize_col
-
-    def _snoopy(hhmmss, i):
-        return (
-            f"<13>1 2017-05-24T{hhmmss}+00:00 h snoopy[{i}]: - snoopy[{i}]::  "
-            f"[uid:1 sid:1 tty:(none) cwd:/ filename:/bin/x]: /bin/x"
-        )
-
-    def _junk(hhmmss, i):
-        # valid envelope (so timereported exists) with a garbage payload
-        return f"<13>1 2017-05-24T{hhmmss}+00:00 h weird[{i}]: - not parseable {i}"
-
-    rows = []
-    # window 10:00: 12 lines, 4 junk -> 33% > 20% -> ALERT
-    rows += [(f"a{i}", _snoopy("10:00:05", i)) for i in range(8)]
-    rows += [(f"aj{i}", _junk("10:00:06", i)) for i in range(4)]
-    # window 10:05: 12 lines, 1 junk -> 8% -> silent
-    rows += [(f"b{i}", _snoopy("10:05:05", i)) for i in range(11)]
-    rows += [("bj0", _junk("10:05:06", 0))]
-    # window 10:10: 5 lines all junk -> under min_lines -> silent
-    rows += [(f"cj{i}", _junk("10:10:05", i)) for i in range(5)]
-    # window 11:00: watermark pusher (still open -> withheld)
-    rows += [(f"d{i}", _snoopy("11:00:05", i)) for i in range(2)]
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(rows, "doc_id string, raw string").select(
-        "doc_id",
-        retokenize_col("raw").alias("tokens"),
-        F.length("raw").cast("int").alias("n_tok"),
-        F.lit("mixed").alias("source"),
-    ).write.parquet(src)
-
-    out = str(tmp_path / "alerts")
-    q = streaming.failure_rate_alerts(
-        spark, src, out, window="1 minute", watermark="10 minutes",
-        threshold=0.2, min_lines=10,
-    )
-    q.awaitTermination(300)
-
-    alerts = spark.read.parquet(os.path.join(out, "alerts")).collect()
-    assert len(alerts) == 1
-    a = alerts[0]
-    assert a["window"]["start"].minute == 0 and a["window"]["start"].hour == 10
-    assert a["n_lines"] == 12 and a["n_fail"] == 4
-    assert a["fail_rate_x1e6"] == 333333

@@ -21,6 +21,8 @@ sides.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -568,28 +570,35 @@ def q_stream_route_counts(spark: SparkSession, sf: str) -> DataFrame:
     pytest-only assertion: total counts == SUM over micro-batch counts
     == the batch oracle, the reference's running-counter semantics
     (ZeroMQ.hs:69-111)."""
-    import tempfile
-
     from hnormalise_spark.streaming import start_pipeline
 
     tmp = tempfile.mkdtemp(prefix="hn_stream_rc_")
-    in_dir, out_dir = os.path.join(tmp, "in"), os.path.join(tmp, "out")
-    _route_corpus(spark, sf).write.mode("overwrite").parquet(in_dir)
-    q = start_pipeline(
-        spark, in_dir, out_dir, available_now=True, input_format="raw_parquet"
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(os.path.join(out_dir, "counts"))
-        .groupBy("source", "parser", "parse_ok")
-        .agg(F.sum("n").alias("n"))
-        .select(
-            "source",
-            "parser",
-            F.col("parse_ok").cast("int").alias("parse_ok"),
-            F.col("n").cast("long").alias("n"),
+    try:
+        in_dir, out_dir = os.path.join(tmp, "in"), os.path.join(tmp, "out")
+        _route_corpus(spark, sf).write.mode("overwrite").parquet(in_dir)
+        q = start_pipeline(
+            spark, in_dir, out_dir, available_now=True, input_format="raw_parquet"
         )
-    )
+        q.awaitTermination()
+        return _detached(
+            spark.read.parquet(os.path.join(out_dir, "counts"))
+            .groupBy("source", "parser", "parse_ok")
+            .agg(F.sum("n").alias("n"))
+            .select(
+                "source",
+                "parser",
+                F.col("parse_ok").cast("int").alias("parse_ok"),
+                F.col("n").cast("long").alias("n"),
+            )
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _detached(df: DataFrame) -> DataFrame:
+    """``df`` computed now and held by the executors, so the stream
+    witnesses can delete the scratch directory it was read from."""
+    return df.localCheckpoint(eager=True)
 
 
 def q_stream_hll(spark: SparkSession, sf: str) -> DataFrame:
@@ -602,34 +611,37 @@ def q_stream_hll(spark: SparkSession, sf: str) -> DataFrame:
     is exactly what the DuckDB oracle computes — so the driver gate
     witnesses streaming snapshot append + replay-safe merge, not
     just transform parity."""
-    import tempfile
-
     from hnormalise_spark.ops import sketches as SK
     from hnormalise_spark.streaming import read_hll_sketch, streaming_hll_sketch
 
     tmp = tempfile.mkdtemp(prefix="hn_stream_hll_")
-    in_dir, sk_dir = os.path.join(tmp, "in"), os.path.join(tmp, "hll")
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        "event_type", F.col("user_id").cast("long").alias("user_id")
-    )
-    # two files -> two micro-batches: split on a deterministic hash
-    for i in range(2):
-        ev.filter(F.crc32(F.col("user_id").cast("string")) % 2 == i).coalesce(
-            1
-        ).write.mode("append").parquet(in_dir)
-    q = streaming_hll_sketch(
-        spark, in_dir, sk_dir, group_col="event_type",
-        value_col="user_id", p=6,
-    )
-    q.awaitTermination()
-    merged = read_hll_sketch(spark, sk_dir)
-    est = SK.hll_estimate(merged, ["event_type"], p=6)
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("n_exact")
-    )
-    return est.join(F.broadcast(exact), "event_type").select(
-        "event_type", "n_exact", "est_distinct_x1e3"
-    )
+    try:
+        in_dir, sk_dir = os.path.join(tmp, "in"), os.path.join(tmp, "hll")
+        ev = spark.read.parquet(f"{sf}/events.parquet").select(
+            "event_type", F.col("user_id").cast("long").alias("user_id")
+        )
+        # two files -> two micro-batches: split on a deterministic hash
+        for i in range(2):
+            ev.filter(F.crc32(F.col("user_id").cast("string")) % 2 == i).coalesce(
+                1
+            ).write.mode("append").parquet(in_dir)
+        q = streaming_hll_sketch(
+            spark, in_dir, sk_dir, group_col="event_type",
+            value_col="user_id", p=6,
+        )
+        q.awaitTermination()
+        merged = read_hll_sketch(spark, sk_dir)
+        est = SK.hll_estimate(merged, ["event_type"], p=6)
+        exact = ev.groupBy("event_type").agg(
+            F.countDistinct("user_id").cast("long").alias("n_exact")
+        )
+        return _detached(
+            est.join(F.broadcast(exact), "event_type").select(
+                "event_type", "n_exact", "est_distinct_x1e3"
+            )
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -642,41 +654,44 @@ def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     kept id the GLOBAL min and n_batch_dups the global count-1 —
     batch-equal semantics a DuckDB GROUP BY replays exactly (md5 of
     the same lower/trim/space-collapse normalization both sides)."""
-    import tempfile
-
     from hnormalise_spark.ops.dedup import normalized_text
     from hnormalise_spark.streaming import streaming_dedup_rows
 
     tmp = tempfile.mkdtemp(prefix="hn_stream_dd_")
-    in_dir, out_dir = os.path.join(tmp, "in"), os.path.join(tmp, "out")
-    (
-        spark.read.parquet(f"{sf}/documents.parquet")
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.col("text").alias("raw"),
+    try:
+        in_dir, out_dir = os.path.join(tmp, "in"), os.path.join(tmp, "out")
+        (
+            spark.read.parquet(f"{sf}/documents.parquet")
+            .filter(F.col("text").isNotNull())
+            .select(
+                F.col("doc_id").cast("string").alias("doc_id"),
+                F.col("text").alias("raw"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(in_dir)
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(in_dir)
-    )
-    rows = (
-        spark.readStream.schema("doc_id string, raw string")
-        .parquet(in_dir)
-        .select(
-            "doc_id",
-            "raw",
-            F.md5(normalized_text(F.col("raw"))).alias("fingerprint"),
+        rows = (
+            spark.readStream.schema("doc_id string, raw string")
+            .parquet(in_dir)
+            .select(
+                "doc_id",
+                "raw",
+                F.md5(normalized_text(F.col("raw"))).alias("fingerprint"),
+            )
         )
-    )
-    q = streaming_dedup_rows(rows, out_dir)
-    q.awaitTermination()
-    return spark.read.parquet(os.path.join(out_dir, "deduped")).select(
-        "fingerprint",
-        "doc_id",
-        "raw",
-        F.col("n_batch_dups").cast("long").alias("n_batch_dups"),
-    )
+        q = streaming_dedup_rows(rows, out_dir)
+        q.awaitTermination()
+        return _detached(
+            spark.read.parquet(os.path.join(out_dir, "deduped")).select(
+                "fingerprint",
+                "doc_id",
+                "raw",
+                F.col("n_batch_dups").cast("long").alias("n_batch_dups"),
+            )
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _oracle_stream_dedup() -> str:

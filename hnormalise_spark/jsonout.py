@@ -1,16 +1,19 @@
 """JSON output shaping — byte-exact re-expression of the reference's
 aeson encoders (J1-J6 in SURVEY §2.5).
 
-Spark's ``to_json`` can't express two things the aeson encoders do:
-sum-typed values whose JSON *shape* varies per row (LmodJobId is a bare
-int or an object, Lmod/Json.hs:74-76; TorqueJobNode is one of two
-record shapes, Torque/Json.hs:60-62), and per-type null policies
-(generic encoders keep nulls, the hand-written Shorewall encoder omits
-absent fields, Shorewall/Json.hs:56-77). So the encoder is a small
-combinator set over JVM string expressions: each leaf is JSON-escaped
-via ``to_json(array(x))`` (string escaping only, no Python), and
-objects/arrays are concat-assembled with the exact field order of the
-Haskell records.
+A record whose reference encoder is generic (or, like Shorewall's
+hand-written one, only omits absent fields) renders with ONE
+``to_json(struct(...))`` over its fields aliased to the JSON keys, in
+record order: ``ignoreNullFields=false`` keeps nulls as the generic
+aeson encoders do, the default omits them as Shorewall/Json.hs:56-77
+does. What ``to_json`` can't express is a sum-typed value whose JSON
+*shape* varies per row (LmodJobId is a bare int or an object,
+Lmod/Json.hs:74-76; TorqueJobNode is one of two record shapes,
+Torque/Json.hs:60-62; torque's members per entry type). Those, and the
+records that contain them, are concat-assembled from rendered members
+with the exact field order of the Haskell records; each string leaf is
+escaped via ``to_json(array(x))``. Escaping is identical on both paths,
+because both run through Spark's one JSON generator.
 
 Whole-stage codegen is off (session.py), so every task generates the
 Java source of the JSON projection from this expression tree; the
@@ -48,15 +51,6 @@ def jbool(c: Column) -> Column:
     return F.coalesce(F.when(c, "true").otherwise("false"), NULL())
 
 
-def jobj(*pairs: tuple[str, Column]) -> Column:
-    """Object with fixed key order; value columns may be the literal
-    'null' (kept) or NULL (member omitted — concat_ws skips nulls)."""
-    members = [
-        F.when(v.isNotNull(), F.concat(F.lit(f'"{k}":'), v)) for k, v in pairs
-    ]
-    return F.concat(F.lit("{"), F.concat_ws(",", *members), F.lit("}"))
-
-
 def _fold_concat(args: list) -> Column:
     """ONE flat concat, with adjacent string literals pre-merged: the
     per-member ``concat`` + ``concat_ws`` + brace-``concat`` tower
@@ -75,8 +69,7 @@ def _fold_concat(args: list) -> Column:
 def jobjd(*pairs: tuple[str, Column]) -> Column:
     """Dense object — the generic-aeson-encoder case where every member
     is ALWAYS emitted (absent values render as the literal 'null', the
-    rendered columns are never SQL-null). Byte-identical to ``jobj``
-    on such members, but one flat concat instead of ~2N expressions."""
+    rendered columns are never SQL-null), as one flat concat."""
     args = _member_args(*pairs)
     args[0] = "{" + args[0][1:]
     return _fold_concat([*args, "}"])
@@ -85,12 +78,6 @@ def jobjd(*pairs: tuple[str, Column]) -> Column:
 def _member_args(*pairs: tuple[str, Column]) -> list:
     """``,"k":``, v, … — always-present members as flat-concat args."""
     return [a for k, v in pairs for a in (f',"{k}":', v)]
-
-
-def opt(v: Column, rendered: Column) -> Column:
-    """Omit-when-null member (hand-rolled encoders): NULL-out the
-    rendered value when the source value is null."""
-    return F.when(v.isNotNull(), rendered)
 
 
 def jarr(elems: Column) -> Column:
@@ -105,6 +92,22 @@ def guard(struct: Column, rendered: Column) -> Column:
     return F.coalesce(F.when(struct.isNotNull(), rendered), NULL())
 
 
+# generic aeson encoders render Nothing as null rather than omitting it
+_KEEP_NULLS = {"ignoreNullFields": "false"}
+
+
+def jrec(*pairs: tuple[str, Column]) -> Column:
+    """Generic-encoder record with fixed key order as ONE ``to_json``
+    over the values aliased to their keys; null members render null."""
+    return F.to_json(F.struct(*[v.alias(k) for k, v in pairs]), _KEEP_NULLS)
+
+
+def jval(c: Column) -> Column:
+    """A struct (or array of structs) whose field names already are its
+    JSON keys, generic encoder: one ``to_json``, null → 'null'."""
+    return F.coalesce(F.to_json(c, _KEEP_NULLS), NULL())
+
+
 # ---------------------------------------------------------------------------
 # shared pieces
 
@@ -113,11 +116,11 @@ def _job_name(n: Column) -> Column:
     # TorqueJobName generic encoder: number, arrayId, master, cluster
     return guard(
         n,
-        jobjd(
-            ("number", jnum(n["number"])),
-            ("arrayId", jnum(n["array_id"])),
-            ("master", jstr(n["master"])),
-            ("cluster", jstr(n["cluster"])),
+        jrec(
+            ("number", n["number"]),
+            ("arrayId", n["array_id"]),
+            ("master", n["master"]),
+            ("cluster", n["cluster"]),
         ),
     )
 
@@ -125,18 +128,6 @@ def _job_name(n: Column) -> Column:
 def _walltime_secs(w: Column) -> Column:
     # TorqueWalltime.toEncoding → total seconds (Torque/Json.hs:57-58)
     return jnum(w["total_seconds"])
-
-
-def _exec_host(eh: Column) -> Column:
-    return jarr(
-        F.transform(
-            eh,
-            lambda h: jobjd(
-                ("name", jstr(h["name"])),
-                ("cores", jarr(F.transform(h["cores"], lambda c: c.cast("string")))),
-            ),
-        )
-    )
 
 
 def _node_list(nl: Column) -> Column:
@@ -190,12 +181,12 @@ def _resource_request(rr: Column) -> Column:
 def _times(t: Column) -> Column:
     return guard(
         t,
-        jobjd(
-            ("ctime", jnum(t["ctime"])),
-            ("qtime", jnum(t["qtime"])),
-            ("etime", jnum(t["etime"])),
-            ("startTime", jnum(t["start_time"])),
-            ("endTime", jnum(t["end_time"])),
+        jrec(
+            ("ctime", t["ctime"]),
+            ("qtime", t["qtime"]),
+            ("etime", t["etime"]),
+            ("startTime", t["start_time"]),
+            ("endTime", t["end_time"]),
         ),
     )
 
@@ -203,12 +194,12 @@ def _times(t: Column) -> Column:
 def _resource_usage(ru: Column) -> Column:
     return guard(
         ru,
-        jobjd(
-            ("cputime", jnum(ru["cputime"])),
-            ("energy", jnum(ru["energy"])),
-            ("mem", jnum(ru["mem"])),
-            ("vmem", jnum(ru["vmem"])),
-            ("walltime", _walltime_secs(ru["walltime"])),
+        jrec(
+            ("cputime", ru["cputime"]),
+            ("energy", ru["energy"]),
+            ("mem", ru["mem"]),
+            ("vmem", ru["vmem"]),
+            ("walltime", ru["walltime"]["total_seconds"]),
         ),
     )
 
@@ -240,7 +231,9 @@ def torque_json(t: Column) -> Column:
         exit_only(("session", jnum(t["session"]))),
         *_member_args(
             ("times", _times(t["times"])),
-            ("execHost", _exec_host(t["exec_host"])),
+            # array<{name, cores}>; cores never hold a null
+            # (common.host_list builds them with sequence())
+            ("execHost", jval(t["exec_host"])),
             ("resourceRequest", _resource_request(t["resource_request"])),
         ),
         exit_only(
@@ -253,10 +246,7 @@ def torque_json(t: Column) -> Column:
     middle = (
         F.when(et == "TorqueQueueEntry", _fold_concat(_member_args(("queue", jstr(t["queue"])))))
         .when(et == "TorqueDeleteEntry", _fold_concat(_member_args(
-            ("requestor", guard(t["requestor"], jobjd(
-                ("user", jstr(t["requestor"]["user"])),
-                ("whence", jstr(t["requestor"]["whence"])),
-            ))),
+            ("requestor", jval(t["requestor"])),
         )))
         .when(et.isin("TorqueStartEntry", "TorqueExitEntry"), accounting)
         .when(et.isin("TorqueAbortEntry", "TorqueRerunEntry"), F.lit(""))
@@ -286,10 +276,7 @@ def lmod_json(l: Column) -> Column:
     )
     load = _member_args(
         ("userload", jbool(l["userload"])),
-        ("module", guard(l["module"], jobjd(
-            ("name", jstr(l["module"]["name"])),
-            ("version", jstr(l["module"]["version"])),
-        ))),
+        ("module", jval(l["module"])),
         ("filename", jstr(l["filename"])),
     )
     cmd = _member_args(
@@ -302,35 +289,22 @@ def lmod_json(l: Column) -> Column:
 
 
 def snoopy_json(s: Column) -> Column:
-    """Snoopy generic encoder (Snoopy/Json.hs) — nulls kept."""
-    return jobjd(
-        ("pid", jnum(s["pid"])),
-        ("uid", jnum(s["uid"])),
-        ("username", jstr(s["username"])),
-        ("sid", jnum(s["sid"])),
-        ("tty", jstr(s["tty"])),
-        ("cwd", jstr(s["cwd"])),
-        ("executable", jstr(s["executable"])),
-        ("command", jstr(s["command"])),
-    )
+    """Snoopy generic encoder (Snoopy/Json.hs) — nulls kept. The
+    payload's fields are the JSON keys in record order."""
+    return jval(s)
 
 
 def shorewall_json(s: Column) -> Column:
     """Hand-rolled Shorewall encoder (Shorewall/Json.hs:56-77): absent
     optional fields are OMITTED (not null). Deviation: fwdpt under its
-    own key, not the reference's duplicate "fwdst" (a bug, SURVEY §7)."""
-    return jobj(
-        ("fwrule", jstr(s["fwrule"])),
-        ("fwtarget", jstr(s["fwtarget"])),
-        ("fwin", jstr(s["fwin"])),
-        ("fwout", opt(s["fwout"], jstr(s["fwout"]))),
-        ("fwmac", opt(s["fwmac"], jstr(s["fwmac"]))),
-        ("fwsrc", jstr(s["fwsrc"])),
-        ("fwdst", jstr(s["fwdst"])),
-        ("fwproto", jstr(s["fwproto"])),
-        ("fwspt", opt(s["fwspt"], jnum(s["fwspt"]))),
-        ("fwdpt", opt(s["fwdpt"], jnum(s["fwdpt"]))),
-    )
+    own key, not the reference's duplicate "fwdst" (a bug, SURVEY §7).
+
+    The payload's fields are the JSON keys in record order, and the
+    always-emitted members (rule, target, in, src, dst, proto) are
+    regex groups of the matched protocol pattern, never null on a
+    parsed row — so omitting every null member is the reference's
+    policy exactly."""
+    return F.to_json(s)
 
 
 def slurm_json(s: Column) -> Column:
@@ -340,24 +314,24 @@ def slurm_json(s: Column) -> Column:
     of expanded hostnames; absent optionals (cancelled_by, unlimited
     time_limit, work_dir) render as null like the generic encoders."""
     iso = "yyyy-MM-dd'T'HH:mm:ss"
-    return jobjd(
-        ("jobId", jnum(s["job_id"])),
-        ("user", jstr(s["user"])),
-        ("uid", jnum(s["uid"])),
-        ("group", jstr(s["group"])),
-        ("gid", jnum(s["gid"])),
-        ("name", jstr(s["job_name"])),
-        ("jobState", jstr(s["job_state"])),
-        ("cancelledBy", jnum(s["cancelled_by"])),
-        ("partition", jstr(s["partition"])),
-        ("timeLimitMinutes", jnum(s["time_limit_minutes"])),
-        ("startTime", jstr(F.date_format(s["start_time"], iso))),
-        ("endTime", jstr(F.date_format(s["end_time"], iso))),
-        ("durationSeconds", jnum(s["duration_seconds"])),
-        ("nodeList", jarr(F.transform(s["node_list"], jstr))),
-        ("nodeCnt", jnum(s["node_cnt"])),
-        ("procCnt", jnum(s["proc_cnt"])),
-        ("workDir", jstr(s["work_dir"])),
+    return jrec(
+        ("jobId", s["job_id"]),
+        ("user", s["user"]),
+        ("uid", s["uid"]),
+        ("group", s["group"]),
+        ("gid", s["gid"]),
+        ("name", s["job_name"]),
+        ("jobState", s["job_state"]),
+        ("cancelledBy", s["cancelled_by"]),
+        ("partition", s["partition"]),
+        ("timeLimitMinutes", s["time_limit_minutes"]),
+        ("startTime", F.date_format(s["start_time"], iso)),
+        ("endTime", F.date_format(s["end_time"], iso)),
+        ("durationSeconds", s["duration_seconds"]),
+        ("nodeList", s["node_list"]),
+        ("nodeCnt", s["node_cnt"]),
+        ("procCnt", s["proc_cnt"]),
+        ("workDir", s["work_dir"]),
     )
 
 

@@ -262,24 +262,16 @@ def _payload_stage(df: DataFrame) -> DataFrame:
     return df.drop(*intermediates)
 
 
-def normalise_tokens(
-    df: DataFrame, tokens_col: str = "tokens", carry_tokens: bool = False
-) -> DataFrame:
+def normalise_tokens(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Normalise a pre-tokenized input table (BASELINE.json input_hint).
 
     Detokenization is a JVM expression (codepoint → char), so no Python
-    runs anywhere in the parse. By default the token array is
-    DROPPED after detokenization — carrying it through the parse plan
-    costs ~40% of throughput — and the failure sink reconstructs it
-    bit-exactly from ``raw`` (tokenizer.retokenize_col; the codec is an
-    exact inverse for the ASCII corpus). Pass ``carry_tokens=True`` to
-    keep the original array on every row (e.g. non-ASCII codepoints,
-    where the JVM detokenizer is not applicable anyway).
+    runs anywhere in the parse. The input token array rides along
+    unchanged on every row: the failure sink writes it back as the
+    original input (HNormalise.hs:69-73), so a failed row's ``tokens``
+    equals its input array whatever codepoints it holds.
     """
-    out = df.withColumn("raw", detokenize_col(tokens_col))
-    if not carry_tokens:
-        out = out.drop(tokens_col)
-    return normalise(out, "raw")
+    return normalise(df.withColumn("raw", detokenize_col(tokens_col)), "raw")
 
 
 def salted_repartition(

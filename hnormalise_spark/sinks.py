@@ -64,7 +64,12 @@ def with_observed_metrics(parsed: DataFrame, name: str = "hnormalise_metrics") -
 
 def write_staging(parsed: DataFrame, path: str, json_line: bool = False) -> None:
     """One-pass write of the parsed result, partitioned by route so the
-    success/failure scans are partition-pruned (not even a filter).
+    success/failure scans are partition-pruned (not even a filter)."""
+    staging_frame(parsed, json_line).write.mode("overwrite").partitionBy("route").parquet(path)
+
+
+def staging_frame(parsed: DataFrame, json_line: bool = False) -> DataFrame:
+    """The rows ``write_staging`` writes, with their ``route`` column.
 
     The original bytes (tokens/raw) are kept only on FAILURE rows — the
     success contract never includes them, and at 10^12-row scale they
@@ -74,25 +79,27 @@ def write_staging(parsed: DataFrame, path: str, json_line: bool = False) -> None
         out = out.withColumn(
             "json", F.when(F.col("parse_ok"), jsonout.encode_normalised())
         )
-    for c in ("tokens", "raw", "n_tok"):
+    failed = ~F.col("parse_ok")
+    for c in ("raw", "n_tok"):
         if c in out.columns:
-            out = out.withColumn(c, F.when(~F.col("parse_ok"), F.col(c)))
-    if "tokens" not in out.columns and "raw" in out.columns:
-        # token-path parse dropped the array for speed; reconstruct the
-        # original bit-exactly for the failure contract (ASCII codec is
-        # an exact inverse)
+            out = out.withColumn(c, F.when(failed, F.col(c)))
+    if "tokens" in out.columns or "raw" in out.columns:
+        # the input's own array (normalise_tokens carries it); raw-text
+        # input never had one, so derive it from the line. Last data
+        # column either way, so both inputs stage one column order.
         from hnormalise_spark.tokenizer import retokenize_col
 
-        out = out.withColumn(
-            "tokens", F.when(~F.col("parse_ok"), retokenize_col("raw"))
+        tokens = F.col("tokens") if "tokens" in out.columns else retokenize_col("raw")
+        out = out.select(
+            *[c for c in out.columns if c != "tokens"],
+            F.when(failed, tokens).alias("tokens"),
         )
     # Partition directories by route so the sink scans are pruned; keep
     # parse_ok itself as a data column (partition values read back as
     # strings otherwise).
-    out = out.withColumn(
+    return out.withColumn(
         "route", F.when(F.col("parse_ok"), "success").otherwise("failure")
     )
-    out.write.mode("overwrite").partitionBy("route").parquet(path)
 
 
 def write_success(staging: DataFrame, path: str) -> None:

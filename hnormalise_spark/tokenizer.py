@@ -8,7 +8,10 @@ token-array equality invariant checkable end-to-end.
 
 ``detokenize_col`` is a pure JVM expression (``transform`` + ``char``),
 valid for codepoints < 256 (rsyslog lines are ASCII): no Python runs
-per row. ``retokenize_col`` is its exact inverse on that range.
+per row. ``retokenize_col`` is its exact inverse on that range; the
+token pipeline never needs it (``normalise_tokens`` carries the input
+array to the failure sink), so it serves only raw-text input, which has
+no array of its own, and perfbench's trace.
 
 Tokenize (text → codepoints) for the full Unicode range only runs in
 data generation and invariant tests, as a pandas UDF.
@@ -34,10 +37,10 @@ def detokenize_col(tokens: Column | str) -> Column:
 
 def retokenize_col(raw: Column | str) -> Column:
     """JVM-side exact inverse of detokenize_col for codepoints < 256:
-    raw text → codepoint array. Lets the pipeline DROP the bulky token
-    array right after detokenization (carrying a 200-int array through
-    the parse projects costs ~40% of parse throughput) and reconstruct it
-    bit-exactly for the failure sink's original-bytes contract."""
+    raw text → codepoint array, one interpreted lambda call per
+    character. Only for input that has no token array (raw text lines
+    routed to the failure sink, perfbench's trace); token input keeps
+    its own array."""
     col = F.col(raw) if isinstance(raw, str) else raw
     # sequence(1, 0) would DESCEND for empty input — guard to []
     toks = F.transform(

@@ -3,6 +3,10 @@ replays are no-ops."""
 
 import os
 import shutil
+import tempfile
+
+import pytest
+from pyspark.sql import functions as F
 
 from hnormalise_spark import streaming, table as T
 from hnormalise_spark.ops import sketches as SK
@@ -75,3 +79,33 @@ def test_replay_with_fresh_checkpoint_is_noop(spark, tmp_path):
     run()
     assert merged() == before
     assert T.committed_snapshot_ids(sketch_path) == snaps_before
+
+
+def test_stream_hll_witness_removes_its_scratch_dir(spark, monkeypatch):
+    """The registry's stream witness materialises its answer and deletes
+    the directory its stream ran in; the returned frame still reads."""
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
+        pytest.skip("driver testdata fixture not present")
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    df = entry.q_stream_hll(spark, sf)
+    scratch = [d for d in made if os.path.basename(d).startswith("hn_stream_hll_")]
+    assert len(scratch) == 1 and not os.path.exists(scratch[0])
+
+    got = {r["event_type"]: r["n_exact"] for r in df.collect()}
+    exact = (
+        spark.read.parquet(f"{sf}/events.parquet")
+        .groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n"))
+        .collect()
+    )
+    assert got == {r["event_type"]: r["n"] for r in exact}

@@ -4,7 +4,8 @@ Re-expression of /root/reference/src/HNormalise/Config.hs: a config is
 loaded as user ⊕ system ⊕ defaults where the LEFTMOST defined value
 wins per field (Config.hs:231-251; defaults :180-224). Sockets/ports
 become table/sink URIs here; the ``fields`` output projection drives
-jsonout.encode_normalised (Config.hs:205 / Internal.hs:110).
+jsonout.encode_normalised in batch and streaming alike (Config.hs:205 /
+Internal.hs:110).
 
 YAML is optional (import-guarded); dicts/JSON work everywhere.
 """
@@ -21,7 +22,7 @@ from dataclasses import dataclass, field
 class InputConfig:
     # canonical tokenized table (BASELINE.json input_hint) or raw lines
     path: str | None = None
-    format: str = "parquet"           # parquet | text | json (rsyslog %jsonmesg%)
+    format: str = "parquet"           # a key of streaming.INPUTS
 
 
 @dataclass
@@ -30,7 +31,6 @@ class SinkConfig:
     # Config.hs:93-124; durable tables here)
     out_dir: str | None = None
     json_line: bool = True
-    export_sinks: bool = False
 
 
 @dataclass

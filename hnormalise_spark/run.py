@@ -19,17 +19,20 @@ import time
 
 
 def main(argv: list[str] | None = None) -> int:
+    from hnormalise_spark import streaming
+
     ap = argparse.ArgumentParser(description="hnormalise-spark pipeline")
     ap.add_argument("--config", help="user config file (YAML/JSON, monoid-merged over --system-config then defaults)")
     ap.add_argument("--system-config", help="system config file")
-    ap.add_argument("--input", help="input parquet dir (doc_id,tokens,n_tok,source)")
+    ap.add_argument("--input", help="input path, read as --input-format")
     ap.add_argument(
         "--input-format",
-        choices=["parquet", "text", "json"],
+        choices=list(streaming.INPUTS),
         default=None,
-        help="parquet = tokenized sequences (default); text = raw syslog "
-        "files, one line per row (the reference's native input); json = "
-        "rsyslog %%jsonmesg%% lines (batch only)",
+        help="parquet = tokenized sequences (default); raw_parquet = "
+        "parquet of (doc_id, source, raw) lines; text = raw syslog files, "
+        "one line per row (the reference's native input); json = rsyslog "
+        "%%jsonmesg%% lines. Batch and --streaming read every format.",
     )
     ap.add_argument("--output", help="output dir for sinks")
     ap.add_argument("--streaming", action=argparse.BooleanOptionalAction, default=None)
@@ -43,8 +46,8 @@ def main(argv: list[str] | None = None) -> int:
 
     from hnormalise_spark import get_spark
     from hnormalise_spark.config import load_config
-    from hnormalise_spark.pipeline import normalise, normalise_json, normalise_tokens, salted_repartition
-    from hnormalise_spark import sinks, datagen, enrich, streaming
+    from hnormalise_spark.pipeline import salted_repartition
+    from hnormalise_spark import sinks, datagen, enrich
 
     # CLI flags override the merged config chain (user ⊕ system ⊕
     # defaults). None means "not given on the CLI", so explicit falsy
@@ -60,8 +63,8 @@ def main(argv: list[str] | None = None) -> int:
     json_line = cfg.sink.json_line and not args.no_json
     if not args.output:
         ap.error("--output (or sink.out_dir in config) required")
-    if args.streaming and args.input_format == "json":
-        ap.error("json input is batch only")
+    if args.input_format not in streaming.INPUTS:
+        ap.error(f"input.format {args.input_format!r} is not one of {sorted(streaming.INPUTS)}")
 
     spark = get_spark(master=args.master, app_name="hnormalise-run")
     t0 = time.time()
@@ -77,27 +80,21 @@ def main(argv: list[str] | None = None) -> int:
     if args.streaming:
         q = streaming.start_pipeline(
             spark, args.input, args.output, available_now=True,
-            input_format=args.input_format,
+            input_format=args.input_format, fields=cfg.fields,
         )
         q.awaitTermination()
         print(f"streaming drained in {time.time()-t0:.1f}s")
         return 0
 
-    if args.input_format == "parquet":
-        df = spark.read.parquet(args.input)
-    else:
-        df = streaming.read_raw_text(spark, args.input)
+    read_batch, _, parse = streaming.INPUTS[args.input_format]
+    df = read_batch(spark, args.input)
     if args.repartition:
         df = salted_repartition(df, args.repartition, keys=("source",), salt=args.salt)
-    parse = {"parquet": normalise_tokens, "text": normalise, "json": normalise_json}
-    parsed = sinks.with_lineage(parse[args.input_format](df))
+    parsed = sinks.with_lineage(parse(df))
     if args.enrich:
         hm, cm, um = enrich.synth_lookup_tables(spark)
         parsed = enrich.enrich(parsed, hm, cm, um)
-    paths = sinks.run_batch(
-        spark, parsed, args.output, json_line=json_line,
-        export_sinks=cfg.sink.export_sinks,
-    )
+    paths = sinks.run_batch(spark, parsed, args.output, json_line=json_line, fields=cfg.fields)
     n = spark.read.parquet(paths["counts"]).agg({"n": "sum"}).collect()[0][0]
     dt = time.time() - t0
     print(f"normalised {n} lines in {dt:.1f}s ({n/dt:.0f} lines/s) -> {args.output}")

@@ -6,11 +6,12 @@ the equivalent contract is: two routed tables whose row sets partition
 the input, plus a counts table — all derived from ONE parse pass.
 
 Scale design (SURVEY §4b): the parsed result is written once to a
-*staging* table; the success/failure/counts sinks are then cheap
-filtered scans of staging with parquet predicate pushdown on
-``parse_ok`` (the fan-out never re-parses). The staging write doubles
-as the checkpoint: re-running any sink is idempotent, and a resumed
-job skips straight to the unfinished sink (run.py).
+*staging* table partitioned by ``route``; the success and failure
+sinks ARE its ``route=success|failure`` partitions and counts is a
+cheap aggregate scan of it (the fan-out never re-parses). The staging
+write doubles as the checkpoint: re-running any sink is idempotent.
+Batch (``run_batch``) and every streaming micro-batch write it through
+the same ``write_fanout``.
 
 Success rows keep the typed payload structs and (optionally) the
 reference-shaped JSON line; failure rows carry the ORIGINAL input
@@ -26,16 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hnormalise_spark import jsonout
-from hnormalise_spark.pipeline import FAMILIES, counts as _counts
-
-SUCCESS_COLS = [
-    "doc_id", "source", "pri", "version", "timereported", "timereported_raw",
-    "hostname", "syslogtag", "msg", "appname", "parser", "jsonkey",
-    *(fam for fam, *_ in FAMILIES),
-]
-# the original input, untouched (HNormalise.hs:69-73)
-FAILURE_COLS = ["doc_id", "source", "tokens", "n_tok", "raw"]
-LINEAGE_COLS = ["lineage_partition", "lineage_file"]
+from hnormalise_spark.pipeline import counts as _counts
 
 
 def with_lineage(df: DataFrame) -> DataFrame:
@@ -62,14 +54,34 @@ def with_observed_metrics(parsed: DataFrame, name: str = "hnormalise_metrics") -
     )
 
 
-def write_staging(parsed: DataFrame, path: str, json_line: bool = False) -> None:
+def write_staging(
+    parsed: DataFrame, path: str, json_line: bool = True,
+    fields: list[tuple[str, str]] | None = None,
+) -> None:
     """One-pass write of the parsed result, partitioned by route so the
     success/failure scans are partition-pruned (not even a filter)."""
-    staging_frame(parsed, json_line).write.mode("overwrite").partitionBy("route").parquet(path)
+    _write_routed(staging_frame(parsed, json_line, fields), path)
 
 
-def staging_frame(parsed: DataFrame, json_line: bool = False) -> DataFrame:
+def _write_routed(staged: DataFrame, path: str) -> None:
+    staged.write.mode("overwrite").partitionBy("route").parquet(path)
+
+
+def write_fanout(staged: DataFrame, staging_path: str, counts_path: str) -> None:
+    """The fan-out of an already staged frame (``staging_frame``): the
+    route-partitioned staging write, then counts over what it wrote.
+    ``run_batch`` and every streaming micro-batch end here."""
+    _write_routed(staged, staging_path)
+    write_counts(staged.sparkSession.read.parquet(staging_path), counts_path)
+
+
+def staging_frame(
+    parsed: DataFrame, json_line: bool = True,
+    fields: list[tuple[str, str]] | None = None,
+) -> DataFrame:
     """The rows ``write_staging`` writes, with their ``route`` column.
+    ``fields`` is the config's output projection for the JSON line
+    (``jsonout.encode_normalised``).
 
     The original bytes (tokens/raw) are kept only on FAILURE rows — the
     success contract never includes them, and at 10^12-row scale they
@@ -77,7 +89,7 @@ def staging_frame(parsed: DataFrame, json_line: bool = False) -> DataFrame:
     out = with_lineage(parsed) if "lineage_partition" not in parsed.columns else parsed
     if json_line:
         out = out.withColumn(
-            "json", F.when(F.col("parse_ok"), jsonout.encode_normalised())
+            "json", F.when(F.col("parse_ok"), jsonout.encode_normalised(fields))
         )
     failed = ~F.col("parse_ok")
     for c in ("raw", "n_tok"):
@@ -102,17 +114,6 @@ def staging_frame(parsed: DataFrame, json_line: bool = False) -> DataFrame:
     )
 
 
-def write_success(staging: DataFrame, path: str) -> None:
-    """Standalone success table; it carries ``json`` when staging does."""
-    cols = [c for c in (*SUCCESS_COLS, "json", *LINEAGE_COLS) if c in staging.columns]
-    staging.filter(F.col("parse_ok")).select(*cols).write.mode("overwrite").parquet(path)
-
-
-def write_failure(staging: DataFrame, path: str) -> None:
-    cols = [c for c in (*FAILURE_COLS, *LINEAGE_COLS) if c in staging.columns]
-    staging.filter(~F.col("parse_ok")).select(*cols).write.mode("overwrite").parquet(path)
-
-
 def write_counts(staging: DataFrame, path: str) -> None:
     _counts(staging).write.mode("overwrite").parquet(path)
 
@@ -135,8 +136,8 @@ def run_batch(
     parsed: DataFrame,
     out_dir: str,
     json_line: bool = True,
-    export_sinks: bool = False,
     snapshot_id: str | None = None,
+    fields: list[tuple[str, str]] | None = None,
 ) -> dict[str, str]:
     """Staged fan-out: ONE parse pass writes the route-partitioned
     staging table; the success/failure sinks ARE its partitions
@@ -145,9 +146,6 @@ def run_batch(
 
     Each step is idempotent (mode=overwrite), so a crashed run resumes
     by re-invoking: a finished staging write skips straight to counts.
-    Set ``export_sinks`` to additionally materialize standalone
-    success/failure tables (distinct locations/retention), paid as an
-    extra read+write of staging.
 
     ``snapshot_id`` turns the whole fan-out into one snapshot-committed
     unit (table.py — Iceberg-style commit-then-visible): an id already
@@ -162,22 +160,12 @@ def run_batch(
         "failure": os.path.join(out_dir, "staging", "route=failure"),
         "counts": os.path.join(out_dir, "counts"),
     }
-    if export_sinks:
-        # resolve export locations up front so the resume early-return
-        # below hands back the same dict shape as a fresh run
-        paths["success"] = os.path.join(out_dir, "success")
-        paths["failure"] = os.path.join(out_dir, "failure")
     if snapshot_id is not None:
         from hnormalise_spark import table as T
 
         if T.is_committed(out_dir, snapshot_id):
             return paths
-    write_staging(parsed, paths["staging"], json_line=json_line)
-    staging = spark.read.parquet(paths["staging"])
-    write_counts(staging, paths["counts"])
-    if export_sinks:
-        write_failure(staging, paths["failure"])
-        write_success(staging, paths["success"])
+    write_fanout(staging_frame(parsed, json_line, fields), paths["staging"], paths["counts"])
     if snapshot_id is not None:
         T._commit_manifest(
             out_dir, {"snapshot_id": snapshot_id, "paths": paths}

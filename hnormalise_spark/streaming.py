@@ -3,10 +3,10 @@
 The reference is a daemon: an endless ZeroMQ/TCP byte stream with
 graceful shutdown and running counters (reference
 Communication/ZeroMQ.hs:69-111). The Spark-native equivalent is
-readStream → the SAME normalise() transform → foreachBatch running the
-batch fan-out (sinks.write_staging + sinks.write_counts) per
-micro-batch, with exactly-once resume via checkpointLocation
-(north_rule: checkpoint/resume) and windowed watermarked counts for the
+readStream → the SAME parse and staging columns as batch →
+foreachBatch writing the batch fan-out per micro-batch, with
+exactly-once resume via checkpointLocation (north_rule:
+checkpoint/resume) and windowed watermarked counts for the
 time-bucketed variant.
 """
 
@@ -18,19 +18,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from hnormalise_spark.pipeline import normalise_tokens
+from hnormalise_spark.pipeline import normalise, normalise_json, normalise_tokens
 from hnormalise_spark.schemas import INPUT_SCHEMA
 from hnormalise_spark import sinks
 
+MAX_FILES_PER_TRIGGER = 16  # every file stream's micro-batch size
+RAW_SCHEMA = "doc_id string, source string, raw string"
 
-def read_token_stream(spark: SparkSession, in_dir: str, max_files: int = 16) -> DataFrame:
-    """File-based token stream: tail a directory of tokenized-sequence
-    parquet files (the INPUT_SCHEMA shape)."""
+
+def _tail_parquet(spark: SparkSession, in_dir: str, schema: str) -> DataFrame:
     return (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(in_dir)
     )
+
+
+def read_token_stream(spark: SparkSession, in_dir: str) -> DataFrame:
+    """File-based token stream: tail a directory of tokenized-sequence
+    parquet files (the INPUT_SCHEMA shape)."""
+    return _tail_parquet(spark, in_dir, INPUT_SCHEMA)
 
 
 def read_raw_text(spark: SparkSession, path: str, source: str = "file") -> DataFrame:
@@ -55,9 +62,7 @@ def read_raw_text(spark: SparkSession, path: str, source: str = "file") -> DataF
     )
 
 
-def read_raw_text_stream(
-    spark: SparkSession, in_dir: str, source: str = "file", max_files: int = 16
-) -> DataFrame:
+def read_raw_text_stream(spark: SparkSession, in_dir: str, source: str = "file") -> DataFrame:
     """Streaming variant of read_raw_text: tail a directory of raw
     syslog files (the rsyslog omfile → collector handoff). Same output
     shape, so the identical normalise() transform runs on it.
@@ -66,10 +71,7 @@ def read_raw_text_stream(
     lineage id is file + content hash: byte-identical duplicate lines
     in one file share an id (routing/counts never key on doc_id; feed
     a deduplicating op from a coordinate-bearing source instead)."""
-    lines = (
-        spark.readStream.option("maxFilesPerTrigger", max_files)
-        .text(in_dir)
-    )
+    lines = spark.readStream.option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER).text(in_dir)
     return lines.select(
         F.concat_ws(
             "-",
@@ -111,59 +113,63 @@ def read_socket_stream(
     )
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
+
+
+# The one input table, format → (batch reader, stream reader, parse),
+# that run.py and start_pipeline both dispatch through (the reference
+# reads plain or --jsoninput lines on one path, 0mq/Main.hs:215-220).
+# raw_parquet is parquet already in RAW_SCHEMA, the replayable corpus
+# of the stream/batch parity checks; json is text of rsyslog %jsonmesg%.
+INPUTS = {
+    "parquet": (_read_parquet, read_token_stream, normalise_tokens),
+    "raw_parquet": (_read_parquet, lambda spark, d: _tail_parquet(spark, d, RAW_SCHEMA), normalise),
+    "text": (read_raw_text, read_raw_text_stream, normalise),
+    "json": (read_raw_text, read_raw_text_stream, normalise_json),
+}
+
+
 def start_pipeline(
     spark: SparkSession,
     in_dir: str,
     out_dir: str,
     available_now: bool = False,
     input_format: str = "parquet",
+    fields: list[tuple[str, str]] | None = None,
 ) -> StreamingQuery:
     """stream → parse → success/failure/counts per micro-batch.
 
-    foreachBatch runs the batch fan-out on each micro-batch (the
-    reference's two-socket fan-out, Util.hs:74-90), so both modes write
-    the same sink schemas:
+    The parse and ``sinks.staging_frame`` join the stream once, before
+    foreachBatch, so no micro-batch rebuilds an expression; each one
+    writes the batch fan-out (``sinks.write_fanout``; the reference's
+    two-socket fan-out, Util.hs:74-90), so both modes write the same
+    sink schemas:
 
         <out_dir>/staging/batch_id=<id>/route=success|failure
         <out_dir>/counts/batch_id=<id>
 
-    Success rows carry the typed payloads, the JSON line and the lineage
-    columns; failure rows carry the original input (sinks.write_staging).
     Total counts = SUM over batch counts — the reference's *running*
     counter semantics. Restart-safe via the checkpoint: a re-delivered
     batch overwrites its own batch_id partitions, never double-counts.
 
-    ``input_format``: 'parquet' tails tokenized-sequence files;
-    'text' tails raw syslog files (read_raw_text_stream);
-    'raw_parquet' tails parquet files already in the raw input shape
-    (doc_id, source, raw) — the replayable-corpus variant used by the
-    stream/batch parity checks.
+    ``input_format`` is a key of ``INPUTS``; ``fields`` is the JSON
+    line's output projection, as in ``run_batch``.
     """
-    from hnormalise_spark.pipeline import normalise
-
-    if input_format == "text":
-        parsed = sinks.with_observed_metrics(normalise(read_raw_text_stream(spark, in_dir)))
-    elif input_format == "raw_parquet":
-        raw = (
-            spark.readStream.schema("doc_id string, source string, raw string")
-            .option("maxFilesPerTrigger", 16)
-            .parquet(in_dir)
-        )
-        parsed = sinks.with_observed_metrics(normalise(raw))
-    else:
-        parsed = sinks.with_observed_metrics(normalise_tokens(read_token_stream(spark, in_dir)))
+    _, read_stream, parse = INPUTS[input_format]
+    parsed = sinks.with_observed_metrics(parse(read_stream(spark, in_dir)))
+    staged = sinks.staging_frame(parsed, fields=fields)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         part = f"batch_id={batch_id}"
-        staging = os.path.join(out_dir, "staging", part)
-        sinks.write_staging(batch, staging, json_line=True)
-        sinks.write_counts(
-            batch.sparkSession.read.parquet(staging),
+        sinks.write_fanout(
+            batch,
+            os.path.join(out_dir, "staging", part),
             os.path.join(out_dir, "counts", part),
         )
 
     writer = (
-        parsed.writeStream.foreachBatch(_sink)
+        staged.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .queryName("hnormalise")
     )

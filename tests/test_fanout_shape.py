@@ -1,6 +1,7 @@
 """Output shape of the parse and the batch fan-out: no intermediate
-columns leak, the exported success table keeps every family payload,
-and run.py honours the sink and input settings of its config file."""
+columns leak, the success sink (the ``route=success`` staging
+partition) keeps every family payload, and run.py honours the sink,
+input and ``fields`` settings of its config file."""
 
 from __future__ import annotations
 
@@ -30,7 +31,8 @@ def test_normalise_outputs_have_no_intermediate_columns(corpus_df):
 
 
 def test_export_success_keeps_slurm_payload(spark, corpus_df, tmp_path):
-    paths = sinks.run_batch(spark, P.normalise(corpus_df), str(tmp_path / "out"), export_sinks=True)
+    paths = sinks.run_batch(spark, P.normalise(corpus_df), str(tmp_path / "out"))
+    assert paths["success"].endswith(os.path.join("staging", "route=success"))
     success = spark.read.parquet(paths["success"])
     assert {fam for fam, *_ in P.FAMILIES} <= set(success.columns)
     slurm = success.filter(F.col("jsonkey") == "slurm")
@@ -49,11 +51,11 @@ def test_run_main_honours_config(spark, tmp_path, monkeypatch):
     cfg = tmp_path / "user.json"
     cfg.write_text(json.dumps({
         "input": {"path": str(log), "format": "text"},
-        "sink": {"out_dir": str(out), "json_line": False, "export_sinks": True},
+        "sink": {"out_dir": str(out), "json_line": False},
     }))
     assert run.main(["--config", str(cfg)]) == 0
-    for sink in ("success", "failure"):
-        assert os.path.isdir(out / sink)
+    for route in ("success", "failure"):
+        assert os.path.isdir(out / "staging" / f"route={route}")
     assert "json" not in spark.read.parquet(str(out / "staging")).columns
     counts = spark.read.parquet(str(out / "counts"))
     assert counts.filter("parse_ok").agg(F.sum("n")).first()[0] > 0
@@ -64,3 +66,40 @@ def test_run_main_honours_config(spark, tmp_path, monkeypatch):
     counts2 = spark.read.parquet(str(out2 / "counts"))
     assert counts2.filter("parse_ok").count() == 0
     assert counts2.agg(F.sum("n")).first()[0] == len(LINES)
+
+
+def test_run_main_applies_fields_config(spark, tmp_path, monkeypatch):
+    """The config's ``fields`` projection shapes the success JSON line:
+    ``<jsonkey>`` first, then the configured out-keys in their order
+    (Json.hs:94-96)."""
+    import hnormalise_spark
+    from hnormalise_spark import run
+
+    monkeypatch.setattr(hnormalise_spark, "get_spark", lambda **_: spark)
+    log = tmp_path / "syslog.log"
+    log.write_text("\n".join(LINES) + "\n")
+    out = tmp_path / "out"
+    cfg = tmp_path / "user.json"
+    fields = [["@source_host", "hostname"], ["message", "msg"], ["level", "pri"]]
+    cfg.write_text(json.dumps({
+        "input": {"path": str(log), "format": "text"},
+        "sink": {"out_dir": str(out)},
+        "fields": fields,
+    }))
+    assert run.main(["--config", str(cfg)]) == 0
+    rows = spark.read.parquet(str(out / "staging" / "route=success")).select("jsonkey", "json").collect()
+    assert rows
+    for r in rows:
+        assert list(json.loads(r["json"])) == [r["jsonkey"], *(k for k, _ in fields)]
+
+
+def test_run_main_rejects_unknown_config_format(tmp_path):
+    """A config's input.format bypasses argparse's choices; run.py
+    rejects one outside the input table before starting Spark."""
+    from hnormalise_spark import run
+
+    cfg = tmp_path / "user.json"
+    cfg.write_text(json.dumps({"input": {"path": "x", "format": "xml"}, "sink": {"out_dir": "y"}}))
+    with pytest.raises(SystemExit) as e:
+        run.main(["--config", str(cfg)])
+    assert e.value.code == 2

@@ -121,9 +121,9 @@ def test_manifest_commit_concurrent_writers_lose_nothing(tmp_path):
 
 
 def test_run_batch_resume_returns_export_paths(spark, tmp_path):
-    """ADVICE: the resume early-return previously omitted the
-    success/failure export keys — a caller reading paths['success']
-    after a resume got a KeyError."""
+    """A resumed run (its snapshot already committed) returns the same
+    paths dict as the first run, so a caller can read
+    ``paths['success']`` after a resume without a KeyError."""
     from hnormalise_spark import pipeline as P
     from hnormalise_spark import sinks
     from hnormalise_spark.fixtures import CORPUS
@@ -134,11 +134,11 @@ def test_run_batch_resume_returns_export_paths(spark, tmp_path):
     )
     parsed = P.normalise(df)
     out = str(tmp_path / "out")
-    first = sinks.run_batch(spark, parsed, out, export_sinks=True, snapshot_id="s1")
-    resumed = sinks.run_batch(spark, parsed, out, export_sinks=True, snapshot_id="s1")
+    first = sinks.run_batch(spark, parsed, out, snapshot_id="s1")
+    resumed = sinks.run_batch(spark, parsed, out, snapshot_id="s1")
     assert resumed == first
-    assert resumed["success"].endswith("/success")
-    assert resumed["failure"].endswith("/failure")
+    assert resumed["success"].endswith("/route=success")
+    assert resumed["failure"].endswith("/route=failure")
 
 
 # ---------------------------------------------------------------------------

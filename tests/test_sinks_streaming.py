@@ -2,13 +2,17 @@
 
 Checks the north-rule contracts: per-sink routed-row set equality,
 failure sink carries originals (token-array equality), counts match,
-streaming foreachBatch produces the same routed sets as batch, and
-enrichment joins are broadcast (no shuffle of the fact side).
+streaming foreachBatch produces the same routed sets as batch (token
+and rsyslog JSON input alike, with the staging columns built once per
+query), and enrichment joins are broadcast (no shuffle of the fact
+side).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -213,3 +217,78 @@ def test_read_raw_text_stream_routes(spark, tmp_path):
     n_fail = sum(1 for (_, _, p, l) in CORPUS if l and "\n" not in l and p is None)
     assert got[False] == n_fail
     assert got[True] == len(lines) - n_fail
+
+
+def _jsonmesg(line: str) -> str:
+    """A fixture syslog line as an rsyslog %jsonmesg% object; a line
+    with no envelope stays as it is (bad JSON routes to failure)."""
+    m = re.fullmatch(r"<(\d+)>(\d+) (\S+) (\S+) (\S+) - (.*)", line)
+    if m is None:
+        return line
+    pri, version, ts, host, tag, msg = m.groups()
+    return json.dumps({
+        "msg": msg, "timereported": ts, "hostname": host, "syslogtag": tag,
+        "inputname": "imtcp", "fromhost": host, "fromhost-ip": "10.0.0.1",
+        "pri": int(pri), "version": int(version), "syslogfacility": "1",
+        "syslogseverity": "5", "timegenerated": ts, "programname": tag.rstrip(":"),
+        "protocol-version": "1", "app-name": tag.rstrip(":"), "procid": "-",
+    })
+
+
+# more files than one trigger takes, so the drain needs two micro-batches
+JSON_FILES = streaming.MAX_FILES_PER_TRIGGER + 2
+
+
+@pytest.fixture(scope="module")
+def json_stream(spark, tmp_path_factory):
+    """FX.CORPUS as %jsonmesg% lines spread over JSON_FILES files,
+    drained by ``start_pipeline(input_format="json")`` while counting
+    the ``encode_normalised`` builds."""
+    from hnormalise_spark import jsonout
+    from hnormalise_spark.fixtures import CORPUS
+
+    lines = [_jsonmesg(l) for (_, _, _, l) in CORPUS if l and "\n" not in l]
+    in_dir = tmp_path_factory.mktemp("json_in")
+    for i in range(JSON_FILES):
+        (in_dir / f"part-{i:02d}.json").write_text("\n".join(lines[i::JSON_FILES]) + "\n")
+    out = str(tmp_path_factory.mktemp("json_out"))
+    builds = []
+    encode = jsonout.encode_normalised
+
+    def counted(*args, **kwargs):
+        builds.append(1)
+        return encode(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(jsonout, "encode_normalised", counted)
+        q = streaming.start_pipeline(spark, str(in_dir), out, available_now=True, input_format="json")
+        q.awaitTermination(300)
+    return str(in_dir), out, len(builds)
+
+
+def test_json_stream_counts_match_batch(spark, json_stream, tmp_path):
+    """``--streaming --input-format json`` drains and routes like batch:
+    summed per-batch counts equal run_batch's on the same lines."""
+    in_dir, out, _ = json_stream
+    assert len(os.listdir(os.path.join(out, "counts"))) >= 2
+    key = ("source", "parser", "parse_ok")
+    summed = {
+        tuple(r[k] for k in key): r["n"]
+        for r in spark.read.parquet(os.path.join(out, "counts"))
+        .groupBy(*key).agg(F.sum("n").alias("n")).collect()
+    }
+    paths = sinks.run_batch(
+        spark, P.normalise_json(streaming.read_raw_text(spark, in_dir)), str(tmp_path / "out")
+    )
+    batch = {tuple(r[k] for k in key): r["n"] for r in spark.read.parquet(paths["counts"]).collect()}
+    assert summed == batch
+    assert sum(n for (_, _, ok), n in batch.items() if ok) > 0
+    assert sum(n for (_, _, ok), n in batch.items() if not ok) > 0
+
+
+def test_stream_builds_staging_once(json_stream):
+    """The staging columns join the stream once, before foreachBatch:
+    a multi-batch drain builds the JSON expression exactly once."""
+    _, out, builds = json_stream
+    assert len(os.listdir(os.path.join(out, "counts"))) >= 2
+    assert builds == 1

@@ -27,6 +27,8 @@ key (Shorewall/Json.hs:76 — a bug); we emit "fwdpt" (SURVEY §7).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -397,7 +399,8 @@ def encode_normalised(fields: list[tuple[str, str]] | None = None) -> Column:
             rendered = '""'
         else:
             rendered = "null"  # M.lookupDefault Null (Json.hs:95)
-        args.append(f',"{out_key}":')
+        # an out-key is config text: escape it as aeson escapes keys
+        args.append("," + json.dumps(out_key, ensure_ascii=False) + ":")
         args.append(rendered)
     args.append("}")
     return _fold_concat(args)

@@ -77,23 +77,23 @@ def main(argv: list[str] | None = None) -> int:
     if not args.input:
         ap.error("--input required unless --generate")
 
-    if args.streaming:
-        q = streaming.start_pipeline(
-            spark, args.input, args.output, available_now=True,
-            input_format=args.input_format, fields=cfg.fields,
-        )
-        q.awaitTermination()
-        print(f"streaming drained in {time.time()-t0:.1f}s")
-        return 0
-
-    read_batch, _, parse = streaming.INPUTS[args.input_format]
-    df = read_batch(spark, args.input)
+    # one path for both modes: only the reader and the fan-out differ
+    read_batch, read_stream, parse = streaming.INPUTS[args.input_format]
+    df = (read_stream if args.streaming else read_batch)(spark, args.input)
     if args.repartition:
         df = salted_repartition(df, args.repartition, keys=("source",), salt=args.salt)
     parsed = sinks.with_lineage(parse(df))
     if args.enrich:
         hm, cm, um = enrich.synth_lookup_tables(spark)
         parsed = enrich.enrich(parsed, hm, cm, um)
+
+    if args.streaming:
+        streaming.stream_fanout(
+            parsed, args.output, available_now=True, json_line=json_line, fields=cfg.fields
+        ).awaitTermination()
+        print(f"streaming drained in {time.time()-t0:.1f}s")
+        return 0
+
     paths = sinks.run_batch(spark, parsed, args.output, json_line=json_line, fields=cfg.fields)
     n = spark.read.parquet(paths["counts"]).agg({"n": "sum"}).collect()[0][0]
     dt = time.time() - t0

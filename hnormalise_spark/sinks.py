@@ -54,13 +54,10 @@ def with_observed_metrics(parsed: DataFrame, name: str = "hnormalise_metrics") -
     )
 
 
-def write_staging(
-    parsed: DataFrame, path: str, json_line: bool = True,
-    fields: list[tuple[str, str]] | None = None,
-) -> None:
+def write_staging(parsed: DataFrame, path: str, json_line: bool = True) -> None:
     """One-pass write of the parsed result, partitioned by route so the
     success/failure scans are partition-pruned (not even a filter)."""
-    _write_routed(staging_frame(parsed, json_line, fields), path)
+    _write_routed(staging_frame(parsed, json_line), path)
 
 
 def _write_routed(staged: DataFrame, path: str) -> None:

@@ -136,15 +136,27 @@ def start_pipeline(
     out_dir: str,
     available_now: bool = False,
     input_format: str = "parquet",
+) -> StreamingQuery:
+    """Tail ``in_dir`` as ``input_format`` (a key of ``INPUTS``), parse
+    it and ``stream_fanout`` the result to ``out_dir``."""
+    _, read_stream, parse = INPUTS[input_format]
+    return stream_fanout(parse(read_stream(spark, in_dir)), out_dir, available_now)
+
+
+def stream_fanout(
+    parsed: DataFrame,
+    out_dir: str,
+    available_now: bool = False,
+    json_line: bool = True,
     fields: list[tuple[str, str]] | None = None,
 ) -> StreamingQuery:
-    """stream → parse → success/failure/counts per micro-batch.
+    """The streaming ``sinks.run_batch``: parsed stream →
+    success/failure/counts per micro-batch.
 
-    The parse and ``sinks.staging_frame`` join the stream once, before
-    foreachBatch, so no micro-batch rebuilds an expression; each one
-    writes the batch fan-out (``sinks.write_fanout``; the reference's
-    two-socket fan-out, Util.hs:74-90), so both modes write the same
-    sink schemas:
+    ``sinks.staging_frame`` joins the stream once, before foreachBatch,
+    so no micro-batch rebuilds an expression; each one writes the batch
+    fan-out (``sinks.write_fanout``; the reference's two-socket fan-out,
+    Util.hs:74-90), so both modes write the same sink schemas:
 
         <out_dir>/staging/batch_id=<id>/route=success|failure
         <out_dir>/counts/batch_id=<id>
@@ -152,20 +164,14 @@ def start_pipeline(
     Total counts = SUM over batch counts — the reference's *running*
     counter semantics. Restart-safe via the checkpoint: a re-delivered
     batch overwrites its own batch_id partitions, never double-counts.
-
-    ``input_format`` is a key of ``INPUTS``; ``fields`` is the JSON
-    line's output projection, as in ``run_batch``.
+    ``json_line`` and ``fields`` shape the JSON line as in ``run_batch``.
     """
-    _, read_stream, parse = INPUTS[input_format]
-    parsed = sinks.with_observed_metrics(parse(read_stream(spark, in_dir)))
-    staged = sinks.staging_frame(parsed, fields=fields)
+    staged = sinks.staging_frame(sinks.with_observed_metrics(parsed), json_line, fields)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         part = f"batch_id={batch_id}"
         sinks.write_fanout(
-            batch,
-            os.path.join(out_dir, "staging", part),
-            os.path.join(out_dir, "counts", part),
+            batch, os.path.join(out_dir, "staging", part), os.path.join(out_dir, "counts", part)
         )
 
     writer = (

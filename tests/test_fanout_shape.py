@@ -68,6 +68,17 @@ def test_run_main_honours_config(spark, tmp_path, monkeypatch):
     assert counts2.agg(F.sum("n")).first()[0] == len(LINES)
 
 
+# the out-keys are config text, so one needs JSON escaping
+FIELDS = [["@source_host", "hostname"], ["message", "msg"], ["level", "pri"], ['a"b\\c\td', "appname"]]
+
+
+def _assert_fields_order(staged):
+    rows = staged.filter("route = 'success'").select("jsonkey", "json").collect()
+    assert rows
+    for r in rows:
+        assert list(json.loads(r["json"])) == [r["jsonkey"], *(k for k, _ in FIELDS)]
+
+
 def test_run_main_applies_fields_config(spark, tmp_path, monkeypatch):
     """The config's ``fields`` projection shapes the success JSON line:
     ``<jsonkey>`` first, then the configured out-keys in their order
@@ -80,17 +91,40 @@ def test_run_main_applies_fields_config(spark, tmp_path, monkeypatch):
     log.write_text("\n".join(LINES) + "\n")
     out = tmp_path / "out"
     cfg = tmp_path / "user.json"
-    fields = [["@source_host", "hostname"], ["message", "msg"], ["level", "pri"]]
     cfg.write_text(json.dumps({
         "input": {"path": str(log), "format": "text"},
         "sink": {"out_dir": str(out)},
-        "fields": fields,
+        "fields": FIELDS,
     }))
     assert run.main(["--config", str(cfg)]) == 0
-    rows = spark.read.parquet(str(out / "staging" / "route=success")).select("jsonkey", "json").collect()
-    assert rows
-    for r in rows:
-        assert list(json.loads(r["json"])) == [r["jsonkey"], *(k for k, _ in fields)]
+    _assert_fields_order(spark.read.parquet(str(out / "staging")))
+
+
+def test_run_main_streaming_applies_sink_config(spark, tmp_path, monkeypatch):
+    """--streaming takes the same sink settings as batch: the ``fields``
+    projection shapes the JSON line, and --no-json drops it."""
+    import hnormalise_spark
+    from hnormalise_spark import run
+
+    monkeypatch.setattr(hnormalise_spark, "get_spark", lambda **_: spark)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "syslog.log").write_text("\n".join(LINES) + "\n")
+    cfg = tmp_path / "user.json"
+    cfg.write_text(json.dumps({
+        "input": {"path": str(in_dir), "format": "text"},
+        "run": {"streaming": True},
+        "fields": FIELDS,
+    }))
+    out = tmp_path / "out"
+    assert run.main(["--config", str(cfg), "--output", str(out)]) == 0
+    _assert_fields_order(spark.read.parquet(str(out / "staging")))
+
+    out2 = tmp_path / "out2"
+    assert run.main(["--config", str(cfg), "--output", str(out2), "--no-json"]) == 0
+    staged = spark.read.parquet(str(out2 / "staging"))
+    assert staged.count() == len(LINES)
+    assert "json" not in staged.columns
 
 
 def test_run_main_rejects_unknown_config_format(tmp_path):

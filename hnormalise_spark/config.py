@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import dataclasses
 import json
-import os
 from dataclasses import dataclass, field
 
 
@@ -78,11 +77,10 @@ def merge_configs(*layers: dict) -> PipelineConfig:
 
 
 def load_config(user_path: str | None = None, system_path: str | None = None) -> PipelineConfig:
-    """Load + merge config files (YAML if available, else JSON)."""
-    layers = []
-    for p in (user_path, system_path):
-        if p and os.path.exists(p):
-            layers.append(_read_file(p))
+    """Load + merge config files (YAML if available, else JSON). A
+    path that does not exist raises FileNotFoundError: skipping it
+    would silently drop the user's ``fields`` and sink settings."""
+    layers = [_read_file(p) for p in (user_path, system_path) if p]
     return merge_configs(*layers) if layers else PipelineConfig()
 
 

@@ -1,11 +1,15 @@
 """Similarity search over an embedding column (array<float>).
 
-* Brute-force cosine scoring/top-k — the exact baseline. The score is
-  a JVM expression (zip_with + aggregate in double); top-k is a single
-  TakeOrderedAndProject (no full sort shuffle).
+* Brute-force cosine scoring — the exact baseline. The score is a JVM
+  expression (zip_with + aggregate in double).
 * LSH-bucketed ANN — the scale path: sign-bit sketches against
   deterministic md5-derived hyperplanes bucket the corpus; queries
   probe only their bucket. Recall/latency trade via n_planes.
+* IVF ANN — centroid lists; a probe scans only the nprobe nearest.
+
+Each index layout has one probe, in the registry query that builds it
+(``ops/entry.q_similarity_ann_indexed``, ``q_similarity_ann_multiprobe``
+via ``ann_snapshot_probe``, ``q_similarity_ivf``).
 """
 
 from __future__ import annotations
@@ -34,8 +38,8 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     # try_divide: a zero vector has no defined cosine — it must score
-    # null (cosine_topk filters nulls out), not abort the batch (this
-    # session runs ANSI, where even double division by zero throws)
+    # null, not abort the batch (this session runs ANSI, where even
+    # double division by zero throws)
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
@@ -46,23 +50,6 @@ def cosine_scores(
     the query is a literal in the plan, no join, no shuffle)."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return df.withColumn("cosine", cosine(F.col(vec_col), q))
-
-
-def cosine_topk(
-    df: DataFrame, query_vec: list[float], k: int = 10, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Exact top-k by cosine: orderBy+limit compiles to
-    TakeOrderedAndProject (per-partition heap + driver merge — no
-    global sort shuffle; verify in .explain). Null scores (zero
-    vectors — cosine undefined) are filtered so every returned row is a
-    real match even when fewer than k rows score."""
-    return (
-        cosine_scores(df, query_vec, vec_col)
-        .select(id_col, "cosine")
-        .filter(F.col("cosine").isNotNull())
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -189,29 +176,6 @@ def hamming_ball(sketch: int, n_planes: int, radius: int = 0) -> list[int]:
     return sorted(out)
 
 
-def ann_index_topk(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    probe_radius: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a build_ann_index table: prune to the query's hamming-ball
-    buckets (partition filter — check PartitionFilters in .explain),
-    score only those rows, local top-k."""
-    buckets = hamming_ball(query_sketch(query_vec, n_planes), n_planes, probe_radius)
-    df = spark.read.parquet(index_path).filter(F.col("sketch").isin(buckets))
-    return (
-        cosine_scores(df, query_vec, vec_col)
-        .select(id_col, "sketch", "cosine")
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: centroid lists + partition-pruned probes
 #
@@ -309,51 +273,6 @@ def ivf_probe_lists(
         cos = sum(a * b for a, b in zip(query_vec, cvec)) / (qn * cn)
         scored.append((-cos, cid))
     return [cid for _, cid in sorted(scored)[:nprobe]]
-
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    stride: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Assign every vector to its list and persist PARTITIONED BY
-    list_id — probes prune to their nprobe list directories at the
-    file listing, exactly like the LSH index. Returns the centroids
-    (the probe side needs them)."""
-    cents = ivf_centroids(df, stride, id_col, vec_col)
-    # repartition on the partition column before the dynamic-partition
-    # write: without it every task writes a sliver of every list
-    # (tasks x nlist tiny files — measured 1209 files / 20 s at nlist=55;
-    # at real scale it is THE small-files failure mode). With it each
-    # list is written by exactly one task: nlist files, one per list.
-    ivf_assign(df, cents, vec_col).repartition("list_id").write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(path)
-    return cents
-
-
-def ivf_index_topk(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe an IVF index: scan only the nprobe nearest lists
-    (PartitionFilters), exact cosine within, local top-k."""
-    lists = ivf_probe_lists(query_vec, centroids, nprobe)
-    df = spark.read.parquet(index_path).filter(F.col("list_id").isin(lists))
-    return (
-        cosine_scores(df, query_vec, vec_col)
-        .select(id_col, "list_id", "cosine")
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
 
 
 def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -592,9 +511,9 @@ def knn_classify(
     (md5 top-S of the held-out split — deterministic on any engine),
     so the pairwise stage is max_test × train: linear in the corpus
     with a fixed constant, the ann_recall shape, never quadratic.
-    Classifying an unbounded corpus swaps the candidate stage for the
-    LSH/IVF probes in this module (ann_index_topk / ivf_index_topk) and keeps
-    the identical vote stage.
+    Classifying an unbounded corpus swaps the candidate stage for an
+    LSH/IVF probe (see the module docstring) and keeps the identical
+    vote stage.
     """
     base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("_id"),

@@ -1,12 +1,10 @@
-"""Deterministic mergeable cardinality / overlap sketches (k-mins).
+"""Deterministic cardinality / overlap sketches (k-mins).
 
 The bottom-k family (KMV, k-mins, HLL) is the standard answer to
-"distinct users per key over 100 TB, refreshed daily, without
-re-scanning history": a tiny per-group summary that (a) estimates
-cardinality with bounded relative error and (b) MERGES — the sketch
-of a union is an elementwise function of the parts' sketches, so
-per-shard / per-day / per-partition sketches combine associatively
-and raw data is touched exactly once.
+"distinct users per key over 100 TB": a tiny per-group summary that
+estimates cardinality with bounded relative error and is built by an
+associative aggregate, so per-partition partials combine map-side and
+raw data is touched exactly once.
 
 This module implements the k-mins variant because every step stays
 inside integer JVM expressions and is re-derivable by an independent
@@ -17,7 +15,7 @@ SQL engine (the repo's DuckDB oracle gate):
   fingerprint in this repo — see ops/sampling.key_hash_unit).
 - Per group, keep the MIN of each of the k hash streams: a k-vector
   of 60-bit integers. ``min`` is associative/commutative/idempotent,
-  hence mergeable and insensitive to partitioning, input order, and
+  hence insensitive to partitioning, input order, and
   duplicates (dedup is free — the same value always hashes the same).
 - Cardinality: for n distinct values, each scaled min is ~Beta(1, n),
   E[u_min] = 1/(n+1), so the MLE over k independent minimums is
@@ -89,8 +87,7 @@ def kmin_sketch(
 
     Returned shape: group_cols + (i int, min_hash long) — the "rows"
     representation rather than an array column, because it is the
-    natural input to the min-merge (union + re-min), joins, and the
-    oracle, and Spark's partial aggregation already compacts it
+    natural input to joins and the oracle, and Spark's partial aggregation already compacts it
     map-side.
     """
     if k < 8:
@@ -133,18 +130,6 @@ def kmin_sketch(
             "i", "min_hash"
         ),
     )
-
-
-def kmin_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the same k: the sketch of the union
-    of the underlying value sets. Pure union + re-min — associative,
-    commutative, idempotent, so daily/shard sketches fold in any
-    order. Columns must match (group_cols + i + min_hash)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    group_cols = [c for c in out.columns if c not in ("i", "min_hash")]
-    return out.groupBy(*group_cols, "i").agg(F.min("min_hash").alias("min_hash"))
 
 
 def kmin_estimate(sketch: DataFrame, group_cols: list[str], k: int) -> DataFrame:
@@ -209,7 +194,7 @@ def kmin_jaccard(sketch: DataFrame, group_col: str, k: int) -> DataFrame:
     )
 
 
-# --- count-min: mergeable frequency sketch ---------------------------------
+# --- count-min: frequency sketch -------------------------------------------
 
 
 def _cm_idx(value: Column, d: Column, width: int) -> Column:
@@ -238,9 +223,8 @@ def cm_sketch(
     is <= e/width * N with probability >= 1 - e^-depth — frequency
     answers over unbounded vocabularies in depth x width integers.
 
-    Mergeable by elementwise counter SUM (``cm_merge``): per-shard /
-    per-day sketches add up to the corpus sketch, the same
-    one-touch-per-row property as the k-mins sketch, so heavy-hitter
+    Counters add, so partial counts combine map-side — the same
+    one-touch-per-row property as the k-mins sketch, and heavy-hitter
     monitoring at 100 TB keeps depth x width longs per stream, not a
     vocabulary-sized state.
 
@@ -259,16 +243,6 @@ def cm_sketch(
         ).alias("d", "idx")
     )
     return cells.groupBy("d", "idx").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def cm_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge count-min sketches built with the same width/depth:
-    elementwise counter sum — the sketch of the concatenated
-    streams."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("d", "idx").agg(F.sum("cnt").alias("cnt"))
 
 
 def cm_lookup(
@@ -301,15 +275,14 @@ def cm_lookup(
 
 
 # ---------------------------------------------------------------------------
-# Bloom filter: mergeable bitset membership sketch
+# Bloom filter: bitset membership sketch
 #
 # The scale-path complement to ops/decontam.py's exact broadcast set:
 # an eval/blocklist of ANY cardinality compresses to a fixed n_bits
 # bitset (error = a bounded false-positive rate, never a false
-# negative), the bitset is mergeable by elementwise OR (per-shard /
-# per-day builds combine associatively), and the probe side is a pure
-# row-local expression over the broadcast bits — the corpus is never
-# shuffled and never joined. FP rate ~= (1 - e^(-k*n/m))^k; at the
+# negative), and the probe side is a pure row-local expression over
+# the broadcast bits — the corpus is never shuffled and never joined.
+# FP rate ~= (1 - e^(-k*n/m))^k; at the
 # default m=8192, k=4 a 500-gram eval set probes at ~2e-3.
 
 BLOOM_WORD = 32  # bits per stored word: shifts stay < 32 so every
@@ -339,9 +312,6 @@ def bloom_build(
     input size. Build shape: values explode to n_hashes positions,
     one distinct + one 32-way bit_or aggregate; dedup is free (equal
     values set equal bits).
-
-    Merge law: union the row sets and ``bit_or`` per word
-    (``bloom_merge``) — the filter of the concatenated inputs.
     """
     if n_bits % BLOOM_WORD != 0:
         raise ValueError(f"n_bits must be a multiple of {BLOOM_WORD}")
@@ -360,14 +330,6 @@ def bloom_build(
         .groupBy("word")
         .agg(F.bit_or("b").alias("bits"))
     )
-
-
-def bloom_merge(*sketches: DataFrame) -> DataFrame:
-    """Elementwise-OR merge of same-shape Bloom filters."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_bits_array(sketch: DataFrame, n_bits: int = 8192) -> list[int]:
@@ -513,11 +475,6 @@ def hll_w_bits(p: int) -> int:
     if not 6 <= p <= 16:
         raise ValueError(f"p must be in [6, 16], got {p}")
     return HLL_HASH_BITS - p
-
-
-# p=6 defaults, kept for readers/tests; every function derives from p
-HLL_W_BITS = hll_w_bits(6)
-HLL_RHO_MAX = HLL_W_BITS + 1
 
 
 def hll_alpha(m: int) -> float:

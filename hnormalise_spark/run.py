@@ -52,7 +52,10 @@ def main(argv: list[str] | None = None) -> int:
     # CLI flags override the merged config chain (user ⊕ system ⊕
     # defaults). None means "not given on the CLI", so explicit falsy
     # values (--repartition 0, --no-streaming, --no-enrich) still win.
-    cfg = load_config(args.config, args.system_config)
+    try:
+        cfg = load_config(args.config, args.system_config)
+    except FileNotFoundError as e:
+        ap.error(f"config file {e.filename!r} does not exist")
     args.input = args.input if args.input is not None else cfg.input.path
     args.input_format = args.input_format or cfg.input.format
     args.output = args.output if args.output is not None else cfg.sink.out_dir
@@ -95,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     paths = sinks.run_batch(spark, parsed, args.output, json_line=json_line, fields=cfg.fields)
-    n = spark.read.parquet(paths["counts"]).agg({"n": "sum"}).collect()[0][0]
+    n = spark.read.parquet(paths["counts"]).agg({"n": "sum"}).collect()[0][0] or 0
     dt = time.time() - t0
     print(f"normalised {n} lines in {dt:.1f}s ({n/dt:.0f} lines/s) -> {args.output}")
     return 0

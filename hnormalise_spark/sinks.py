@@ -67,9 +67,14 @@ def _write_routed(staged: DataFrame, path: str) -> None:
 def write_fanout(staged: DataFrame, staging_path: str, counts_path: str) -> None:
     """The fan-out of an already staged frame (``staging_frame``): the
     route-partitioned staging write, then counts over what it wrote.
-    ``run_batch`` and every streaming micro-batch end here."""
+    ``run_batch`` and every streaming micro-batch end here. The
+    read-back takes the staged schema: a zero-row write leaves only
+    ``_SUCCESS``, which has no schema to infer (an empty input file, or
+    an empty micro-batch after a log rotation)."""
     _write_routed(staged, staging_path)
-    write_counts(staged.sparkSession.read.parquet(staging_path), counts_path)
+    write_counts(
+        staged.sparkSession.read.schema(staged.schema).parquet(staging_path), counts_path
+    )
 
 
 def staging_frame(

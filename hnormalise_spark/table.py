@@ -24,6 +24,12 @@ Resume contract (used by ``sinks.run_batch`` via ``snapshot_id``): a
 snapshot id present in the manifest is *committed* — re-running it is
 a no-op; an id absent from the manifest re-runs from scratch,
 overwriting any partial orphan data dir (idempotent).
+
+The table is append-only, like the reference's output (a line is
+routed once and counted once): a committed snapshot is never rewritten
+or retired. Readers take the union of every committed snapshot
+(``read_committed``) or one of them by id (``read_snapshot``, time
+travel).
 """
 
 from __future__ import annotations
@@ -79,9 +85,9 @@ def committed_snapshot_ids(table_path: str) -> list[str]:
     return [s["snapshot_id"] for s in read_manifest(table_path)["snapshots"]]
 
 
-def _locked_manifest_swap(table_path: str, mutate, lock_timeout: float = 10.0) -> bool:
-    """Run ``mutate(manifest_dict) -> bool`` under the table's manifest
-    lock and atomically swap the result in. Two layers:
+def _commit_manifest(table_path: str, entry: dict, lock_timeout: float = 10.0) -> None:
+    """Atomically append one snapshot entry (idempotent per id). Two
+    layers:
 
     * temp file + ``os.replace`` — readers never see a torn manifest;
     * an ``O_EXCL`` lock file serialising the read-modify-write, so two
@@ -90,10 +96,6 @@ def _locked_manifest_swap(table_path: str, mutate, lock_timeout: float = 10.0) -
       (Iceberg's metastore/REST commit is the same single-writer swap);
       O_EXCL is not atomic on some object stores — there, the catalog
       IS the lock.
-
-    ``mutate`` returning False aborts WITHOUT writing (optimistic
-    validation failed — e.g. a compaction found its input set changed);
-    the return value is passed through.
     """
     d = os.path.dirname(_manifest_path(table_path))
     os.makedirs(d, exist_ok=True)
@@ -112,28 +114,16 @@ def _locked_manifest_swap(table_path: str, mutate, lock_timeout: float = 10.0) -
             time.sleep(0.02)
     try:
         man = read_manifest(table_path)
-        if not mutate(man):
-            return False
+        man["snapshots"] = [
+            s for s in man["snapshots"] if s["snapshot_id"] != entry["snapshot_id"]
+        ] + [entry]
         fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
         with os.fdopen(fd, "w") as fh:
             json.dump(man, fh, indent=1)
         os.replace(tmp, _manifest_path(table_path))
-        return True
     finally:
         os.close(lock_fd)
         os.unlink(lock)
-
-
-def _commit_manifest(table_path: str, entry: dict, lock_timeout: float = 10.0) -> None:
-    """Atomically append one snapshot entry (idempotent per id)."""
-
-    def mutate(man: dict) -> bool:
-        man["snapshots"] = [
-            s for s in man["snapshots"] if s["snapshot_id"] != entry["snapshot_id"]
-        ] + [entry]
-        return True
-
-    _locked_manifest_swap(table_path, mutate, lock_timeout)
 
 
 def snapshot_data_path(table_path: str, snapshot_id: str) -> str:
@@ -186,7 +176,14 @@ def write_snapshot(
             {"snapshot_id": snapshot_id, "engine": "iceberg", **(extra or {})},
         )
         return True
-    _write_data_files(df, table_path, snapshot_id, partition_by)
+    w = df.write.mode("overwrite")
+    if partition_by:
+        # align writers with partitions: without the shuffle every task
+        # writes a sliver of every partition value (tasks x values tiny
+        # files — the small-files failure mode at scale)
+        df = df.repartition(*[F.col(c) for c in partition_by])
+        w = df.write.mode("overwrite").partitionBy(*partition_by)
+    w.parquet(snapshot_data_path(table_path, snapshot_id))
     _commit_manifest(
         table_path,
         {"snapshot_id": snapshot_id, "engine": "parquet-manifest", **(extra or {})},
@@ -194,64 +191,19 @@ def write_snapshot(
     return True
 
 
-def _write_data_files(
-    df: DataFrame,
-    table_path: str,
-    snapshot_id: str,
-    partition_by: tuple[str, ...] = (),
-) -> None:
-    """Write the snapshot's parquet dir WITHOUT committing it — the
-    data stays invisible until a manifest swap names it. Split out so
-    ``compact`` can stage its output first and commit atomically."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        # align writers with partitions: without the shuffle every task
-        # writes a sliver of every partition value (tasks x values tiny
-        # files — the small-files failure mode at scale)
-        df = df.repartition(*[F.col(c) for c in partition_by])
-        w = df.write.mode("overwrite")
-        w = w.partitionBy(*partition_by)
-    w.parquet(snapshot_data_path(table_path, snapshot_id))
-
-
-def live_snapshots(table_path: str) -> list[dict]:
-    """Committed snapshots that have not been superseded by a
-    compaction, in commit order (= version order)."""
-    return [
-        s
-        for s in read_manifest(table_path)["snapshots"]
-        if not s.get("superseded_by")
-    ]
-
-
-def read_committed(
-    spark: SparkSession,
-    table_path: str,
-    snapshot_ids: list[str] | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Union of all live committed snapshots (uncommitted orphan dirs
-    and compaction-superseded snapshots are NOT read —
-    commit-then-visible). The ``snapshot_id`` partition column is kept
-    on the rows (basePath read), so per-snapshot lineage survives.
-    ``snapshot_ids`` pins an explicit set instead of re-reading the
-    manifest (compaction's validated input set).
-
-    ``merge_schema=True`` reconciles evolved schemas across snapshots
-    (Iceberg-style add-column evolution: a later snapshot may carry new
-    columns; earlier rows read them as null). Costs one footer read per
-    file — metadata-only, unaffected by data volume — so it is safe at
-    100 TB, but off by default since same-schema tables skip it."""
-    ids = snapshot_ids
-    if ids is None:
-        ids = [s["snapshot_id"] for s in live_snapshots(table_path)]
+def read_committed(spark: SparkSession, table_path: str) -> DataFrame:
+    """Union of all committed snapshots (uncommitted orphan dirs are
+    NOT read — commit-then-visible). The ``snapshot_id`` partition
+    column is kept on the rows (basePath read), so per-snapshot lineage
+    survives."""
+    ids = committed_snapshot_ids(table_path)
     if not ids:
         raise FileNotFoundError(f"no committed snapshots in {table_path}")
     paths = [snapshot_data_path(table_path, s) for s in ids]
-    reader = spark.read.option("basePath", os.path.join(table_path, "data"))
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*paths)
+    return (
+        spark.read.option("basePath", os.path.join(table_path, "data"))
+        .parquet(*paths)
+    )
 
 
 def read_snapshot(spark: SparkSession, table_path: str, snapshot_id: str) -> DataFrame:
@@ -260,154 +212,6 @@ def read_snapshot(spark: SparkSession, table_path: str, snapshot_id: str) -> Dat
     if not is_committed(table_path, snapshot_id):
         raise FileNotFoundError(f"snapshot {snapshot_id} not committed in {table_path}")
     return spark.read.parquet(snapshot_data_path(table_path, snapshot_id))
-
-
-# ---------------------------------------------------------------------------
-# MERGE (upsert) = append snapshots + merge-on-read + compaction
-#
-# The Iceberg pattern: an upsert is just another committed snapshot
-# (write_snapshot), the LATEST version per key is resolved at read
-# time from the snapshot order (merge-on-read), and a compaction
-# materializes that resolution into one snapshot and retires the
-# inputs. Keys must be unique within one snapshot (each snapshot is
-# one batch's output); across snapshots, later commits win.
-
-
-def read_latest(
-    spark: SparkSession,
-    table_path: str,
-    key_col: str,
-    snaps: list[dict] | None = None,
-) -> DataFrame:
-    """Merge-on-read: one row per key — the version from the latest
-    live snapshot that contains the key. Plan shape: the tiny
-    (snapshot_id -> commit sequence) map joins broadcast; the
-    per-key resolution is ONE window (max_by) over the key shuffle —
-    no per-snapshot scans, no iterative joins.
-
-    ``snaps`` pins the exact snapshot set to resolve over (compaction
-    passes the set it validated against) instead of re-reading the
-    manifest — two manifest reads could straddle a concurrent commit."""
-    from pyspark.sql import Window
-
-    if snaps is None:
-        snaps = live_snapshots(table_path)
-    seq = spark.createDataFrame(
-        [(s["snapshot_id"], i) for i, s in enumerate(snaps)],
-        "snapshot_id string, _seq long",
-    )
-    df = read_committed(
-        spark, table_path, [s["snapshot_id"] for s in snaps]
-    ).join(F.broadcast(seq), "snapshot_id")
-    w = Window.partitionBy(key_col).orderBy(F.col("_seq").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_seq", "snapshot_id")
-    )
-
-
-def compact(
-    spark: SparkSession,
-    table_path: str,
-    snapshot_id: str,
-    key_col: str,
-    max_attempts: int = 3,
-) -> bool:
-    """Materialize the merge-on-read view as ONE new snapshot and
-    retire (supersede) the inputs: the compaction entry AND the
-    ``superseded_by`` stamps land in a SINGLE locked manifest swap, so
-    a concurrent ``read_committed`` flips atomically from N-snapshot
-    resolution to the compacted scan — it can never see inputs and
-    compaction live together (duplicate rows).
-
-    Concurrent appends are handled Iceberg-style (optimistic
-    validation): the data files are staged uncommitted, and inside the
-    lock the live snapshot set is re-checked against the set the
-    compaction actually read. A snapshot committed in between would
-    get a LOWER merge-on-read sequence than the compaction (silently
-    losing its updates), so the commit aborts and the whole
-    read→stage→validate cycle retries over the new set.
-
-    Returns False if ``snapshot_id`` is already committed (resume
-    no-op). Time-travel reads of superseded snapshots keep working —
-    their data dirs are never deleted here (a real deployment
-    garbage-collects them after a retention window)."""
-    for _ in range(max_attempts):
-        if is_committed(table_path, snapshot_id):
-            return False
-        snaps = live_snapshots(table_path)
-        inputs = [s["snapshot_id"] for s in snaps]
-        latest = read_latest(spark, table_path, key_col, snaps=snaps)
-        _write_data_files(latest, table_path, snapshot_id)
-
-        def mutate(man: dict) -> bool:
-            live_now = [
-                s["snapshot_id"]
-                for s in man["snapshots"]
-                if not s.get("superseded_by")
-            ]
-            if live_now != inputs:
-                return False  # concurrent commit — abort, retry outside
-            man["snapshots"].append(
-                {
-                    "snapshot_id": snapshot_id,
-                    "engine": "parquet-manifest",
-                    "compaction_of": inputs,
-                }
-            )
-            for s in man["snapshots"]:
-                if s["snapshot_id"] in inputs:
-                    s["superseded_by"] = snapshot_id
-            return True
-
-        if _locked_manifest_swap(table_path, mutate):
-            return True
-    raise RuntimeError(
-        f"compaction {snapshot_id} on {table_path} aborted {max_attempts} "
-        "times: the live snapshot set kept changing under it"
-    )
-
-
-# ---------------------------------------------------------------------------
-# bucketed layout — the co-located-join table format
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    keys: tuple[str, ...],
-    buckets: int = 32,
-    sort: bool = True,
-) -> str:
-    """Persist ``df`` as a hash-bucketed (and per-bucket sorted)
-    parquet table registered in the session catalog.
-
-    This is the 100-TB co-located-join layout: two tables bucketed on
-    the same keys with the same bucket count join with ZERO Exchange —
-    each task reads bucket i of both sides — and with ``sort=True`` the
-    sort-merge join also skips its per-task Sort. Pay the shuffle once
-    at write time, reuse it across every downstream join/aggregate on
-    those keys (fact/dim co-location, incremental dedup against a
-    persisted index, posting-list probes). Bucket pruning applies to
-    equality predicates on the bucket keys.
-
-    Returns the catalog table name (query with ``spark.table(name)``).
-    An external table: data lives at ``path``, the catalog entry only
-    records layout metadata, exactly how a warehouse would share the
-    layout across jobs.
-    """
-    writer = (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .option("path", path)
-        .bucketBy(buckets, *keys)
-    )
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(name)
-    return name
 
 
 def snapshot_doc_diff(
@@ -429,10 +233,7 @@ def snapshot_doc_diff(
 
     Scale shape: ONE full-outer sort-merge join keyed on the doc id —
     each side reduced to (id, 16-byte fingerprint) BEFORE the
-    shuffle, so the wire carries ~24 bytes/doc, never text. When both
-    versions are written with ``write_bucketed`` on the id, the join
-    is co-located and the shuffle disappears entirely — the intended
-    layout for repeated crawl-over-crawl diffs at 100 TB.
+    shuffle, so the wire carries ~24 bytes/doc, never text.
     """
     from hnormalise_spark.ops.dedup import normalized_text
 

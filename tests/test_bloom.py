@@ -1,6 +1,5 @@
 """Bloom filter sketch: pure-Python replica agreement, the
-no-false-negative guarantee, merge law, boundedness, and partition
-invariance."""
+no-false-negative guarantee, boundedness, and partition invariance."""
 
 from __future__ import annotations
 
@@ -60,16 +59,6 @@ def test_no_false_negatives_and_bounded_fp(spark):
     # theoretical fp ~ (1 - e^(-k*n/m))^k ~ 0.04 at n=60, m=1024, k=4;
     # 400 probes -> expect ~16, assert a loose deterministic ceiling
     assert fp / len(OTHERS) < 0.15
-
-
-def test_merge_equals_build_of_union(spark):
-    a, b = MEMBERS[:30], MEMBERS[30:] + ["extra-1", "extra-2"]
-    merged = SK.bloom_merge(
-        SK.bloom_build(_vals_df(spark, a), "v", M, K),
-        SK.bloom_build(_vals_df(spark, b), "v", M, K),
-    )
-    whole = SK.bloom_build(_vals_df(spark, a + b), "v", M, K)
-    assert SK.bloom_bits_array(merged, M) == SK.bloom_bits_array(whole, M)
 
 
 def test_duplicates_are_free(spark):

@@ -137,3 +137,35 @@ def test_run_main_rejects_unknown_config_format(tmp_path):
     with pytest.raises(SystemExit) as e:
         run.main(["--config", str(cfg)])
     assert e.value.code == 2
+
+
+@pytest.mark.parametrize("flag", ["--config", "--system-config"])
+def test_run_main_rejects_missing_config(tmp_path, monkeypatch, flag):
+    """A config path that does not exist is refused before Spark
+    starts, not skipped (a typo would drop its ``fields`` and sinks)."""
+    import hnormalise_spark
+    from hnormalise_spark import run
+
+    def no_spark(**_):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(hnormalise_spark, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as e:
+        run.main([flag, str(tmp_path / "typo.json"), "--input", "x", "--output", "y"])
+    assert e.value.code == 2
+
+
+def test_run_main_empty_text_input(spark, tmp_path, monkeypatch):
+    """An empty input file routes no rows and fails nothing: run.py
+    returns 0 and writes a readable, empty counts table."""
+    import hnormalise_spark
+    from hnormalise_spark import run
+
+    monkeypatch.setattr(hnormalise_spark, "get_spark", lambda **_: spark)
+    log = tmp_path / "empty.log"
+    log.write_text("")
+    out = tmp_path / "out"
+    assert run.main(["--input", str(log), "--input-format", "text", "--output", str(out)]) == 0
+    counts = spark.read.parquet(str(out / "counts"))
+    assert counts.count() == 0
+    assert {"source", "parser", "parse_ok", "n"} <= set(counts.columns)

@@ -67,7 +67,7 @@ def test_sketch_is_bounded(spark):
     pairs = [("g", f"u{i}") for i in range(5000)]
     sk = SK.hll_sketch(_vals(spark, pairs), ["g"], "v", p=6)
     assert sk.count() <= 64
-    assert all(1 <= r.reg <= SK.HLL_RHO_MAX for r in sk.collect())
+    assert all(1 <= r.reg <= SK.hll_w_bits(6) + 1 for r in sk.collect())
 
 
 def test_registers_match_pure_python_replica(spark):

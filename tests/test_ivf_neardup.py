@@ -24,11 +24,6 @@ def emb(spark):
     return df.withColumn("embedding", vec)
 
 
-@pytest.fixture(scope="module")
-def qvec():
-    return [((i * 7) % 11 - 5) / 5.0 for i in range(DIM)]
-
-
 def test_ivf_centroids_deterministic_and_small(emb):
     cents = S.ivf_centroids(emb, stride=50)
     assert [cid for cid, _ in cents] == [0, 50, 100, 150, 200, 250, 300, 350]
@@ -57,54 +52,6 @@ def test_ivf_assign_is_nearest_centroid(emb):
         v = [float(x) for x in row["embedding"]]
         best = min(cents, key=lambda c: (-cos(v, c[1]), c[0]))[0]
         assert row["list_id"] == best, f"vec {row['vec_id']}"
-
-
-def test_ivf_probe_is_partition_pruned_and_matches_bruteforce(
-    spark, emb, qvec, tmp_path_factory
-):
-    idx = str(tmp_path_factory.mktemp("ivf") / "idx")
-    cents = S.build_ivf_index(emb, idx, stride=50)
-
-    probe = S.ivf_index_topk(spark, idx, qvec, cents, k=5, nprobe=2)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "list_id" in plan.split("PartitionFilters:")[1][:200]
-
-    # probe equals brute force restricted to the probed lists
-    lists = S.ivf_probe_lists(qvec, cents, 2)
-    brute = (
-        S.cosine_scores(
-            S.ivf_assign(emb, cents).filter(F.col("list_id").isin(lists)), qvec
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(5)
-        .select("vec_id")
-    )
-    assert [r["vec_id"] for r in probe.select("vec_id").collect()] == [
-        r["vec_id"] for r in brute.collect()
-    ]
-
-
-def test_ivf_nprobe_recall_monotone(spark, emb, qvec, tmp_path_factory):
-    idx = str(tmp_path_factory.mktemp("ivf2") / "idx")
-    cents = S.build_ivf_index(emb, idx, stride=50)
-    exact = {
-        r["vec_id"]
-        for r in S.cosine_topk(emb, qvec, k=10).select("vec_id").collect()
-    }
-
-    def recall(nprobe):
-        got = {
-            r["vec_id"]
-            for r in S.ivf_index_topk(spark, idx, qvec, cents, k=10, nprobe=nprobe)
-            .select("vec_id")
-            .collect()
-        }
-        return len(got & exact)
-
-    r1, r4, rall = recall(1), recall(4), recall(len(cents))
-    assert r1 <= r4 <= rall
-    assert rall == len(exact)  # probing every list IS exact search
 
 
 def test_neardup_join_is_hash_equi_join_not_cartesian(emb):

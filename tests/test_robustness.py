@@ -172,14 +172,3 @@ def test_pack_weight_zero_excludes_source(spark):
     out = mix_sources(df, {"a": 1.0, "b": 0.0}, shards=2)
     srcs = {r["source"] for r in out.select("source").distinct().collect()}
     assert srcs == {"a"}
-
-
-def test_zero_vector_never_appears_in_topk(spark):
-    from hnormalise_spark.ops.similarity import cosine_topk
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.6, 0.8])],
-        "vec_id long, embedding array<double>",
-    )
-    got = [r["vec_id"] for r in cosine_topk(df, [1.0, 0.0], k=10).collect()]
-    assert got == [1, 3]  # zero vector filtered even with k > matches

@@ -292,3 +292,37 @@ def test_stream_builds_staging_once(json_stream):
     _, out, builds = json_stream
     assert len(os.listdir(os.path.join(out, "counts"))) >= 2
     assert builds == 1
+
+
+def test_text_stream_survives_an_empty_file(spark, tmp_path):
+    """A log rotation leaves an empty file in the tailed directory: its
+    micro-batch stages zero rows and must not kill the query. The next
+    file streams on from the same checkpoint, and the summed counts
+    equal run_batch's on the same lines."""
+    from hnormalise_spark.fixtures import CORPUS
+
+    in_dir = tmp_path / "logs"
+    in_dir.mkdir()
+    out = str(tmp_path / "out")
+    (in_dir / "rotated.log").write_text("")
+    streaming.start_pipeline(spark, str(in_dir), out, available_now=True, input_format="text").awaitTermination(300)
+    empty = spark.read.parquet(os.path.join(out, "counts"))
+    assert empty.count() == 0
+
+    lines = [l for (_, _, _, l) in CORPUS if l and "\n" not in l]
+    (in_dir / "syslog.log").write_text("\n".join(lines) + "\n")
+    streaming.start_pipeline(spark, str(in_dir), out, available_now=True, input_format="text").awaitTermination(300)
+    assert len(os.listdir(os.path.join(out, "counts"))) == 2
+    key = ("source", "parser", "parse_ok")
+    summed = {
+        tuple(r[k] for k in key): r["n"]
+        for r in spark.read.parquet(os.path.join(out, "counts"))
+        .groupBy(*key).agg(F.sum("n").alias("n")).collect()
+    }
+    paths = sinks.run_batch(
+        spark, P.normalise(streaming.read_raw_text(spark, str(in_dir / "syslog.log"))),
+        str(tmp_path / "batch"),
+    )
+    batch = {tuple(r[k] for k in key): r["n"] for r in spark.read.parquet(paths["counts"]).collect()}
+    assert summed == batch
+    assert sum(batch.values()) == len(lines)

@@ -458,6 +458,20 @@ def _oracle_similarity_ann() -> str:
     """
 
 
+def _index_dir(kind: str, sf: str, builder) -> str:
+    """The /tmp directory caching an index that ``builder`` (a function
+    or module) builds from dataset ``sf``. The name carries a short hash
+    of the dataset's real path and of the builder's source, so another
+    dataset with the same basename, or a checkout whose builder differs,
+    gets its own directory instead of reading a stale index."""
+    import inspect
+    import os
+
+    real = os.path.realpath(sf)
+    key = hashlib.sha256((real + inspect.getsource(builder)).encode()).hexdigest()
+    return f"/tmp/hnorm_{kind}_{os.path.basename(real)}_{key[:12]}"
+
+
 def q_similarity_ann_indexed(spark: SparkSession, sf: str) -> DataFrame:
     """The PERSISTED ANN scale path: the corpus is written once
     partitioned by sketch (similarity.build_ann_index) and the probe is
@@ -469,8 +483,7 @@ def q_similarity_ann_indexed(spark: SparkSession, sf: str) -> DataFrame:
 
     from hnormalise_spark.ops import similarity as S
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    idx = f"/tmp/hnorm_ann_index_{tag}_{ANN_PLANES}p"
+    idx = _index_dir(f"ann_index_{ANN_PLANES}p", sf, S)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
         emb = spark.read.parquet(f"{sf}/embeddings.parquet")
         S.build_ann_index(emb, idx, EMB_DIM, ANN_PLANES)
@@ -491,12 +504,9 @@ def q_similarity_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     buckets) is scored — the recall knob the single-bucket probe lacks.
     Both partition levels prune at file listing; the oracle re-derives
     the identical bucket set and scores from the raw table."""
-    import os
-
     from hnormalise_spark.ops import similarity as S
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    idx = f"/tmp/hnorm_ann_snapidx_{tag}_{ANN_PLANES}p"
+    idx = _index_dir(f"ann_snapidx_{ANN_PLANES}p", sf, S)
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     S.build_ann_index_snapshot(emb, idx, "base", EMB_DIM, ANN_PLANES)
     probe = S.ann_snapshot_probe(spark, idx, QVEC, ANN_PLANES, probe_radius=1)
@@ -648,8 +658,7 @@ def q_similarity_ivf(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     cents = S.ivf_centroids(emb, IVF_STRIDE)
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    idx = f"/tmp/hnorm_ivf_index_{tag}_{IVF_STRIDE}"
+    idx = _index_dir(f"ivf_index_{IVF_STRIDE}", sf, S)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
         # repartition("list_id") before the dynamic-partition write:
         # one file per list instead of tasks x nlist slivers. No

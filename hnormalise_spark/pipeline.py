@@ -265,8 +265,9 @@ def _payload_stage(df: DataFrame) -> DataFrame:
 def normalise_tokens(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Normalise a pre-tokenized input table (BASELINE.json input_hint).
 
-    Detokenization is a JVM expression (codepoint → char), so no Python
-    runs anywhere in the parse. The input token array rides along
+    Detokenization is a JVM expression (codepoint → char, exact for BMP
+    scalar values; any other array gives a null line, which fails), so
+    no Python runs anywhere in the parse. The input token array rides along
     unchanged on every row: the failure sink writes it back as the
     original input (HNormalise.hs:69-73), so a failed row's ``tokens``
     equals its input array whatever codepoints it holds.

@@ -6,12 +6,14 @@ codepoint-level and therefore deterministic and exactly invertible:
 ``text = ''.join(chr(t) for t in tokens)`` — which makes the per-row
 token-array equality invariant checkable end-to-end.
 
-``detokenize_col`` is a pure JVM expression (``transform`` + ``char``),
-valid for codepoints < 256 (rsyslog lines are ASCII): no Python runs
-per row. ``retokenize_col`` is its exact inverse on that range; the
-token pipeline never needs it (``normalise_tokens`` carries the input
-array to the failure sink), so it serves only raw-text input, which has
-no array of its own, and perfbench's trace.
+``detokenize_col`` is a pure JVM expression, exact for every array of
+BMP scalar values: no Python runs per row. An array it cannot decode
+exactly (a negative value, a surrogate, or a value above U+FFFF)
+yields null, so the row fails closed and routes to failure with its
+input tokens. ``retokenize_col`` is its exact inverse for codepoints
+< 256; the token pipeline never needs it (``normalise_tokens`` carries
+the input array to the failure sink), so it serves only raw-text
+input, which has no array of its own, and perfbench's trace.
 
 Tokenize (text → codepoints) for the full Unicode range only runs in
 data generation and invariant tests, as a pandas UDF.
@@ -26,13 +28,27 @@ from pyspark.sql.types import ArrayType, IntegerType
 
 
 def detokenize_col(tokens: Column | str) -> Column:
-    """JVM-side detokenizer for ASCII codepoints (<256).
+    """JVM-side detokenizer, one CASE over the row's extremes:
 
-    ``char()`` maps an int to the 1-byte char mod 256, so this is exact
-    for ASCII log lines and never leaves the JVM.
+    * max < 256 (rsyslog lines are ASCII): ``char()`` per codepoint;
+    * max < 0x10000: each value as 4 hex digits, decoded as UTF-16BE,
+      which is exact for every BMP scalar value;
+    * a negative value, a surrogate (0xD800-0xDFFF) or a value above
+      0xFFFF: null. ``char()`` works mod 256 and UTF-16BE would need
+      surrogate pairs, so no text is made up for such a row.
     """
     col = F.col(tokens) if isinstance(tokens, str) else tokens
-    return F.array_join(F.transform(col, F.char), "")
+    top = F.array_max(col)
+    bad = (
+        (F.array_min(col) < 0) | (top > 0xFFFF)
+        | ((top >= 0xD800) & F.exists(col, lambda t: t.between(0xD800, 0xDFFF)))
+    )
+    utf16 = F.array_join(F.transform(col, lambda t: F.lpad(F.hex(t), 4, "0")), "")
+    return (
+        F.when(bad, F.lit(None).cast("string"))
+        .when(top >= 256, F.decode(F.unhex(utf16), "UTF-16BE"))
+        .otherwise(F.array_join(F.transform(col, F.char), ""))
+    )
 
 
 def retokenize_col(raw: Column | str) -> Column:

@@ -4,8 +4,8 @@ Checks the north-rule contracts: per-sink routed-row set equality,
 failure sink carries originals (token-array equality), counts match,
 streaming foreachBatch produces the same routed sets as batch (token
 and rsyslog JSON input alike, with the staging columns built once per
-query), and enrichment joins are broadcast (no shuffle of the fact
-side).
+query), every sink is zstd parquet that pyarrow reads back, and
+enrichment joins are broadcast (no shuffle of the fact side).
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ import json
 import os
 import re
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,6 +32,27 @@ def corpus_dir(spark, tmp_path_factory):
     return d
 
 
+def _assert_zstd_parquet(path: str) -> int:
+    """Every data file under ``path`` has only ZSTD column chunks and
+    reads back with pyarrow (as perfbench's check does) → its rows."""
+    files = [
+        os.path.join(d, n) for d, _, names in os.walk(path)
+        for n in names if not n.startswith((".", "_"))
+    ]
+    assert files, path
+    rows = 0
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups) for c in range(meta.num_columns)
+        }
+        assert codecs == {"ZSTD"}, (f, codecs)
+        assert pq.read_table(f).num_rows == meta.num_rows
+        rows += meta.num_rows
+    return rows
+
+
 def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
     df = spark.read.parquet(corpus_dir)
     parsed = sinks.with_lineage(P.normalise_tokens(df))
@@ -43,6 +65,8 @@ def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
 
     n_s, n_f = success.count(), failure.count()
     assert n_s + n_f == N
+    assert (_assert_zstd_parquet(paths["success"]), _assert_zstd_parquet(paths["failure"])) == (n_s, n_f)
+    assert _assert_zstd_parquet(paths["counts"]) == counts.count()
     # routed-row set equality: success ∪ failure doc_ids == input doc_ids
     assert success.select("doc_id").union(failure.select("doc_id")).distinct().count() == N
 
@@ -121,6 +145,7 @@ def test_streaming_sink_schemas_match_batch(spark, corpus_dir, stream_out, tmp_p
     }
     for sink, path in micro.items():
         assert spark.read.parquet(path).schema == spark.read.parquet(paths[sink]).schema, sink
+        assert _assert_zstd_parquet(path) == _assert_zstd_parquet(paths[sink]), sink
     assert "json" in spark.read.parquet(micro["success"]).columns
 
 

@@ -1,12 +1,17 @@
-"""The token invariant on the failure side, by property.
+"""The token invariant on both sides, by property.
 
 ``normalise_tokens`` carries the input array to the failure sink, so a
 failed row's ``tokens`` is its input array whatever codepoints it holds:
-values past Latin-1 (which the JVM detokenizer maps mod 256), past the
-BMP, and negative ones. Hypothesis draws the token rows; all of them go
-through ``run_batch`` together, in ONE Spark pass, beside the fixture
-corpus and one fixed row per codepoint class. The success-side decode
-of such codepoints is a separate open defect and is not asserted here.
+values past Latin-1, past the BMP, and negative ones. Hypothesis draws
+the token rows; all of them go through ``run_batch`` together, in ONE
+Spark pass, beside the fixture corpus and one fixed row per codepoint
+class.
+
+On the success side the parse reads ``raw``, the JVM detokenization,
+so a parsed row's ``raw`` must decode back to its input array. The
+same rows are replayed through the codec in plain Python: exact text
+for an array of BMP scalar values, none for anything else (which then
+fails closed).
 """
 
 from __future__ import annotations
@@ -63,11 +68,34 @@ def _drawn_rows(n: int = 50) -> list[tuple[str, list[int]]]:
     return drawn
 
 
+def _detokenize(tokens: list[int]) -> str | None:
+    """``tokenizer.detokenize_col`` replayed in Python."""
+    if all(0 <= t <= 0xFFFF and not 0xD800 <= t <= 0xDFFF for t in tokens):
+        return "".join(map(chr, tokens))
+    return None
+
+
 def test_normalise_tokens_keeps_input_tokens(spark):
+    """Every row keeps its input array, its ``raw`` is the Python
+    replay of the codec, and a parsed row's ``raw`` decodes back to
+    its input array."""
     rows = _corpus_tokens()
+    rows += [(f"class-{k}", "fuzz", [v]) for k, v in _CLASS_VALUES.items()]
+    # parseable lines holding codepoints past Latin-1, one above the BMP
+    line = {i: l for (i, _, _, l) in CORPUS}["sn-username"]
+    for name, text in {"bmp": "pýthon ł 日本", "astral": "python \U0001F600"}.items():
+        rows.append((f"snoopy-{name}", "fuzz", [ord(c) for c in line.replace("python", text)]))
+    rows += [(f"drawn-{n}", s, t) for n, (s, t) in enumerate(_drawn_rows())]
+    want = {i: t for i, _, t in rows}
+
     out = P.normalise_tokens(spark.createDataFrame(rows, _SCHEMA))
-    got = {r["doc_id"]: r["tokens"] for r in out.select("doc_id", "tokens").collect()}
-    assert got == {i: t for i, _, t in rows}
+    got = {r["doc_id"]: r for r in out.select("doc_id", "tokens", "raw", "parse_ok").collect()}
+    assert {i: r["tokens"] for i, r in got.items()} == want
+    assert {i: r["raw"] for i, r in got.items()} == {i: _detokenize(t) for i, t in want.items()}
+
+    ok = [i for i, r in got.items() if r["parse_ok"]]
+    assert all([ord(c) for c in got[i]["raw"]] == want[i] for i in ok)
+    assert "snoopy-bmp" in ok and not got["snoopy-astral"]["parse_ok"]
 
 
 def test_failure_sink_returns_input_tokens(spark, tmp_path):

@@ -458,17 +458,21 @@ def _oracle_similarity_ann() -> str:
     """
 
 
-def _index_dir(kind: str, sf: str, builder) -> str:
-    """The /tmp directory caching an index that ``builder`` (a function
-    or module) builds from dataset ``sf``. The name carries a short hash
-    of the dataset's real path and of the builder's source, so another
-    dataset with the same basename, or a checkout whose builder differs,
-    gets its own directory instead of reading a stale index."""
+def _index_dir(kind: str, sf: str) -> str:
+    """The /tmp directory caching a ``similarity``-built index of
+    dataset ``sf``. The name carries a short hash of the dataset's real
+    path and of ``similarity``'s source (every index builder lives
+    there), so another dataset with the same basename, or a checkout
+    whose builders differ, gets its own directory instead of reading a
+    stale index. An edit to ``similarity`` leaves the old directory
+    behind in /tmp."""
     import inspect
     import os
 
+    from hnormalise_spark.ops import similarity
+
     real = os.path.realpath(sf)
-    key = hashlib.sha256((real + inspect.getsource(builder)).encode()).hexdigest()
+    key = hashlib.sha256((real + inspect.getsource(similarity)).encode()).hexdigest()
     return f"/tmp/hnorm_{kind}_{os.path.basename(real)}_{key[:12]}"
 
 
@@ -483,7 +487,7 @@ def q_similarity_ann_indexed(spark: SparkSession, sf: str) -> DataFrame:
 
     from hnormalise_spark.ops import similarity as S
 
-    idx = _index_dir(f"ann_index_{ANN_PLANES}p", sf, S)
+    idx = _index_dir(f"ann_index_{ANN_PLANES}p", sf)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
         emb = spark.read.parquet(f"{sf}/embeddings.parquet")
         S.build_ann_index(emb, idx, EMB_DIM, ANN_PLANES)
@@ -506,7 +510,7 @@ def q_similarity_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     the identical bucket set and scores from the raw table."""
     from hnormalise_spark.ops import similarity as S
 
-    idx = _index_dir(f"ann_snapidx_{ANN_PLANES}p", sf, S)
+    idx = _index_dir(f"ann_snapidx_{ANN_PLANES}p", sf)
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     S.build_ann_index_snapshot(emb, idx, "base", EMB_DIM, ANN_PLANES)
     probe = S.ann_snapshot_probe(spark, idx, QVEC, ANN_PLANES, probe_radius=1)
@@ -658,18 +662,9 @@ def q_similarity_ivf(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     cents = S.ivf_centroids(emb, IVF_STRIDE)
-    idx = _index_dir(f"ivf_index_{IVF_STRIDE}", sf, S)
+    idx = _index_dir(f"ivf_index_{IVF_STRIDE}", sf)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        # repartition("list_id") before the dynamic-partition write:
-        # one file per list instead of tasks x nlist slivers. No
-        # spread_to_cores here — the assign is a vectorized matmul
-        # (I/O-bound, not compute-bound), so scan splits supply all
-        # the parallelism it needs and fanning a small input to N
-        # tasks only pays N Python-worker spin-ups (measured 5.7 s
-        # vs 1.6 s at sf0.1).
-        S.ivf_assign(emb, cents).repartition("list_id").write.mode(
-            "overwrite"
-        ).partitionBy("list_id").parquet(idx)
+        S.build_ivf_index(emb, cents, idx)
     lists = S.ivf_probe_lists(QVEC, cents, IVF_NPROBE)
     df = spark.read.parquet(idx).filter(F.col("list_id").isin(lists))
     scored = S.cosine_scores(df, QVEC)

@@ -258,6 +258,25 @@ def ivf_assign(
     return df.withColumn("list_id", _assign(F.col(vec_col)))
 
 
+def build_ivf_index(
+    df: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    path: str,
+    vec_col: str = "embedding",
+) -> None:
+    """Write the corpus PARTITIONED BY its ``ivf_assign`` list, so a
+    probe reads only its lists' directories. repartition("list_id")
+    before the dynamic-partition write: one file per list instead of
+    tasks x nlist slivers. No spread_to_cores here — the assign is a
+    vectorized matmul (I/O-bound, not compute-bound), so scan splits
+    supply all the parallelism it needs and fanning a small input to
+    N tasks only pays N Python-worker spin-ups (measured 5.7 s vs
+    1.6 s at sf0.1)."""
+    ivf_assign(df, centroids, vec_col).repartition("list_id").write.mode(
+        "overwrite"
+    ).partitionBy("list_id").parquet(path)
+
+
 def ivf_probe_lists(
     query_vec: list[float], centroids: list[tuple[int, list[float]]], nprobe: int
 ) -> list[int]:

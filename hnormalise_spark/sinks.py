@@ -20,13 +20,11 @@ because we never rewrite `tokens`/`raw`.
 
 On disk every sink is parquet with zstd pages (``SINK_CODEC``, the
 library's default level), not Spark's default snappy: the bytes
-written per routed line are the pipeline's output cost. On perfbench's
-inputs zstd cut the sinks from 480.8 to 281.3 B/line on
-``batch_mixed`` and from 485.9 to 338.1 B/line on ``batch_failheavy``
-(the JSON column from 247 to 115 B per success row, ``msg`` from 97 to
-52), with task CPU per line inside its run-to-run band. Much of what
-is left is fixed per file: footers and column indexes over 139 leaf
-columns (``scripts/sink_bytes.py`` attributes a run's bytes).
+written per routed line are the pipeline's output cost, and zstd
+writes markedly fewer of them at task CPU inside its run-to-run band
+(CHANGES.md records the measured bytes per line on each workload).
+``scripts/sink_bytes.py`` attributes a run's bytes per sink, column,
+footer and page index.
 """
 
 from __future__ import annotations

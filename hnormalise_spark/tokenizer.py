@@ -28,15 +28,11 @@ from pyspark.sql.types import ArrayType, IntegerType
 
 
 def detokenize_col(tokens: Column | str) -> Column:
-    """JVM-side detokenizer, one CASE over the row's extremes:
-
-    * max < 256 (rsyslog lines are ASCII): ``char()`` per codepoint;
-    * max < 0x10000: each value as 4 hex digits, decoded as UTF-16BE,
-      which is exact for every BMP scalar value;
-    * a negative value, a surrogate (0xD800-0xDFFF) or a value above
-      0xFFFF: null. ``char()`` works mod 256 and UTF-16BE would need
-      surrogate pairs, so no text is made up for such a row.
-    """
+    """JVM-side detokenizer: each value as 4 hex digits, decoded as
+    UTF-16BE, which is exact for every BMP scalar value. An array with
+    a negative value, a surrogate (0xD800-0xDFFF) or a value above
+    0xFFFF gives null: UTF-16BE would need surrogate pairs, so no text
+    is made up for such a row."""
     col = F.col(tokens) if isinstance(tokens, str) else tokens
     top = F.array_max(col)
     bad = (
@@ -44,10 +40,8 @@ def detokenize_col(tokens: Column | str) -> Column:
         | ((top >= 0xD800) & F.exists(col, lambda t: t.between(0xD800, 0xDFFF)))
     )
     utf16 = F.array_join(F.transform(col, lambda t: F.lpad(F.hex(t), 4, "0")), "")
-    return (
-        F.when(bad, F.lit(None).cast("string"))
-        .when(top >= 256, F.decode(F.unhex(utf16), "UTF-16BE"))
-        .otherwise(F.array_join(F.transform(col, F.char), ""))
+    return F.when(bad, F.lit(None).cast("string")).otherwise(
+        F.decode(F.unhex(utf16), "UTF-16BE")
     )
 
 

@@ -1,21 +1,13 @@
-"""The ANN/IVF index caches are keyed on the dataset and the builder:
-the directory name hashes the dataset's real path and the builder's
-source, so a cached index is never read for another dataset that
-shares its basename, nor by code that builds it differently. No Spark."""
+"""The ANN/IVF index caches are keyed on the dataset: the directory
+name hashes the dataset's real path (and the source of ``similarity``,
+where every index builder lives), so a cached index is never read for
+another dataset that shares its basename. No Spark."""
 
 from __future__ import annotations
 
 import os
 
-from hnormalise_spark.ops import entry, similarity
-
-
-def _builder_a():
-    return 1
-
-
-def _builder_b():
-    return 2
+from hnormalise_spark.ops import entry
 
 
 def test_index_dir_keys_on_dataset_path(tmp_path):
@@ -25,14 +17,8 @@ def test_index_dir_keys_on_dataset_path(tmp_path):
     os.symlink(a, tmp_path / "link")
 
     def key(sf):
-        return entry._index_dir("ivf_index_37", str(sf), similarity)
+        return entry._index_dir("ivf_index_37", str(sf))
 
     assert key(a) == key(a) == key(f"{a}/") == key(tmp_path / "link")
     assert key(a) != key(b)
     assert os.path.basename(key(a)).startswith("hnorm_ivf_index_37_sf0.01_")
-
-
-def test_index_dir_keys_on_builder_source(tmp_path):
-    sf = str(tmp_path / "sf0.01")
-    assert entry._index_dir("ann", sf, _builder_a) == entry._index_dir("ann", sf, _builder_a)
-    assert entry._index_dir("ann", sf, _builder_a) != entry._index_dir("ann", sf, _builder_b)

@@ -34,7 +34,10 @@ _VALUE = st.one_of(
     st.integers(65_536, 2**31 - 1),
     st.integers(-(2**31), -1),
 )
-_CLASS_VALUES = {"latin1": 200, "bmp": 0x142, "astral": 0x1F600, "negative": -7}
+_CLASS_VALUES = {
+    "latin1": 200, "bmp": 0x142, "astral": 0x1F600, "negative": -7,
+    "surrogate-lo": 0xD800, "surrogate-hi": 0xDFFF,
+}
 
 
 def _corpus_tokens() -> list[tuple[str, str, list[int]]]:
@@ -82,8 +85,10 @@ def test_normalise_tokens_keeps_input_tokens(spark):
     rows = _corpus_tokens()
     rows += [(f"class-{k}", "fuzz", [v]) for k, v in _CLASS_VALUES.items()]
     # parseable lines holding codepoints past Latin-1, one above the BMP
+    # and one with a lone surrogate
     line = {i: l for (i, _, _, l) in CORPUS}["sn-username"]
-    for name, text in {"bmp": "pýthon ł 日本", "astral": "python \U0001F600"}.items():
+    texts = {"bmp": "pýthon ł 日本", "astral": "python \U0001F600", "surrogate": "python \ud800"}
+    for name, text in texts.items():
         rows.append((f"snoopy-{name}", "fuzz", [ord(c) for c in line.replace("python", text)]))
     rows += [(f"drawn-{n}", s, t) for n, (s, t) in enumerate(_drawn_rows())]
     want = {i: t for i, _, t in rows}
@@ -95,7 +100,9 @@ def test_normalise_tokens_keeps_input_tokens(spark):
 
     ok = [i for i, r in got.items() if r["parse_ok"]]
     assert all([ord(c) for c in got[i]["raw"]] == want[i] for i in ok)
-    assert "snoopy-bmp" in ok and not got["snoopy-astral"]["parse_ok"]
+    assert "snoopy-bmp" in ok
+    for i in ("snoopy-astral", "snoopy-surrogate"):
+        assert got[i]["raw"] is None and not got[i]["parse_ok"]
 
 
 def test_failure_sink_returns_input_tokens(spark, tmp_path):

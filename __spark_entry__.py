@@ -491,8 +491,7 @@ def q_table_snapshots(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("n_chars").cast("long").alias("n_chars"),
     )
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/tmp/hnorm_tableq_{tag}"
+    path = ops_entry._index_dir("tableq", sf, T)
     T.write_snapshot(docs.filter(F.col("doc_id") % 2 == 0), path, "v1")
     T.write_snapshot(docs.filter(F.col("doc_id") % 2 == 1), path, "v2")
     v1 = T.read_snapshot(spark, path, "v1").agg(

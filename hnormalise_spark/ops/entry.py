@@ -22,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import math
 from collections.abc import Callable
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -458,21 +459,18 @@ def _oracle_similarity_ann() -> str:
     """
 
 
-def _index_dir(kind: str, sf: str) -> str:
-    """The /tmp directory caching a ``similarity``-built index of
-    dataset ``sf``. The name carries a short hash of the dataset's real
-    path and of ``similarity``'s source (every index builder lives
-    there), so another dataset with the same basename, or a checkout
-    whose builders differ, gets its own directory instead of reading a
-    stale index. An edit to ``similarity`` leaves the old directory
-    behind in /tmp."""
+def _index_dir(kind: str, sf: str, builder: ModuleType) -> str:
+    """The /tmp directory caching an index or table of dataset ``sf``
+    that module ``builder`` writes. The name carries a short hash of
+    the dataset's real path and of ``builder``'s source, so another
+    dataset with the same basename, or a checkout whose builder
+    differs, gets its own directory instead of reading a stale one. An
+    edit to ``builder`` leaves the old directory behind in /tmp."""
     import inspect
     import os
 
-    from hnormalise_spark.ops import similarity
-
     real = os.path.realpath(sf)
-    key = hashlib.sha256((real + inspect.getsource(similarity)).encode()).hexdigest()
+    key = hashlib.sha256((real + inspect.getsource(builder)).encode()).hexdigest()
     return f"/tmp/hnorm_{kind}_{os.path.basename(real)}_{key[:12]}"
 
 
@@ -487,7 +485,7 @@ def q_similarity_ann_indexed(spark: SparkSession, sf: str) -> DataFrame:
 
     from hnormalise_spark.ops import similarity as S
 
-    idx = _index_dir(f"ann_index_{ANN_PLANES}p", sf)
+    idx = _index_dir(f"ann_index_{ANN_PLANES}p", sf, S)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
         emb = spark.read.parquet(f"{sf}/embeddings.parquet")
         S.build_ann_index(emb, idx, EMB_DIM, ANN_PLANES)
@@ -510,7 +508,7 @@ def q_similarity_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     the identical bucket set and scores from the raw table."""
     from hnormalise_spark.ops import similarity as S
 
-    idx = _index_dir(f"ann_snapidx_{ANN_PLANES}p", sf)
+    idx = _index_dir(f"ann_snapidx_{ANN_PLANES}p", sf, S)
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     S.build_ann_index_snapshot(emb, idx, "base", EMB_DIM, ANN_PLANES)
     probe = S.ann_snapshot_probe(spark, idx, QVEC, ANN_PLANES, probe_radius=1)
@@ -662,7 +660,7 @@ def q_similarity_ivf(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     cents = S.ivf_centroids(emb, IVF_STRIDE)
-    idx = _index_dir(f"ivf_index_{IVF_STRIDE}", sf)
+    idx = _index_dir(f"ivf_index_{IVF_STRIDE}", sf, S)
     if not os.path.exists(os.path.join(idx, "_SUCCESS")):
         S.build_ivf_index(emb, cents, idx)
     lists = S.ivf_probe_lists(QVEC, cents, IVF_NPROBE)
@@ -1249,12 +1247,9 @@ def q_bm25_indexed(spark: SparkSession, sf: str) -> DataFrame:
     partition-PRUNED scan of the query terms' buckets. Same result set
     as the inline bm25_topk, so the same independent oracle re-derives
     it from the raw documents."""
-    import os
-
     from hnormalise_spark.ops import textops as X
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    idx = f"/tmp/hnorm_bm25_index_{tag}_{X.BM25_BUCKETS}b"
+    idx = _index_dir(f"bm25_index_{X.BM25_BUCKETS}b", sf, X)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     X.bm25_build_index(docs, idx, "base")
     return X.bm25_topk_indexed(spark, idx, BM25_TERMS, k=BM25_K).select(
@@ -1494,8 +1489,7 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     index with the scan pruned to the batch's fp buckets."""
     from hnormalise_spark.ops import dedup as D
 
-    tag = sf.rstrip("/").rsplit("/", 1)[-1]
-    idx = f"/tmp/hnorm_fp_index_{tag}_{D.FP_BUCKETS}b"
+    idx = _index_dir(f"fp_index_{D.FP_BUCKETS}b", sf, D)
     docs = spread_to_cores(
         spark.read.parquet(f"{sf}/documents.parquet").select(
             F.col("doc_id").cast("long").alias("doc_id"), "text"

@@ -13,6 +13,17 @@ write doubles as the checkpoint: re-running any sink is idempotent.
 Batch (``run_batch``) and every streaming micro-batch write it through
 the same ``write_fanout``.
 
+File layout: one writer per route, not one per scan task. The parse
+and the lineage stamps (``with_lineage``: scan partition id and input
+file) run in the scan tasks; only then does a rebalance on ``route``
+move the staged rows to the writers. A small batch writes one file
+per route, so it pays each file's footer and page index (one entry per
+leaf column) once per route rather than once per task. A route larger
+than AQE's advisory partition size
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is split across
+several writers of about that size, so no route is ever written by a
+single task at scale. The counts job reads the few files this leaves.
+
 Success rows keep the typed payload structs and (optionally) the
 reference-shaped JSON line; failure rows carry the ORIGINAL input
 untouched (HNormalise.hs:69-73) — token-array equality is preserved
@@ -71,7 +82,13 @@ def write_staging(parsed: DataFrame, path: str, json_line: bool = True) -> None:
 
 
 def _write_routed(staged: DataFrame, path: str) -> None:
-    staged.write.mode("overwrite").partitionBy("route").parquet(path, compression=SINK_CODEC)
+    """One writer per route: the rebalance hashes the staged rows on
+    ``route`` after the scan tasks have parsed and stamped them, and
+    AQE splits a route bigger than its advisory partition size across
+    several writers."""
+    staged.hint("rebalance", "route").write.mode("overwrite").partitionBy("route").parquet(
+        path, compression=SINK_CODEC
+    )
 
 
 def write_fanout(staged: DataFrame, staging_path: str, counts_path: str) -> None:

@@ -4,16 +4,20 @@ Checks the north-rule contracts: per-sink routed-row set equality,
 failure sink carries originals (token-array equality), counts match,
 streaming foreachBatch produces the same routed sets as batch (token
 and rsyslog JSON input alike, with the staging columns built once per
-query), every sink is zstd parquet that pyarrow reads back, and
+query), every sink is zstd parquet that pyarrow reads back, a small
+batch writes one file per route while a large route is split across
+writers, the lineage stamps name the scan that read each row, and
 enrichment joins are broadcast (no shuffle of the fact side).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
 
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -51,6 +55,12 @@ def _assert_zstd_parquet(path: str) -> int:
         assert pq.read_table(f).num_rows == meta.num_rows
         rows += meta.num_rows
     return rows
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet data files of one route directory, as pyarrow lists
+    them (``_SUCCESS`` and hidden files left out)."""
+    return ds.dataset(path, format="parquet").files
 
 
 def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
@@ -93,8 +103,62 @@ def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
     # lineage stamps present on both sinks
     assert "lineage_partition" in success.columns and "lineage_file" in failure.columns
 
+    # one writer per route: a batch this small writes one file to each
+    for route in ("success", "failure"):
+        assert len(_data_files(paths[route])) == 1, route
+
+    # the stamps are taken in the scan tasks, before the route
+    # rebalance: each row names the input file that holds its doc_id
+    # and a partition of the scan that read it
+    scan = df.select("doc_id", F.input_file_name().alias("file"))
+    stamped = staging.select("doc_id", "lineage_file", "lineage_partition").join(scan, "doc_id")
+    assert stamped.count() == N
+    assert stamped.filter(F.col("lineage_file") != F.col("file")).count() == 0
+    n_scan = df.rdd.getNumPartitions()
+    assert n_scan > 1
+    parts = {r[0] for r in staging.select("lineage_partition").distinct().collect()}
+    assert parts == set(range(n_scan))
+
     # success rows all have a parser + payload in the right family column
     assert success.filter(F.col("parser").isNull()).count() == 0
+
+
+def test_large_route_splits_across_writers(spark, corpus_dir, tmp_path):
+    """A route bigger than AQE's advisory partition size is split
+    across writers, never written by a single task; the routed row
+    sets still partition the input and counts still match them."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "4k")
+    try:
+        df = spark.read.parquet(corpus_dir)
+        paths = sinks.run_batch(spark, P.normalise_tokens(df), str(tmp_path / "out"))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert len(_data_files(paths["success"])) > 1
+
+    def ids(frame):
+        rows = [r[0] for r in frame.select("doc_id").collect()]
+        assert len(rows) == len(set(rows))
+        return set(rows)
+
+    ok, bad = ids(spark.read.parquet(paths["success"])), ids(spark.read.parquet(paths["failure"]))
+    assert not ok & bad and ok | bad == ids(df)
+    key_cols = ("source", "parser", "parse_ok")
+    counts = {
+        tuple(r[k] for k in key_cols): r["n"]
+        for r in spark.read.parquet(paths["counts"]).collect()
+    }
+    routed = {
+        tuple(r[k] for k in key_cols): r["n"]
+        for r in P.counts(spark.read.parquet(paths["staging"])).collect()
+    }
+    assert counts == routed
+    assert sum(n for (_, _, o), n in counts.items() if o) == len(ok)
+    assert sum(n for (_, _, o), n in counts.items() if not o) == len(bad)
 
 
 @pytest.fixture(scope="module")
@@ -117,6 +181,12 @@ def test_streaming_matches_batch(spark, corpus_dir, stream_out):
     stream_ok = {r["doc_id"] for r in success.select("doc_id").collect()}
     assert batch_ok == stream_ok
     assert failure.count() == N - len(batch_ok)
+
+    # each micro-batch writes one file per route, as a small batch does
+    routes = glob.glob(os.path.join(out, "staging", "batch_id=*", "route=*"))
+    assert routes
+    for route in routes:
+        assert len(_data_files(route)) == 1, route
 
     # summed batch counts == batch counts (running-counter semantics)
     summed = {

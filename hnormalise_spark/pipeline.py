@@ -186,8 +186,11 @@ def _envelope_stage(df: DataFrame, line_col: str) -> DataFrame:
 def _envelope_tail(df: DataFrame, env_ok: Column, fields: list[str]) -> DataFrame:
     """Shared end of both envelope parses: the RFC3339 ``timereported``,
     ``_env_ok`` = ``env_ok`` and a valid timestamp, the payload family,
-    and every envelope field in ``fields`` blanked on failure (a failed
-    row keeps only the original bytes: Normalised = Original)."""
+    and every envelope field in ``fields`` blanked where the envelope
+    failed. A row whose envelope parsed but whose family prefix or body
+    failed keeps its envelope fields in the parsed frame;
+    ``sinks.staging_frame`` drops them, so a failure sink row keeps
+    only the original input (Normalised = Original)."""
     ts = F.when(
         F.col("timereported_raw").rlike(RE_RFC3339),
         F.col("timereported_raw").cast("timestamp"),

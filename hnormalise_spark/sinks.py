@@ -26,8 +26,12 @@ single task at scale. The counts job reads the few files this leaves.
 
 Success rows keep the typed payload structs and (optionally) the
 reference-shaped JSON line; failure rows carry the ORIGINAL input
-untouched (HNormalise.hs:69-73) — token-array equality is preserved
-because we never rewrite `tokens`/`raw`.
+untouched and nothing of the parse (HNormalise.hs:69-73): ``tokens``
+is the input's own array, so token-array equality holds for any
+codepoint, and ``raw`` is kept only where the input was a text line.
+Envelope fields a body-failed row did parse are nulled here, so a
+failed line is written once, not as its array, its text and its
+``msg`` (``staging_frame`` has the keep-set).
 
 On disk every sink is parquet with zstd pages (``SINK_CODEC``, the
 library's default level), not Spark's default snappy: the bytes
@@ -42,11 +46,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hnormalise_spark import jsonout
 from hnormalise_spark.pipeline import counts as _counts
+from hnormalise_spark.tokenizer import retokenize_col
 
 SINK_CODEC = "zstd"
 
@@ -104,6 +109,11 @@ def write_fanout(staged: DataFrame, staging_path: str, counts_path: str) -> None
     )
 
 
+# kept on every row of both routes: the line's identity, its route
+# and its lineage stamps
+ROW_KEYS = ("doc_id", "source", "parse_ok", "lineage_partition", "lineage_file")
+
+
 def staging_frame(
     parsed: DataFrame, json_line: bool = True,
     fields: list[tuple[str, str]] | None = None,
@@ -112,34 +122,41 @@ def staging_frame(
     ``fields`` is the config's output projection for the JSON line
     (``jsonout.encode_normalised``).
 
-    The original bytes (tokens/raw) are kept only on FAILURE rows — the
-    success contract never includes them, and at 10^12-row scale they
-    are the bulk of the write volume (~90% of rows parse)."""
+    Beyond ``ROW_KEYS`` the two routes keep disjoint columns, so a line
+    is written once. A failure row keeps only its input
+    (HNormalise.hs:69-73): ``tokens``, ``n_tok`` and, where no token
+    array came in (text and %jsonmesg% lines), ``raw``, the line itself.
+    On token input ``raw`` is only the array decoded, so it stays null.
+    A success row keeps everything else: the envelope fields, payload
+    structs, routing and enrichment columns and the JSON line. The
+    staged schema is one for both routes, batch and stream."""
     out = with_lineage(parsed) if "lineage_partition" not in parsed.columns else parsed
     if json_line:
-        out = out.withColumn(
-            "json", F.when(F.col("parse_ok"), jsonout.encode_normalised(fields))
-        )
-    failed = ~F.col("parse_ok")
-    for c in ("raw", "n_tok"):
-        if c in out.columns:
-            out = out.withColumn(c, F.when(failed, F.col(c)))
-    if "tokens" in out.columns or "raw" in out.columns:
-        # the input's own array (normalise_tokens carries it); raw-text
-        # input never had one, so derive it from the line. Last data
-        # column either way, so both inputs stage one column order.
-        from hnormalise_spark.tokenizer import retokenize_col
+        out = out.withColumn("json", jsonout.encode_normalised(fields))
+    if "tokens" in out.columns:
+        # the input's own array (normalise_tokens carries it)
+        failure_only = {"tokens": F.col("tokens"), "raw": F.lit(None).cast("string")}
+    else:
+        # text input never had an array, so derive it from the line
+        failure_only = {"tokens": retokenize_col("raw"), "raw": F.col("raw")}
+    if "n_tok" in out.columns:
+        failure_only["n_tok"] = F.col("n_tok")
+    ok = F.col("parse_ok")
 
-        tokens = F.col("tokens") if "tokens" in out.columns else retokenize_col("raw")
-        out = out.select(
-            *[c for c in out.columns if c != "tokens"],
-            F.when(failed, tokens).alias("tokens"),
-        )
-    # Partition directories by route so the sink scans are pruned; keep
-    # parse_ok itself as a data column (partition values read back as
-    # strings otherwise).
-    return out.withColumn(
-        "route", F.when(F.col("parse_ok"), "success").otherwise("failure")
+    def staged(c: str) -> Column:
+        if c in ROW_KEYS:
+            return F.col(c)
+        if c in failure_only:
+            return F.when(~ok, failure_only[c]).alias(c)
+        return F.when(ok, F.col(c)).alias(c)
+
+    # tokens is the last data column whatever the input, so every input
+    # stages one column order. Partition directories by route so the
+    # sink scans are pruned; keep parse_ok itself as a data column
+    # (partition values read back as strings otherwise).
+    names = [c for c in out.columns if c != "tokens"] + ["tokens"]
+    return out.select(
+        *map(staged, names), F.when(ok, "success").otherwise("failure").alias("route")
     )
 
 

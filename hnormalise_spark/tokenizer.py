@@ -10,10 +10,12 @@ token-array equality invariant checkable end-to-end.
 BMP scalar values: no Python runs per row. An array it cannot decode
 exactly (a negative value, a surrogate, or a value above U+FFFF)
 yields null, so the row fails closed and routes to failure with its
-input tokens. ``retokenize_col`` is its exact inverse for codepoints
-< 256; the token pipeline never needs it (``normalise_tokens`` carries
-the input array to the failure sink), so it serves only raw-text
-input, which has no array of its own, and perfbench's trace.
+input tokens. ``retokenize_col`` maps text to its codepoints, one full
+codepoint per character (``F.ascii`` is not limited to Latin-1), so it
+inverts ``detokenize_col`` on every line that decodes. The token
+pipeline never needs it (``normalise_tokens`` carries the input array
+to the failure sink), so it serves only raw-text input, which has no
+array of its own, and perfbench's trace.
 
 Tokenize (text → codepoints) for the full Unicode range only runs in
 data generation and invariant tests, as a pandas UDF.
@@ -46,11 +48,13 @@ def detokenize_col(tokens: Column | str) -> Column:
 
 
 def retokenize_col(raw: Column | str) -> Column:
-    """JVM-side exact inverse of detokenize_col for codepoints < 256:
-    raw text → codepoint array, one interpreted lambda call per
-    character. Only for input that has no token array (raw text lines
-    routed to the failure sink, perfbench's trace); token input keeps
-    its own array."""
+    """JVM-side text → codepoint array, ``[ord(c) for c in text]``
+    for every codepoint (``F.ascii`` of one character is its full
+    codepoint, past Latin-1 and past the BMP alike), so it is the exact
+    inverse of detokenize_col wherever that decodes. One interpreted
+    lambda call per character. Only for input that has no token array
+    (raw text lines routed to the failure sink, perfbench's trace);
+    token input keeps its own array."""
     col = F.col(raw) if isinstance(raw, str) else raw
     # sequence(1, 0) would DESCEND for empty input — guard to []
     toks = F.transform(

@@ -5,6 +5,11 @@ For a ``sinks.run_batch`` output directory (``staging/route=success``,
 ``staging/route=failure`` and ``counts``) this prints, per sink:
 
 * its data-file count, rows and bytes per row;
+* its leaf columns, and how many of their column chunks are all null
+  (the chunk's null count equals its value count): each such chunk
+  holds no data yet still costs a footer entry and an index entry.
+  Spark writes no statistics for INT96 timestamps, so those chunks
+  are counted apart, as chunks without a null count;
 * its bytes per top-level column: the compressed column chunks (page
   headers and dictionary pages included) of every leaf under it, and
   the codecs those chunks use;
@@ -45,13 +50,16 @@ def data_files(path: str) -> list[str]:
 
 
 def sink_stats(path: str) -> dict:
-    """→ files, rows, bytes, per-column bytes and codecs, footer and index bytes."""
+    """→ files, rows, bytes, leaves, all-null chunks, per-column bytes
+    and codecs, footer and index bytes."""
     out = {"files": 0, "rows": 0, "bytes": 0, "footer": 0, "index": 0,
+           "leaves": 0, "chunks": 0, "null_chunks": 0, "no_null_count": 0,
            "columns": defaultdict(int), "codecs": defaultdict(set)}
     for f in data_files(path):
         meta = pq.ParquetFile(f).metadata
         size = os.path.getsize(f)
         chunks = 0
+        out["leaves"] = max(out["leaves"], meta.num_columns)
         for g in range(meta.num_row_groups):
             rg = meta.row_group(g)
             for c in range(rg.num_columns):
@@ -60,6 +68,12 @@ def sink_stats(path: str) -> dict:
                 out["columns"][top] += col.total_compressed_size
                 out["codecs"][top].add(col.compression)
                 chunks += col.total_compressed_size
+                stats = col.statistics
+                out["chunks"] += 1
+                if stats is None or not stats.has_null_count:
+                    out["no_null_count"] += 1
+                else:
+                    out["null_chunks"] += stats.null_count == col.num_values
         out["files"] += 1
         out["rows"] += meta.num_rows
         out["bytes"] += size
@@ -82,6 +96,10 @@ def main(argv=None) -> None:
             lines += s["rows"]
         per_row = s["bytes"] / s["rows"] if s["rows"] else 0.0
         print(f"{sink}: {s['files']} files, {s['rows']} rows, {s['bytes']} B, {per_row:.1f} B/row")
+        print(
+            f"  {s['leaves']} leaf columns, {s['null_chunks']} of {s['chunks']} chunks all null,"
+            f" {s['no_null_count']} without a null count"
+        )
         cols = sorted(s["columns"].items(), key=lambda kv: -kv[1])
         for name, b in cols[: args.top or None]:
             codecs = ",".join(sorted(s["codecs"][name]))

@@ -1,7 +1,8 @@
 """Routing/sink invariants, enrichment joins, streaming parity.
 
 Checks the north-rule contracts: per-sink routed-row set equality,
-failure sink carries originals (token-array equality), counts match,
+failure sink carries originals (token-array equality) and nothing
+else, on token and text input alike, counts match,
 streaming foreachBatch produces the same routed sets as batch (token
 and rsyslog JSON input alike, with the staging columns built once per
 query), every sink is zstd parquet that pyarrow reads back, a small
@@ -24,7 +25,6 @@ from pyspark.sql import functions as F
 
 from hnormalise_spark import enrich, pipeline as P, sinks, streaming
 from hnormalise_spark.datagen import raw_sequences
-from hnormalise_spark.tokenizer import detokenize_col
 
 N = 2000
 
@@ -63,6 +63,21 @@ def _data_files(path: str) -> list[str]:
     return ds.dataset(path, format="parquet").files
 
 
+# what a failure row keeps: its identity, route and lineage, and its
+# input (the token array, or the text line and the array derived from it)
+TOKEN_KEEP = {"doc_id", "source", "parse_ok", "lineage_partition", "lineage_file", "tokens", "n_tok"}
+TEXT_KEEP = TOKEN_KEEP | {"raw"}
+
+
+def _failure_extras(failure, keep: set[str]) -> dict[str, int]:
+    """Non-null values per column outside ``keep`` in a failure
+    partition (null-safe: a null is counted, never compared)."""
+    extras = [c for c in failure.columns if c not in keep]
+    assert {"msg", "hostname", "lmod", "torque", "json"} <= set(extras)
+    counts = failure.select([F.count(c).alias(c) for c in extras]).first().asDict()
+    return {c: n for c, n in counts.items() if n}
+
+
 def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
     df = spark.read.parquet(corpus_dir)
     parsed = sinks.with_lineage(P.normalise_tokens(df))
@@ -84,10 +99,10 @@ def test_batch_fanout_invariants(spark, corpus_dir, tmp_path):
     orig = df.select("doc_id", F.col("tokens").alias("tokens_in"))
     joined = failure.join(orig, "doc_id")
     assert joined.filter(F.col("tokens") != F.col("tokens_in")).count() == 0
-    # and raw text round-trips from tokens
-    assert (
-        failure.filter(detokenize_col("tokens") != F.col("raw")).count() == 0
-    )
+    # ... and nothing else: every other column, raw (the detokenized
+    # line) included, is null, also on rows whose envelope parsed
+    assert _failure_extras(failure, TOKEN_KEEP) == {}
+    assert parsed.filter(~F.col("parse_ok") & F.col("msg").isNotNull()).count() > 0
 
     # counts equal direct aggregation and sum to N
     assert counts.agg(F.sum("n")).collect()[0][0] == N
@@ -181,6 +196,8 @@ def test_streaming_matches_batch(spark, corpus_dir, stream_out):
     stream_ok = {r["doc_id"] for r in success.select("doc_id").collect()}
     assert batch_ok == stream_ok
     assert failure.count() == N - len(batch_ok)
+    # a micro-batch's failure rows keep only the input, as batch's do
+    assert _failure_extras(failure, TOKEN_KEEP) == {}
 
     # each micro-batch writes one file per route, as a small batch does
     routes = glob.glob(os.path.join(out, "staging", "batch_id=*", "route=*"))
@@ -258,7 +275,8 @@ def test_enrichment_broadcast(spark, corpus_dir):
 def test_read_raw_text_batch_roundtrip(spark, tmp_path):
     """Raw syslog text files (the reference's native input) enter the
     SAME normalise() transform: every fixture line routes exactly as it
-    does from the tokenized parquet path."""
+    does from the tokenized parquet path, and its failure rows keep the
+    line itself."""
     from hnormalise_spark.fixtures import CORPUS
     from hnormalise_spark.streaming import read_raw_text
     from hnormalise_spark import pipeline as P
@@ -285,6 +303,18 @@ def test_read_raw_text_batch_roundtrip(spark, tmp_path):
     # doc_ids are unique and carry the file name
     ids = [r["doc_id"] for r in df.select("doc_id").collect()]
     assert len(set(ids)) == len(lines) and all(i.startswith("syslog.log-") for i in ids)
+
+    # text input has no token array: a failure row keeps the line as
+    # raw and its codepoints as tokens, and nothing of the parse, also
+    # where the envelope parsed
+    failure = spark.read.parquet(sinks.run_batch(spark, parsed, str(tmp_path / "out"))["failure"])
+    rows = failure.select("raw", "tokens").collect()
+    assert sorted(r["raw"] for r in rows) == sorted(
+        l for (_, _, p, l) in CORPUS if l and "\n" not in l and p is None
+    )
+    assert all(r["tokens"] == [ord(c) for c in r["raw"]] for r in rows)
+    assert _failure_extras(failure, TEXT_KEEP) == {}
+    assert parsed.filter(~F.col("parse_ok") & F.col("msg").isNotNull()).count() > 0
 
 
 def test_read_raw_text_stream_routes(spark, tmp_path):

@@ -12,6 +12,9 @@ so a parsed row's ``raw`` must decode back to its input array. The
 same rows are replayed through the codec in plain Python: exact text
 for an array of BMP scalar values, none for anything else (which then
 fails closed).
+
+Text input has no array of its own: ``retokenize_col`` derives one,
+a full codepoint per character, checked against plain Python.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from hypothesis import strategies as st
 
 from hnormalise_spark import pipeline as P, sinks
 from hnormalise_spark.fixtures import CORPUS
+from hnormalise_spark.tokenizer import retokenize_col
+from tests.conftest import col_values
 
 _SCHEMA = "doc_id string, source string, tokens array<int>"
 
@@ -138,3 +143,12 @@ def test_failure_sink_returns_input_tokens(spark, tmp_path):
         for r in spark.read.parquet(paths["counts"]).collect()
     }
     assert counts == dict(routed)
+
+
+def test_retokenize_returns_every_codepoint(spark):
+    """``retokenize_col`` (the array of text input) gives each
+    character's full codepoint, past Latin-1 and past the BMP alike."""
+    texts = ["aé", "ł日", "x\U0001F600", ""]
+    got = col_values(spark, texts, retokenize_col)
+    assert got == [[ord(c) for c in t] for t in texts]
+    assert got[:3] == [[97, 233], [322, 26085], [120, 128512]]
